@@ -1,14 +1,15 @@
 #!/usr/bin/env bash
 # Package xorf_spark for cluster submission:
-#   ./scripts/make_pyfiles.sh
+#   ./scripts/make_pyfiles.sh [out.zip]      (default: dist/xorf_spark.zip)
 #   spark-submit --py-files dist/xorf_spark.zip your_job.py
 set -euo pipefail
+out="$(realpath -m "${1:-$(dirname "$0")/../dist/xorf_spark.zip}")"
 cd "$(dirname "$0")/.."
-mkdir -p dist
-rm -f dist/xorf_spark.zip
-python - <<'EOF'
-import os, zipfile
-with zipfile.ZipFile("dist/xorf_spark.zip", "w", zipfile.ZIP_DEFLATED) as z:
+mkdir -p "$(dirname "$out")"
+rm -f "$out"
+python - "$out" <<'PY'
+import os, sys, zipfile
+with zipfile.ZipFile(sys.argv[1], "w", zipfile.ZIP_DEFLATED) as z:
     for root, _dirs, files in os.walk("xorf_spark"):
         if "__pycache__" in root:
             continue
@@ -16,5 +17,5 @@ with zipfile.ZipFile("dist/xorf_spark.zip", "w", zipfile.ZIP_DEFLATED) as z:
             if f.endswith(".py"):
                 p = os.path.join(root, f)
                 z.write(p, p)
-print("wrote dist/xorf_spark.zip")
-EOF
+print(f"wrote {sys.argv[1]}")
+PY

@@ -96,24 +96,61 @@ def test_merge_associativity(spark, token_df):
     assert t16.contains_np(fresh).mean() < 0.01
 
 
-def test_filter_semi_join_equals_exact(spark, token_df):
+def _probe_with_null_keys(spark, token_df):
     probe = token_df.limit(2000).select("doc_id", "tokens")
+    nulls = spark.createDataFrame([("null-1", None), ("null-2", None)],
+                                  probe.schema)
+    return probe.unionByName(nulls)
+
+
+def test_filter_semi_join_equals_exact(spark, token_df):
+    probe = _probe_with_null_keys(spark, token_df)
     build = token_df.where(F.col("source") == "books").select("tokens")
-    got = D.filter_semi_join(probe, build, "tokens", "tokens").count()
+    got = [r["doc_id"] for r in D.filter_semi_join(
+        probe, build, "tokens", "tokens").select("doc_id").collect()]
     want = probe.join(build.distinct(),
                       on=probe["tokens"] == build["tokens"],
                       how="left_semi").count()
-    assert got == want
+    assert len(got) == want
+    # NULL probe keys never match (checked in python, not by a predicate
+    # that could be pushed below the probe)
+    assert not {"null-1", "null-2"} & set(got)
 
 
-def test_filter_anti_join_equals_exact(spark, token_df):
-    probe = token_df.limit(2000).select("doc_id", "tokens")
+def test_filter_anti_join_equals_exact(spark, token_df, monkeypatch):
+    probe = _probe_with_null_keys(spark, token_df)
     build = token_df.where(F.col("source") == "books").select("tokens")
-    got = D.filter_anti_join(probe, build, "tokens", "tokens").count()
     want = probe.join(build.distinct(),
                       on=probe["tokens"] == build["tokens"],
                       how="left_anti").count()
-    assert got == want
+    # the single broadcast left_anti, then the shuffled-backstop union
+    for max_keys in (D.BROADCAST_JOIN_MAX_KEYS, 0):
+        monkeypatch.setattr(D, "BROADCAST_JOIN_MAX_KEYS", max_keys)
+        got = [r["doc_id"] for r in D.filter_anti_join(
+            probe, build, "tokens", "tokens").select("doc_id").collect()]
+        assert len(got) == want
+        assert {"null-1", "null-2"} <= set(got)  # NULL keys survive
+
+
+def test_table_cache_bounded_in_one_worker(spark, monkeypatch):
+    """A python worker outlives tasks: probing many table generations in
+    one process keeps at most ``_TABLE_CACHE_MAX`` tables cached, on both
+    the broadcast and the mmap path (the UDFs' python bodies run here,
+    in-process, as a reused worker would run them)."""
+    from collections import OrderedDict
+
+    monkeypatch.setattr(D, "_TABLE_CACHE", OrderedDict())
+    keys = spark.range(3000).select(F.xxhash64("id").alias("key"))
+    member = keys.toPandas()["key"]  # int64, as the worker receives it
+    shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=2).cache()
+    for via_files in (False, True):
+        for _ in range(D._TABLE_CACHE_MAX + 3):
+            table = D.FilterTable.from_df(shard_df, n_shards=2)
+            probe = table.contains_udf(spark, via_files=via_files).raw.func
+            assert probe(member).all()
+            assert probe(member).all()  # served from the cache
+            assert 0 < len(D._TABLE_CACHE) <= D._TABLE_CACHE_MAX
+    shard_df.unpersist()
 
 
 def test_inline_semijoin_shards_by_default(spark, token_df, monkeypatch):

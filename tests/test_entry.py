@@ -61,9 +61,9 @@ def test_py_files_packaged_boundary(tmp_path):
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    subprocess.run(["bash", f"{repo}/scripts/make_pyfiles.sh"], cwd=repo,
-                   check=True, capture_output=True)
-    zip_path = f"{repo}/dist/xorf_spark.zip"
+    zip_path = str(tmp_path / "xorf_spark.zip")  # keeps dist/ untouched
+    subprocess.run(["bash", f"{repo}/scripts/make_pyfiles.sh", zip_path],
+                   cwd=repo, check=True, capture_output=True)
     prog = """
 import sys
 zip_path = sys.argv[1]

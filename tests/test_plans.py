@@ -336,3 +336,70 @@ def test_bucketed_join_mismatch_raises(spark, tmp_path):
             bucketed_join(bl, br, "k", require_shuffle_free=True)
     finally:
         drop_bucketed(spark, "t_bkt_m4", "t_bkt_m3")
+
+
+def _python_evals(df) -> tuple[int, int, int]:
+    """Run ``df``; count ``ArrowEvalPython`` nodes in its final executed
+    plan: (whole plan, probe side of its one join, build side)."""
+    agg = df.groupBy().count()
+    agg.collect()
+    todo, joins = [agg._jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif "Join" in cls:
+            joins.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    assert len(joins) == 1, [j.nodeName() for j in joins]
+    final = agg._jdf.queryExecution().executedPlan().toString()
+    probe, build = (joins[0].children().apply(i).toString() for i in (0, 1))
+    return (final.split("== Initial Plan ==")[0].count("ArrowEvalPython"),
+            probe.count("ArrowEvalPython"), build.count("ArrowEvalPython"))
+
+
+def _join_inputs(spark):
+    build = spark.range(0, 20_000, 3).select(F.col("id").alias("bk"))
+    probe = spark.range(30_000).select(F.col("id").alias("pk"))
+    table = D.FilterTable.from_df(D.build_filter_df(
+        D.doc_keys(build, "bk"), kind="bfuse8", n_shards=2), n_shards=2)
+    return probe, build, table
+
+
+@pytest.mark.parametrize("via_files", [False, True],
+                         ids=["broadcast", "mmap"])
+@pytest.mark.parametrize("join", ["semi", "anti"])
+def test_filter_join_one_probe_eval_none_on_build(spark, monkeypatch, join,
+                                                  via_files):
+    """The filter runs once per probe row: one ArrowEvalPython in the
+    executed plan, on the probe side of the backstop join, and none on
+    the build side (Catalyst must not copy the probe filter across the
+    join equality). Both UDF distribution paths."""
+    contains_udf = D.FilterTable.contains_udf
+    monkeypatch.setattr(
+        D.FilterTable, "contains_udf",
+        lambda self, spark, via_files=None, _f=via_files:
+            contains_udf(self, spark, via_files=_f))
+    probe, build, table = _join_inputs(spark)
+    fn = D.filter_semi_join if join == "semi" else D.filter_anti_join
+    df = fn(probe, build, "pk", "bk", table=table)
+    assert _python_evals(df) == (1, 1, 0)
+    assert bool(table._shipped) == via_files  # the mmap path really ran
+    n_member = len(range(0, 20_000, 3))
+    assert df.count() == (n_member if join == "semi" else 30_000 - n_member)
+
+
+def test_filter_anti_join_shuffled_backstop_evals(spark, monkeypatch):
+    """Above BROADCAST_JOIN_MAX_KEYS the anti-join keeps the union shape
+    (rejected rows skip the backstop shuffle): the filter runs twice per
+    probe row, once per union branch, and never on the build side."""
+    monkeypatch.setattr(D, "BROADCAST_JOIN_MAX_KEYS", 0)
+    probe, build, table = _join_inputs(spark)
+    df = D.filter_anti_join(probe, build, "pk", "bk", table=table)
+    assert _python_evals(df) == (2, 1, 0)
+    assert df.count() == 30_000 - len(range(0, 20_000, 3))
+

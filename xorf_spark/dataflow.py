@@ -24,7 +24,9 @@ here Spark-first (SURVEY.md §4.2):
 from __future__ import annotations
 
 import math
+import re
 import time
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -102,18 +104,29 @@ _SHIPPED: set[str] = set()
 #: Spark's default (64 MiB): batches stay bounded by
 #: ``arrow.maxRecordsPerBatch`` (rows × row-width, ≤8 MiB for key feeds;
 #: every declared query's rows are ≤ a few KiB so no boundary moves), and
-#: an EXPLICIT user-set byte cap is always respected.
+#: an explicit user-set byte cap is respected (see ``_tune_arrow_feed``).
 _ARROW_MAX_BYTES_KEY = "spark.sql.execution.arrow.maxBytesPerBatch"
-_ARROW_MAX_BYTES_DEFAULT = "67108864b"          # Spark 4.1 default, 64 MiB
+_ARROW_MAX_BYTES_DEFAULT = 64 << 20             # Spark 4.1 default, 64 MiB
 _ARROW_MAX_BYTES_SENTINEL = str((1 << 31) - 1)  # Int.MaxValue: check skipped
+_SIZE_SHIFT = dict(zip("kmgtp", range(10, 60, 10)))
+
+
+def _byte_count(size: str) -> int | None:
+    """Bytes in a Spark size string ("64m", "64MB", "67108864b", "67108864");
+    None if it does not parse."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", size.strip().lower())
+    return int(m[1]) << _SIZE_SHIFT.get(m[2], 0) if m else None
 
 
 def _tune_arrow_feed(spark: SparkSession) -> None:
+    """Pin the byte-cap sentinel when the conf holds the default byte count,
+    in any spelling. A cap the user set explicitly to the default value
+    cannot be told apart from the default, and is pinned too."""
     try:
         current = spark.conf.get(_ARROW_MAX_BYTES_KEY)
     except Exception:  # pre-4.x Spark without the conf: nothing to tune
         return
-    if current == _ARROW_MAX_BYTES_DEFAULT:
+    if _byte_count(current) == _ARROW_MAX_BYTES_DEFAULT:
         spark.conf.set(_ARROW_MAX_BYTES_KEY, _ARROW_MAX_BYTES_SENTINEL)
 
 
@@ -865,8 +878,9 @@ class FilterTable:
     def _fn(self, sid: int):
         fn = self._fns.get(sid)
         if fn is None and sid in self.rows:
-            fn = _filter_from_row(self.rows[sid])
-            self._fns[sid] = fn
+            row = self.rows[sid]  # a shipped meta row is mmapped on first use
+            fn = self._fns[sid] = _filter_from_row(
+                _row_from_meta(row) if "__file" in row else row)
         return fn
 
     @property
@@ -929,11 +943,8 @@ class FilterTable:
 
             @pandas_udf("boolean")
             def _contains(keys: pd.Series) -> pd.Series:
-                table = _TABLE_CACHE.get(cache_tag)
-                if table is None:
-                    rows, n_shards = bc.value
-                    table = FilterTable(rows, n_shards)
-                    _TABLE_CACHE[cache_tag] = table
+                table = _cached_table(
+                    cache_tag, lambda: FilterTable(*bc.value))
                 return _probe_null_masked(table, keys)
 
             return null_safe_udf(_contains, "boolean")
@@ -943,13 +954,7 @@ class FilterTable:
 
         @pandas_udf("boolean")
         def _contains_mmap(keys: pd.Series) -> pd.Series:
-            table = _TABLE_CACHE.get(tag)
-            if table is None:
-                meta_rows, n_shards = bc_meta.value
-                table = FilterTable(
-                    {sid: _row_from_meta(m) for sid, m in meta_rows.items()},
-                    n_shards)
-                _TABLE_CACHE[tag] = table
+            table = _cached_table(tag, lambda: FilterTable(*bc_meta.value))
             return _probe_null_masked(table, keys)
 
         return null_safe_udf(_contains_mmap, "boolean")
@@ -1039,7 +1044,23 @@ def _row_from_meta(m: dict) -> dict:
     return r
 
 
-_TABLE_CACHE: dict = {}
+#: Probe tables per process by table generation, least recently used first:
+#: bounded, as python workers outlive tasks and would pin every table probed.
+_TABLE_CACHE: OrderedDict[str, FilterTable] = OrderedDict()
+_TABLE_CACHE_MAX = 4
+
+
+def _cached_table(tag: str, make) -> "FilterTable":
+    """``make()``'s table for ``tag``, cached per process. Module-level:
+    a closure pickled by value would carry its own copy of the cache."""
+    table = _TABLE_CACHE.get(tag)
+    if table is None:
+        table = _TABLE_CACHE[tag] = make()
+        while len(_TABLE_CACHE) > _TABLE_CACHE_MAX:
+            _TABLE_CACHE.popitem(last=False)
+    else:
+        _TABLE_CACHE.move_to_end(tag)
+    return table
 
 
 def _probe_null_masked(table: "FilterTable", keys: pd.Series) -> pd.Series:
@@ -1096,13 +1117,22 @@ def _member_flag(probe_df: DataFrame, build_df: DataFrame,
     ``pick_n_shards`` — never the old single-shard funnel — and above
     ``max_collect_fp_bytes`` the shard table stays distributed
     (``probe_cogrouped``), so no driver collect at any size.
+
+    The probe UDF is nondeterministic so Catalyst cannot infer the filter
+    across the join equality onto the build side (all members by
+    construction). So a predicate on the join's output is not pushed below
+    the probe either: filter the probe side before the join.
     """
     spark = probe_df.sparkSession
     probed = doc_keys(probe_df, cols=probe_key, key_col="__xorf_key")
+
+    def flag(t: FilterTable) -> DataFrame:
+        udf = null_safe_udf(t.contains_udf(spark).raw.asNondeterministic(),
+                            "boolean")
+        return probed.withColumn(out_col, udf(F.col("__xorf_key")))
+
     if table is not None:
-        udf = table.contains_udf(spark)
-        return (probed.withColumn(out_col, udf(F.col("__xorf_key"))),
-                table.n_keys)
+        return flag(table), table.n_keys
     keys = doc_keys(build_df.select(build_key), cols=build_key)
     n_build = keys.count()
     n_shards = pick_n_shards(n_build, target_keys_per_shard)
@@ -1113,8 +1143,7 @@ def _member_flag(probe_df: DataFrame, build_df: DataFrame,
         # build plan (which would rebuild every shard just to re-measure)
         table = FilterTable.from_df(shard_df, n_shards=n_shards,
                                     check_size=False)
-        udf = table.contains_udf(spark)  # auto broadcast→mmap above 64MB
-        return (probed.withColumn(out_col, udf(F.col("__xorf_key"))), n_build)
+        return flag(table), n_build  # auto broadcast→mmap above 64MB
     flagged = probe_cogrouped(probed, shard_df, n_shards,
                               key_col="__xorf_key", out_col=out_col)
     return flagged, n_build
@@ -1142,6 +1171,8 @@ def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,
     residual false positives, so the result equals the exact semi-join — at a
     fraction of the shuffled bytes. This is the distributed analog of the
     reference's "filter in front of slower lookup" pattern (src/lib.rs:2-4).
+    NULL probe keys are dropped. The filter runs once per probe row, on the
+    probe side only (see ``_member_flag``).
 
     Inline builds (no ``table``) are scale-safe by default: sharded with
     ``pick_n_shards``, probed via broadcast / addFile-mmap / cogrouped
@@ -1167,21 +1198,28 @@ def filter_anti_join(probe_df: DataFrame, build_df: DataFrame,
                      target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
                      max_collect_fp_bytes: int = MAX_COLLECT_FP_BYTES
                      ) -> DataFrame:
-    """Exact anti-join accelerated by the filter: rows rejected by the filter
-    are *definitely* non-members (zero false negatives) and skip the join;
-    only filter-accepted rows (matches + FPP residue) reach the exact
-    anti-join. Same size-routed inline build as ``filter_semi_join``."""
+    """Exact anti-join accelerated by the filter: rows the filter rejects are
+    *definitely* non-members (zero false negatives), so only filter-accepted
+    rows (matches + FPP residue) can be removed by the exact backstop. NULL
+    probe keys are kept; the inline build is as in ``filter_semi_join``. A
+    broadcast backstop (``n_build <= BROADCAST_JOIN_MAX_KEYS``) is one
+    ``left_anti`` on ``member AND probe_key = bk``: one filter evaluation
+    per probe row. A shuffled backstop unions the rejected rows with the
+    anti-joined candidates so rejected rows skip the shuffle; each union
+    branch reads the flagged probe side: two evaluations per probe row."""
     flagged, n_build = _member_flag(
         probe_df, build_df, probe_key, build_key, kind, table,
         target_keys_per_shard, max_collect_fp_bytes)
-    rejected = (flagged.where(~F.col("__xorf_member"))
+    member = F.col("__xorf_member")
+    on = F.col(probe_key) == F.col("__xorf_bk")
+    build_side = _build_keys_side(build_df, build_key, n_build)
+    if n_build <= BROADCAST_JOIN_MAX_KEYS:
+        return (flagged.join(build_side, on=member & on, how="left_anti")
                 .drop("__xorf_key", "__xorf_member"))
-    candidates = (flagged.where(F.col("__xorf_member"))
-                  .drop("__xorf_key", "__xorf_member"))
-    survivors = candidates.join(_build_keys_side(build_df, build_key, n_build),
-                                on=F.col(probe_key) == F.col("__xorf_bk"),
-                                how="left_anti")
-    return rejected.unionByName(survivors)
+    rejected = flagged.where(~member).drop("__xorf_key", "__xorf_member")
+    candidates = flagged.where(member).drop("__xorf_key", "__xorf_member")
+    return rejected.unionByName(
+        candidates.join(build_side, on=on, how="left_anti"))
 
 
 def probe_cogrouped(probe_df: DataFrame, shard_df: DataFrame,
@@ -1250,8 +1288,8 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
     finding #3).
     """
     spark = probe_df.sparkSession
-    meta, _tag = table.ship_fps(spark)
-    bc_meta = spark.sparkContext.broadcast(meta)
+    meta, tag = table.ship_fps(spark)
+    bc_meta = spark.sparkContext.broadcast((meta, table.n_shards))
     shard_ids = _stage_keys(probe_df, stage_dir, table.n_shards, key_col)
     out_schema = "shard_id int, n_probes long, n_members long"
     if not shard_ids:
@@ -1265,7 +1303,6 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
         import pyarrow as _pa
         import pyarrow.parquet as _pq
 
-        meta_rows = bc_meta.value
         for pdf in batches:
             for sid in pdf["shard_id"]:
                 sid = int(sid)
@@ -1274,21 +1311,13 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
                                      filesystem=fsys)
                 arr = tbl.column("key").combine_chunks().to_numpy(
                     zero_copy_only=False).view(np.uint64)
-                m = meta_rows.get(sid)
-                if m is None:
-                    verdict = np.zeros(arr.size, dtype=bool)
-                else:
-                    # probe-fn cache keyed by the shipped file name
-                    # (unique per table generation + shard): a reused
-                    # python worker re-probing the same shard set skips
-                    # the per-task memmap + descriptor rebuild, so
-                    # repeat probes fault each fingerprint file once
-                    # per worker, not once per call (VERDICT r5 item 6)
-                    fn = _TABLE_CACHE.get(m["__file"])
-                    if fn is None:
-                        fn = _filter_from_row(_row_from_meta(m))
-                        _TABLE_CACHE[m["__file"]] = fn
-                    verdict = fn(arr)
+                # cached per table generation: a reused python worker
+                # re-probing the same shard set skips the per-task memmap
+                # + descriptor rebuild (VERDICT r5 item 6)
+                fn = _cached_table(
+                    tag, lambda: FilterTable(*bc_meta.value))._fn(sid)
+                verdict = (fn(arr) if fn is not None
+                           else np.zeros(arr.size, dtype=bool))
                 if members_dir is not None:
                     _commit_members(
                         members_dir, sid,
