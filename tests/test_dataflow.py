@@ -10,6 +10,7 @@ checkpoint-resumable builds with per-shard lineage metrics.
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,7 +124,7 @@ def test_filter_anti_join_equals_exact(spark, token_df, monkeypatch):
     want = probe.join(build.distinct(),
                       on=probe["tokens"] == build["tokens"],
                       how="left_anti").count()
-    # the single broadcast left_anti, then the shuffled-backstop union
+    # one left_anti with a broadcast backstop, then with a shuffled one
     for max_keys in (D.BROADCAST_JOIN_MAX_KEYS, 0):
         monkeypatch.setattr(D, "BROADCAST_JOIN_MAX_KEYS", max_keys)
         got = [r["doc_id"] for r in D.filter_anti_join(
@@ -134,23 +135,47 @@ def test_filter_anti_join_equals_exact(spark, token_df, monkeypatch):
 
 def test_table_cache_bounded_in_one_worker(spark, monkeypatch):
     """A python worker outlives tasks: probing many table generations in
-    one process keeps at most ``_TABLE_CACHE_MAX`` tables cached, on both
-    the broadcast and the mmap path (the UDFs' python bodies run here,
-    in-process, as a reused worker would run them)."""
+    one process keeps at most ``_TABLE_CACHE_MAX`` mmap-path tables cached,
+    and broadcast tables not at all (they live on their broadcast). The
+    UDFs' python bodies run here, in-process, as a reused worker would run
+    them."""
     from collections import OrderedDict
 
     monkeypatch.setattr(D, "_TABLE_CACHE", OrderedDict())
     keys = spark.range(3000).select(F.xxhash64("id").alias("key"))
     member = keys.toPandas()["key"]  # int64, as the worker receives it
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=2).cache()
-    for via_files in (False, True):
+    for via_files, most in ((False, 0), (True, D._TABLE_CACHE_MAX)):
         for _ in range(D._TABLE_CACHE_MAX + 3):
             table = D.FilterTable.from_df(shard_df, n_shards=2)
             probe = table.contains_udf(spark, via_files=via_files).raw.func
             assert probe(member).all()
             assert probe(member).all()  # served from the cache
-            assert 0 < len(D._TABLE_CACHE) <= D._TABLE_CACHE_MAX
+            assert len(D._TABLE_CACHE) <= most
+    assert len(D._TABLE_CACHE) == most
     shard_df.unpersist()
+
+
+def test_table_cache_outlives_tasks_bounded(spark):
+    """In reused python workers the mmap-path cache persists between tasks
+    (a closure pickled by value would start each task empty) and stays
+    bounded over more table generations than it holds."""
+    keys = spark.range(3000).select(F.xxhash64("id").alias("key"))
+    shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=2).cache()
+    for _ in range(D._TABLE_CACHE_MAX + 2):
+        table = D.FilterTable.from_df(shard_df, n_shards=2)
+        udf = table.contains_udf(spark, via_files=True)
+        assert keys.where(udf(F.col("key"))).count() == 3000
+    shard_df.unpersist()
+
+    @F.pandas_udf("long")
+    def cache_len(x: pd.Series) -> pd.Series:
+        from xorf_spark import dataflow
+        return pd.Series([len(dataflow._TABLE_CACHE)] * len(x))
+
+    sizes = {r[0] for r in spark.range(0, 64, numPartitions=16)
+             .select(cache_len("id")).distinct().collect()}
+    assert 0 < max(sizes) <= D._TABLE_CACHE_MAX, sizes
 
 
 def test_inline_semijoin_shards_by_default(spark, token_df, monkeypatch):

@@ -338,23 +338,29 @@ def test_bucketed_join_mismatch_raises(spark, tmp_path):
         drop_bucketed(spark, "t_bkt_m4", "t_bkt_m3")
 
 
-def _python_evals(df) -> tuple[int, int, int]:
-    """Run ``df``; count ``ArrowEvalPython`` nodes in its final executed
-    plan: (whole plan, probe side of its one join, build side)."""
-    agg = df.groupBy().count()
-    agg.collect()
-    todo, joins = [agg._jdf.queryExecution().executedPlan()], []
+def _executed_nodes(df):
+    """Run ``df``; yield every node of its final executed plan (adaptive
+    and query-stage wrappers unwrapped)."""
+    df.collect()
+    todo = [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
+        yield node
         cls = node.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
             todo.append(node.executedPlan())
         elif cls.endswith("QueryStageExec"):
             todo.append(node.plan())
-        elif "Join" in cls:
-            joins.append(node)
         kids = node.children()
         todo.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _python_evals(df) -> tuple[int, int, int]:
+    """Run ``df``; count ``ArrowEvalPython`` nodes in its final executed
+    plan: (whole plan, probe side of its one join, build side)."""
+    agg = df.groupBy().count()
+    joins = [n for n in _executed_nodes(agg)
+             if "Join" in n.getClass().getSimpleName()]
     assert len(joins) == 1, [j.nodeName() for j in joins]
     final = agg._jdf.queryExecution().executedPlan().toString()
     probe, build = (joins[0].children().apply(i).toString() for i in (0, 1))
@@ -393,13 +399,32 @@ def test_filter_join_one_probe_eval_none_on_build(spark, monkeypatch, join,
     assert df.count() == (n_member if join == "semi" else 30_000 - n_member)
 
 
-def test_filter_anti_join_shuffled_backstop_evals(spark, monkeypatch):
-    """Above BROADCAST_JOIN_MAX_KEYS the anti-join keeps the union shape
-    (rejected rows skip the backstop shuffle): the filter runs twice per
-    probe row, once per union branch, and never on the build side."""
+def test_filter_anti_join_shuffled_backstop_one_eval(spark, monkeypatch):
+    """Above BROADCAST_JOIN_MAX_KEYS the anti-join is the same single
+    ``left_anti``, shuffled: the filter still runs once per probe row, and
+    never on the build side."""
     monkeypatch.setattr(D, "BROADCAST_JOIN_MAX_KEYS", 0)
     probe, build, table = _join_inputs(spark)
     df = D.filter_anti_join(probe, build, "pk", "bk", table=table)
-    assert _python_evals(df) == (2, 1, 0)
+    assert _python_evals(df) == (1, 1, 0)
     assert df.count() == 30_000 - len(range(0, 20_000, 3))
 
+
+@pytest.mark.parametrize("join", ["semi", "anti"])
+def test_filter_join_output_predicate_stays_above_probe(spark, join):
+    """The cost of the nondeterministic probe, kept on purpose: a predicate
+    on the join's output is not pushed below the python evaluation, which
+    therefore sees every probe row (the docstrings say to filter the probe
+    side first)."""
+    probe, build, table = _join_inputs(spark)
+    fn = D.filter_semi_join if join == "semi" else D.filter_anti_join
+    df = fn(probe, build, "pk", "bk", table=table).where(F.col("pk") >= 15_000)
+    nodes = list(_executed_nodes(df.groupBy().count()))
+    evals = [n.toString() for n in nodes
+             if n.getClass().getSimpleName() == "ArrowEvalPythonExec"]
+    assert len(evals) == 1
+    assert " >= 15000)" not in evals[0]  # nothing filters below the probe
+    assert any(" >= 15000)" in n.toString() for n in nodes)  # but above it
+    n_member = len(range(15_000, 20_000, 3)) if join == "semi" else \
+        15_000 - len(range(15_000, 20_000, 3))
+    assert df.count() == n_member

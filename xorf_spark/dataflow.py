@@ -933,18 +933,17 @@ class FilterTable:
         if via_files is None:
             via_files = self.total_fingerprint_bytes > (64 << 20)
 
-        import uuid
-
         if not via_files:
             bc = spark.sparkContext.broadcast((self.rows, self.n_shards))
-            # cache key is a per-UDF uuid, NOT id(bc): python ids are reused
-            # after GC, and a collision would silently probe the wrong filter
-            cache_tag = uuid.uuid4().hex
 
             @pandas_udf("boolean")
             def _contains(keys: pd.Series) -> pd.Series:
-                table = _cached_table(
-                    cache_tag, lambda: FilterTable(*bc.value))
+                # cached on the worker's broadcast object, which the worker
+                # drops when the JVM drops the broadcast: the table lives
+                # across tasks exactly as long as its fingerprint bytes do
+                table = getattr(bc, "_xorf_table", None)
+                if table is None:
+                    table = bc._xorf_table = FilterTable(*bc.value)
                 return _probe_null_masked(table, keys)
 
             return null_safe_udf(_contains, "boolean")
@@ -1044,8 +1043,9 @@ def _row_from_meta(m: dict) -> dict:
     return r
 
 
-#: Probe tables per process by table generation, least recently used first:
-#: bounded, as python workers outlive tasks and would pin every table probed.
+#: Probe tables over shipped fingerprint files, per process by table
+#: generation, least recently used first: bounded, as python workers outlive
+#: tasks. They hold no fingerprints on the heap (the shards are mmapped).
 _TABLE_CACHE: OrderedDict[str, FilterTable] = OrderedDict()
 _TABLE_CACHE_MAX = 4
 
@@ -1172,7 +1172,9 @@ def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,
     fraction of the shuffled bytes. This is the distributed analog of the
     reference's "filter in front of slower lookup" pattern (src/lib.rs:2-4).
     NULL probe keys are dropped. The filter runs once per probe row, on the
-    probe side only (see ``_member_flag``).
+    probe side only. The probe is nondeterministic (see ``_member_flag``),
+    so a predicate on the result is not pushed below it: filter
+    ``probe_df`` before calling.
 
     Inline builds (no ``table``) are scale-safe by default: sharded with
     ``pick_n_shards``, probed via broadcast / addFile-mmap / cogrouped
@@ -1201,25 +1203,18 @@ def filter_anti_join(probe_df: DataFrame, build_df: DataFrame,
     """Exact anti-join accelerated by the filter: rows the filter rejects are
     *definitely* non-members (zero false negatives), so only filter-accepted
     rows (matches + FPP residue) can be removed by the exact backstop. NULL
-    probe keys are kept; the inline build is as in ``filter_semi_join``. A
-    broadcast backstop (``n_build <= BROADCAST_JOIN_MAX_KEYS``) is one
-    ``left_anti`` on ``member AND probe_key = bk``: one filter evaluation
-    per probe row. A shuffled backstop unions the rejected rows with the
-    anti-joined candidates so rejected rows skip the shuffle; each union
-    branch reads the flagged probe side: two evaluations per probe row."""
+    probe keys are kept; the inline build is as in ``filter_semi_join``.
+    One ``left_anti`` on ``member AND probe_key = bk``, broadcast or
+    shuffled backstop alike: one filter evaluation per probe row, on the
+    probe side only. The probe is nondeterministic, so a predicate on the
+    result is not pushed below it: filter ``probe_df`` before calling."""
     flagged, n_build = _member_flag(
         probe_df, build_df, probe_key, build_key, kind, table,
         target_keys_per_shard, max_collect_fp_bytes)
-    member = F.col("__xorf_member")
-    on = F.col(probe_key) == F.col("__xorf_bk")
-    build_side = _build_keys_side(build_df, build_key, n_build)
-    if n_build <= BROADCAST_JOIN_MAX_KEYS:
-        return (flagged.join(build_side, on=member & on, how="left_anti")
-                .drop("__xorf_key", "__xorf_member"))
-    rejected = flagged.where(~member).drop("__xorf_key", "__xorf_member")
-    candidates = flagged.where(member).drop("__xorf_key", "__xorf_member")
-    return rejected.unionByName(
-        candidates.join(build_side, on=on, how="left_anti"))
+    on = F.col("__xorf_member") & (F.col(probe_key) == F.col("__xorf_bk"))
+    return (flagged.join(_build_keys_side(build_df, build_key, n_build),
+                         on=on, how="left_anti")
+            .drop("__xorf_key", "__xorf_member"))
 
 
 def probe_cogrouped(probe_df: DataFrame, shard_df: DataFrame,
