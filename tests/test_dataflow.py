@@ -405,6 +405,29 @@ def test_staged_build_equals_oneshot(spark, token_df, tmp_path):
     assert staged == one
 
 
+@pytest.mark.parametrize("n", [4, 16, 64])
+def test_one_row_per_task(spark, n):
+    """Staged build/probe/sketch task frames put exactly one row in each
+    partition; a hash repartition of small ints left tasks empty and
+    others holding up to 4 shards."""
+    ids = list(range(n))
+    frame = D._one_row_per_task(spark, shard_id=ids,
+                                path=[f"p{i}" for i in ids])
+    parts = frame.rdd.glom().map(
+        lambda rows: [(r.shard_id, r.path) for r in rows]).collect()
+    assert parts == [[(i, f"p{i}")] for i in ids]
+
+
+def test_staged_build_one_shard_per_task(spark, tmp_path):
+    keys = spark.range(40_000).select(F.xxhash64("id").alias("key"))
+    shards = D.build_filter_df_staged(keys, str(tmp_path / "stage"),
+                                      kind="bfuse8", n_shards=16)
+    per_task = shards.rdd.glom().map(
+        lambda rows: [r.shard_id for r in rows]).collect()
+    assert all(len(t) == 1 for t in per_task), per_task
+    assert sorted(t[0] for t in per_task) == list(range(16))
+
+
 def test_staged_resumable_table(spark, token_df, tmp_path):
     """Checkpoint-resume through the staged path: half-committed table +
     staged resume == clean build, byte-identical shards."""

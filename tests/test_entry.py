@@ -55,7 +55,9 @@ def test_py_files_packaged_boundary(tmp_path):
     zip ALONE (spark-submit --py-files simulation). The subprocess runs
     from a neutral cwd with no repo on sys.path: driver imports from the
     zip, executors receive it via addPyFile, and a sharded build + probe
-    round-trips with zero false negatives."""
+    round-trips with zero false negatives. Afterwards, every reused worker
+    that imported the library has ``zipimporter.invalidate_caches``
+    wrapped (xorf_spark/_zipcache.py; CPython < 3.12 only)."""
     import os
     import subprocess
     import sys
@@ -79,6 +81,23 @@ shards = D.build_filter_df(keys, kind="bfuse8", n_shards=4)
 t = D.FilterTable.from_df(shards, n_shards=4)
 n = t.where_member(keys, "key").count()
 assert n == 20000, n
+
+def report(batches):
+    import os, sys, zipimport
+    import pandas as pd
+    for _ in batches:
+        pass
+    fn = zipimport.zipimporter.invalidate_caches
+    yield pd.DataFrame({"pid": [os.getpid()],
+                        "lib": ["xorf_spark" in sys.modules],
+                        "wrapped": [fn.__module__ == "xorf_spark._zipcache"]})
+
+rows = spark.range(0, 8, 1, 8).mapInPandas(
+    report, "pid long, lib boolean, wrapped boolean").collect()
+if sys.version_info < (3, 12):
+    # reused workers that imported the library skip zip re-reads
+    assert any(r.wrapped for r in rows), rows
+    assert all(r.wrapped == r.lib for r in rows), rows
 print("PYFILES_OK")
 spark.stop()
 """

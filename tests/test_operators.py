@@ -86,6 +86,26 @@ def test_minhash_signatures_arrow_matches_catalyst(spark):
                .first()["minhash"]) == 4
 
 
+def test_minhash_signatures_replace_existing_column(spark):
+    """Both signature paths replace an existing ``out_col`` in place
+    (``withColumn`` semantics) instead of appending a second one."""
+    from xorf_spark.operators.dedup import (_minhash_signatures_expr,
+                                            minhash_signatures)
+
+    rows = [(1, [1, 2, 3, 4], [0]), (2, [5, 6, 7], None)]
+    for typ in ("int", "string"):
+        df = spark.createDataFrame(
+            [(i, [t if typ == "int" else str(t) for t in toks], old)
+             for i, toks, old in rows],
+            f"id int, tokens array<{typ}>, minhash array<long>")
+        a = minhash_signatures(df, num_perm=4, shingle=3)
+        e = _minhash_signatures_expr(df, "tokens", 4, 3, "minhash")
+        assert a.columns == e.columns == ["id", "tokens", "minhash"]
+        got = {r["id"]: r["minhash"] for r in a.collect()}
+        assert got == {r["id"]: r["minhash"] for r in e.collect()}
+        assert all(len(v) == 4 for v in got.values())
+
+
 def test_minhash_signature_properties(spark, token_df):
     sigs = dedup.minhash_signatures(token_df, num_perm=16, shingle=3)
     row = sigs.select("doc_id", "minhash").first()

@@ -8,6 +8,7 @@ plus the surrounding large-scale training-data pipeline operators (dedup,
 similarity search, text analysis, multimodal plumbing).
 """
 
+from ._zipcache import install as _install_zipcache
 from .filters import (  # noqa: F401
     BinaryFuse8,
     BinaryFuse16,
@@ -22,3 +23,5 @@ from .filters import (  # noqa: F401
 )
 
 __version__ = "0.1.0"
+
+_install_zipcache()

@@ -16,7 +16,7 @@ fingerprint array contents may differ from the Rust output (any valid peel
 order yields a valid filter), but every array produced here satisfies the same
 ``contains`` contract and is DMA-interchangeable with the reference.
 
-These kernels are what runs inside ``applyInPandas`` per shard on the Spark
+These kernels are what runs inside ``applyInArrow`` per shard on the Spark
 side — this module itself has no Spark dependency.
 """
 

@@ -12,7 +12,7 @@ here Spark-first (SURVEY.md §4.2):
 - sharding: ``shard_id = key >>> (64 - p)`` — the *hashed* key is uniform, so
   hash-prefix sharding defuses any source/doc-length skew by construction, and
   shards are disjoint key ranges ⇒ filter shards merge associatively (union);
-- build: ``groupBy(shard_id).applyInPandas`` running the vectorized numpy
+- build: ``groupBy(shard_id).applyInArrow`` running the vectorized numpy
   kernel (reference construction, src/prelude/bfuse.rs:99-316) on one Arrow
   batch of deduped keys per shard;
 - probe: broadcast of shard (descriptor, fingerprints) + vectorized pandas UDF
@@ -285,20 +285,6 @@ def _build_shard_arrow_fn(kind: str, uniform_random: bool = True):
     return build_shard
 
 
-def _build_shard_fn(kind: str, uniform_random: bool = True):
-    """applyInPandas fallback for Spark < 4 (pandas group materialization)."""
-    fp_bits = _fp_bits(kind)
-
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        shard_id = int(pdf["shard_id"].iloc[0]) if len(pdf) else 0
-        keys = pdf["key"].to_numpy(np.int64).view(np.uint64)
-        return pd.DataFrame(
-            [_build_shard_row(kind, fp_bits, shard_id, keys, uniform_random, t0)])
-
-    return build_shard
-
-
 def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
                     n_shards: int | None = None, key_col: str = "key",
                     dedup: bool = False,
@@ -309,7 +295,7 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
     ``keys_df`` is any DataFrame with a LongType ``key_col``. The plan is a
     SINGLE shuffle: project → repartition by hash-prefix shard id (explicit
     numPartitions, so AQE cannot coalesce the build stage) →
-    groupBy(shard).applyInPandas(numpy kernel).
+    groupBy(shard).applyInArrow(numpy kernel).
 
     Exact dedup (the reference precondition, src/lib.rs:42-44) is folded into
     the per-shard kernel: duplicate keys hash to the same prefix, so
@@ -329,12 +315,8 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
         n_shards = pick_n_shards(keys.count(), target_keys_per_shard)
     sharded = (keys.withColumn("shard_id", shard_id_col("key", n_shards))
                .repartition(n_shards, "shard_id"))
-    grouped = sharded.groupBy("shard_id")
-    if hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(
-            _build_shard_arrow_fn(kind, uniform_random), SHARD_SCHEMA)
-    return grouped.applyInPandas(
-        _build_shard_fn(kind, uniform_random), SHARD_SCHEMA)
+    return sharded.groupBy("shard_id").applyInArrow(
+        _build_shard_arrow_fn(kind, uniform_random), SHARD_SCHEMA)
 
 
 def _make_batch_dedup():
@@ -526,12 +508,16 @@ def _make_member_committer():
     return commit_members
 
 
-def _shard_tasks(spark: SparkSession, shard_ids: list[int]) -> DataFrame:
-    """One-row-per-shard task frame, repartitioned so every shard id gets
-    its own python task."""
-    return spark.createDataFrame(
-        [(s,) for s in shard_ids],
-        "shard_id int").repartition(len(shard_ids), "shard_id")
+def _one_row_per_task(spark: SparkSession, **columns: list) -> DataFrame:
+    """Task frame whose i-th row (``columns[c][i]`` for each column c) sits
+    alone in partition i, so every row gets its own python task. Built
+    JVM-side from ``range``; ``repartition(n, col)`` hashed small ints
+    unevenly (16 ids into 10 tasks, 64 ids into 37 with up to 4 each)."""
+    n = len(next(iter(columns.values())))
+    idx = F.col("id").cast("int") + 1
+    return spark.range(0, n, 1, n).select(*[
+        F.element_at(F.array(*[F.lit(v) for v in vals]), idx).alias(name)
+        for name, vals in columns.items()])
 
 
 def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
@@ -573,7 +559,7 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
                             pre_dedup=pre_dedup)
     if not shard_ids:
         return spark.createDataFrame([], SHARD_SCHEMA)
-    tasks = _shard_tasks(spark, shard_ids)
+    tasks = _one_row_per_task(spark, shard_id=shard_ids)
 
     _list_shard_files = _make_stage_lister()
 
@@ -1289,7 +1275,7 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
     out_schema = "shard_id int, n_probes long, n_members long"
     if not shard_ids:
         return spark.createDataFrame([], out_schema)
-    tasks = _shard_tasks(spark, shard_ids)
+    tasks = _one_row_per_task(spark, shard_id=shard_ids)
 
     _list_shard_files = _make_stage_lister()
     _commit_members = _make_member_committer()

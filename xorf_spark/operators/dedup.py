@@ -105,12 +105,16 @@ def _minhash_signatures_arrow(df: DataFrame, tokens_col: str,
     Catalyst), then fold the per-permutation re-hash with
     ``minimum.reduceat`` over the per-doc shingle segments. Docs with no
     shingles (shorter than ``shingle``, or a NULL token array) emit the
-    Catalyst-identical all-NULL signature of length ``num_perm``."""
+    Catalyst-identical all-NULL signature of length ``num_perm``. Like
+    ``withColumn``, an existing ``out_col`` is replaced in place."""
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-    out_schema = StructType(
-        df.schema.fields
-        + [StructField(out_col, ArrayType(LongType(), True), True)])
+    fields = list(df.schema.fields)
+    oidx = df.columns.index(out_col) if out_col in df.columns else len(fields)
+    fields[oidx:oidx + 1] = [
+        StructField(out_col, ArrayType(LongType(), True), True)]
+    out_schema = StructType(fields)
+    out_names = out_schema.names
     tidx = df.columns.index(tokens_col)
 
     def fold(batches):
@@ -162,9 +166,9 @@ def _minhash_signatures_arrow(df: DataFrame, tokens_col: str,
                 pa.array(np.arange(0, (d + 1) * num_perm, num_perm,
                                    dtype=np.int32), type=pa.int32()),
                 out_vals)
-            yield pa.RecordBatch.from_arrays(list(b.columns) + [out],
-                                             names=list(b.schema.names)
-                                             + [out_col])
+            cols = list(b.columns)
+            cols[oidx:oidx + 1] = [out]
+            yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
     return df.mapInArrow(fold, out_schema)
 

@@ -211,7 +211,7 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
 
     ``stage_dir`` is a transient spill (shared filesystem or object store
     on a cluster); caller owns cleanup."""
-    from ..dataflow import _make_stage_lister
+    from ..dataflow import _make_stage_lister, _one_row_per_task
 
     _check_kind(kind)
     params = dict(params or {})
@@ -240,9 +240,8 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
         if f.is_file and f.path.endswith(".parquet"))
     if not files:
         return make_sketch(kind, **params)
-    tasks = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(files)],
-        "part_id int, path string").repartition(len(files), "part_id")
+    tasks = _one_row_per_task(spark, part_id=list(range(len(files))),
+                              path=files)
     has_w = weight_col is not None
     keyed = kind in KEYED_KINDS
 
