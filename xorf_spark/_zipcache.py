@@ -26,9 +26,6 @@ import os
 import sys
 import zipimport
 
-#: archive path -> (stat signature, directory) of its last read
-_last_read: dict[str, tuple[tuple[int, int, int], dict]] = {}
-
 
 def _signature(path: str) -> tuple[int, int, int] | None:
     try:
@@ -45,18 +42,20 @@ def install() -> None:
             cls.invalidate_caches.__module__ == __name__:
         return
     reread = cls.invalidate_caches
+    # archive path -> (stat signature, directory) of its last read
+    last_read: dict[str, tuple[tuple[int, int, int], dict]] = {}
 
     def invalidate_caches(self):
         # stat BEFORE reading: a change racing the read leaves an old
         # signature on the new directory, which costs one more read later
         sig = _signature(self.archive)
-        last = _last_read.get(self.archive)
+        last = last_read.get(self.archive)
         if sig is not None and last is not None and last[0] == sig:
             self._files = last[1]
             return
         reread(self)
         if sig is not None:
-            _last_read[self.archive] = (sig, self._files)
+            last_read[self.archive] = (sig, self._files)
 
     invalidate_caches.__doc__ = reread.__doc__
     cls.invalidate_caches = invalidate_caches
