@@ -57,5 +57,4 @@ def install() -> None:
         if sig is not None:
             last_read[self.archive] = (sig, self._files)
 
-    invalidate_caches.__doc__ = reread.__doc__
     cls.invalidate_caches = invalidate_caches

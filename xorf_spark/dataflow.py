@@ -515,7 +515,7 @@ def _one_row_per_task(spark: SparkSession, **columns: list) -> DataFrame:
     unevenly (16 ids into 10 tasks, 64 ids into 37 with up to 4 each)."""
     n = len(next(iter(columns.values())))
     idx = F.col("id").cast("int") + 1
-    return spark.range(0, n, 1, n).select(*[
+    return spark.range(n, numPartitions=n).select(*[
         F.element_at(F.array(*[F.lit(v) for v in vals]), idx).alias(name)
         for name, vals in columns.items()])
 
