@@ -11,6 +11,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,17 +144,77 @@ def test_table_cache_bounded_in_one_worker(spark, monkeypatch):
 
     monkeypatch.setattr(D, "_TABLE_CACHE", OrderedDict())
     keys = spark.range(3000).select(F.xxhash64("id").alias("key"))
-    member = keys.toPandas()["key"]  # int64, as the worker receives it
+    # an int64 Arrow array, as the worker receives it
+    member = pa.array(keys.toPandas()["key"], pa.int64())
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=2).cache()
     for via_files, most in ((False, 0), (True, D._TABLE_CACHE_MAX)):
         for _ in range(D._TABLE_CACHE_MAX + 3):
             table = D.FilterTable.from_df(shard_df, n_shards=2)
-            probe = table.contains_udf(spark, via_files=via_files).raw.func
+            udf = table.contains_udf(spark, via_files=via_files).func
+
+            def probe(k):
+                return udf(k).to_numpy(zero_copy_only=False)
+
             assert probe(member).all()
             assert probe(member).all()  # served from the cache
             assert len(D._TABLE_CACHE) <= most
     assert len(D._TABLE_CACHE) == most
     shard_df.unpersist()
+
+
+def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark):
+    """The keyed UDF bodies (``.func``), called in-process on one int64
+    Arrow batch holding NULLs and keys above 2**53: each verdict equals the
+    kernel's on the exact key, and NULL keys give NULL. ``to_numpy`` of a
+    null-bearing int64 array returns float64, which rounds such keys and
+    turns members into false negatives; this pins that trap. No Spark job
+    runs: the filter shards and sketches are built here."""
+    import time
+
+    from xorf_spark.sketches import bloom_contains_udf, cms_estimate_udf
+    from xorf_spark.sketches.kernels import Bloom, CountMin
+
+    rng = np.random.default_rng(11)
+
+    def big_keys(n):  # |key| >= 2**60, both signs: both shards
+        mag = rng.integers(1 << 60, 1 << 63, n, dtype=np.int64)
+        return (mag * rng.choice([-1, 1], n)).view(np.uint64)
+
+    members, strangers = big_keys(4000), big_keys(4000)
+    rows = {}
+    for sid in (0, 1):
+        mine = members[(members >> np.uint64(63)) == sid]
+        rows[sid] = D._build_shard_row("bfuse8", 8, sid, mine, True,
+                                       time.time())
+    table = D.FilterTable(rows, n_shards=2)
+    bloom = Bloom(n_bits=1 << 18, k=7).add_hashes(members)
+    cms = CountMin(width=1 << 14, depth=5).add_hashes(np.repeat(members, 3))
+
+    keys = np.concatenate([members, strangers]).view(np.int64)
+    rng.shuffle(keys)
+    null = np.zeros(keys.size, dtype=bool)
+    null[::7] = True
+    batch = pa.array(keys, pa.int64(), mask=null)
+    assert (np.abs(keys[~null]) > 2 ** 53).all()
+
+    is_member = np.isin(keys.view(np.uint64), members)[~null]
+    cases = [  # (udf, kernel, what every member's verdict must satisfy)
+        (table.contains_udf(spark, via_files=False), table.contains_np,
+         lambda v: v),
+        (table.contains_udf(spark, via_files=True), table.contains_np,
+         lambda v: v),
+        (bloom_contains_udf(spark, bloom), bloom.contains_hashes,
+         lambda v: v),
+        (cms_estimate_udf(spark, cms), cms.estimate_hashes,
+         lambda v: v >= 3),
+    ]
+    for udf, kernel, member_ok in cases:
+        got = udf.func(batch)
+        assert len(got) == keys.size
+        assert got.is_null().to_pylist() == null.tolist()
+        got = got.drop_null().to_numpy(zero_copy_only=False)
+        np.testing.assert_array_equal(got, kernel(keys[~null]))
+        assert member_ok(got[is_member]).all()  # zero false negatives
 
 
 def test_table_cache_outlives_tasks_bounded(spark):
@@ -297,9 +358,20 @@ def test_shingle_keys(spark, token_df):
 
 def test_cogrouped_probe_matches_broadcast(spark, token_df, built):
     shard_df, table = built
-    keyed = D.doc_keys(token_df).select("key").limit(3000)
+    keyed = (D.doc_keys(token_df).limit(3000)
+             .select("doc_id", F.when(F.xxhash64("doc_id") % 10 == 0, None)
+                     .otherwise(F.col("key")).alias("key")))
     got = D.probe_cogrouped(keyed, shard_df, n_shards=8)
+    # NULL keys are verdicted inside the cogroup: probe_df is scanned once,
+    # with no NULL-row branch unioned back in
+    assert "Union" not in got._jdf.queryExecution().optimizedPlan().toString()
+    # collected and checked in python: a key-null predicate would be
+    # pushed below the probe and hide the NULL rows from it
     rows = got.collect()
+    assert len(rows) == 3000
+    nulls = [r for r in rows if r["key"] is None]
+    assert nulls and all(r["member"] is None for r in nulls)
+    rows = [r for r in rows if r["key"] is not None]
     keys = np.array([r["key"] for r in rows], dtype=np.int64)
     want = table.contains_np(keys)
     np.testing.assert_array_equal(np.array([r["member"] for r in rows]), want)

@@ -15,7 +15,7 @@ here Spark-first (SURVEY.md §4.2):
 - build: ``groupBy(shard_id).applyInArrow`` running the vectorized numpy
   kernel (reference construction, src/prelude/bfuse.rs:99-316) on one Arrow
   batch of deduped keys per shard;
-- probe: broadcast of shard (descriptor, fingerprints) + vectorized pandas UDF
+- probe: broadcast of shard (descriptor, fingerprints) + vectorized Arrow UDF
   (reference contains, src/prelude/bfuse.rs:321-340); for filters too large to
   broadcast, a cogrouped shard-routed probe that never materializes the whole
   filter on one node.
@@ -29,8 +29,8 @@ import time
 from collections import OrderedDict
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -256,6 +256,18 @@ def _build_shard_row(kind: str, fp_bits: int, shard_id: int, keys: np.ndarray,
     }
 
 
+#: Arrow twin of ``SHARD_SCHEMA``, the exact types an Arrow stage returns.
+_PA_SHARD_SCHEMA = pa.schema([
+    ("shard_id", pa.int32()), ("kind", pa.string()),
+    ("seed", pa.int64()), ("block_length", pa.int64()),
+    ("segment_length", pa.int64()), ("segment_length_mask", pa.int64()),
+    ("segment_count_length", pa.int64()), ("fingerprints", pa.binary()),
+    ("n_keys", pa.int64()), ("num_slots", pa.int64()),
+    ("retries", pa.int32()), ("duplicates", pa.int64()),
+    ("peel_rounds", pa.int32()), ("build_secs", pa.float64()),
+])
+
+
 def _build_shard_arrow_fn(kind: str, uniform_random: bool = True):
     """groupBy().applyInArrow kernel: pyarrow → numpy is zero-copy for the
     int64 key column (no pandas materialization — that conversion costs more
@@ -268,26 +280,13 @@ def _build_shard_arrow_fn(kind: str, uniform_random: bool = True):
         keys = col.combine_chunks().to_numpy(zero_copy_only=False).view(np.uint64)
         shard_id = int(table.column("shard_id")[0].as_py()) if table.num_rows else 0
         row = _build_shard_row(kind, fp_bits, shard_id, keys, uniform_random, t0)
-        arrays, names = [], []
-        for field in SHARD_SCHEMA.fields:
-            names.append(field.name)
-            arrays.append([row[field.name]])
-        return pa.table(dict(zip(names, arrays)), schema=pa.schema([
-            ("shard_id", pa.int32()), ("kind", pa.string()),
-            ("seed", pa.int64()), ("block_length", pa.int64()),
-            ("segment_length", pa.int64()), ("segment_length_mask", pa.int64()),
-            ("segment_count_length", pa.int64()), ("fingerprints", pa.binary()),
-            ("n_keys", pa.int64()), ("num_slots", pa.int64()),
-            ("retries", pa.int32()), ("duplicates", pa.int64()),
-            ("peel_rounds", pa.int32()), ("build_secs", pa.float64()),
-        ]))
+        return pa.Table.from_pylist([row], schema=_PA_SHARD_SCHEMA)
 
     return build_shard
 
 
 def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
                     n_shards: int | None = None, key_col: str = "key",
-                    dedup: bool = False,
                     target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
                     uniform_random: bool = True) -> DataFrame:
     """Lazy shard-table DataFrame for a distributed filter build.
@@ -300,17 +299,12 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
     Exact dedup (the reference precondition, src/lib.rs:42-44) is folded into
     the per-shard kernel: duplicate keys hash to the same prefix, so
     per-shard ``np.unique`` equals a global ``distinct()`` — no dedup shuffle.
-    Pass ``dedup=True`` only for extremely duplicate-heavy inputs (e.g. n-gram
-    shingles), where ``distinct()``'s map-side partial aggregate shrinks the
-    shuffle more than the extra exchange costs.
 
     The shuffle key is the *hashed* key prefix — uniform by construction —
     so source/doc-length skew in the input cannot unbalance the build.
     """
     keys = (keys_df.select(F.col(key_col).alias("key"))
             .where(F.col("key").isNotNull()))
-    if dedup:
-        keys = keys.distinct()
     if n_shards is None:
         n_shards = pick_n_shards(keys.count(), target_keys_per_shard)
     sharded = (keys.withColumn("shard_id", shard_id_col("key", n_shards))
@@ -566,9 +560,8 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
     def build_from_files(batches):
         import pyarrow.parquet as _pq
 
-        for pdf in batches:
-            for sid in pdf["shard_id"]:
-                sid = int(sid)
+        for batch in batches:
+            for sid in batch.column("shard_id").to_pylist():
                 files, fsys = _list_shard_files(stage_dir, sid)
                 tbl = _pq.read_table(files, columns=["key"],
                                      filesystem=fsys)
@@ -576,10 +569,10 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
                        .to_numpy(zero_copy_only=False).view(np.uint64))
                 row = _build_shard_row(kind, fp_bits, sid, arr,
                                        uniform_random, time.time())
-                yield pd.DataFrame(
-                    [row], columns=[f.name for f in SHARD_SCHEMA.fields])
+                yield pa.RecordBatch.from_pylist([row],
+                                                 schema=_PA_SHARD_SCHEMA)
 
-    return tasks.mapInPandas(build_from_files, SHARD_SCHEMA)
+    return tasks.mapInArrow(build_from_files, SHARD_SCHEMA)
 
 
 #: Sidecar file stamping a shard table with the KEY DEFINITION it was
@@ -898,11 +891,10 @@ class FilterTable:
         return out
 
     def contains_udf(self, spark: SparkSession, via_files: bool | None = None):
-        """Null-safe membership probe: a callable ``col -> Column`` for
-        WHERE clauses and joins (the raw pandas UDF is on ``.raw``; for
-        SQL strings use ``functions.register_sql_udfs``, which registers
-        a SQL-function wrapper with the same NULL guard — registering the
-        wrapper itself with ``spark.udf.register`` will NOT work).
+        """Membership probe as a scalar ``arrow_udf`` (``long -> boolean``):
+        call it on a column for WHERE clauses and joins, or register it
+        for SQL strings with ``functions.register_sql_udfs``. A NULL key
+        gives a NULL verdict; integer columns narrower than long widen.
 
         Two distribution modes for the fingerprint bytes:
 
@@ -914,35 +906,31 @@ class FilterTable:
           all worker processes on a node share one page-cache copy instead of
           N private heap copies. This is the scale path for multi-GB filters.
         """
-        from pyspark.sql.functions import pandas_udf
-
         if via_files is None:
             via_files = self.total_fingerprint_bytes > (64 << 20)
 
         if not via_files:
             bc = spark.sparkContext.broadcast((self.rows, self.n_shards))
 
-            @pandas_udf("boolean")
-            def _contains(keys: pd.Series) -> pd.Series:
+            def contains(keys: np.ndarray) -> np.ndarray:
                 # cached on the worker's broadcast object, which the worker
                 # drops when the JVM drops the broadcast: the table lives
                 # across tasks exactly as long as its fingerprint bytes do
                 table = getattr(bc, "_xorf_table", None)
                 if table is None:
                     table = bc._xorf_table = FilterTable(*bc.value)
-                return _probe_null_masked(table, keys)
+                return table.contains_np(keys)
 
-            return null_safe_udf(_contains, "boolean")
+            return _arrow_probe_udf(contains, "boolean")
 
         meta, tag = self.ship_fps(spark)
         bc_meta = spark.sparkContext.broadcast((meta, self.n_shards))
 
-        @pandas_udf("boolean")
-        def _contains_mmap(keys: pd.Series) -> pd.Series:
+        def contains_mmap(keys: np.ndarray) -> np.ndarray:
             table = _cached_table(tag, lambda: FilterTable(*bc_meta.value))
-            return _probe_null_masked(table, keys)
+            return table.contains_np(keys)
 
-        return null_safe_udf(_contains_mmap, "boolean")
+        return _arrow_probe_udf(contains_mmap, "boolean")
 
     def where_member(self, df: DataFrame, key_col: str = "key",
                      negate: bool = False) -> DataFrame:
@@ -951,7 +939,7 @@ class FilterTable:
         Zero false negatives ⇒ never drops a true member. NULL keys are
         excluded either way (their verdict is NULL — SQL semantics).
 
-        Implementation note: this intentionally stays on the pandas-UDF
+        Implementation note: this intentionally stays on the scalar-UDF
         expression path (``contains_udf``): Spark's ArrowEvalPython ships
         ONLY the key column to python and a bool back. A ``mapInArrow``
         variant was measured interleaved at 32M probes on local[32] and
@@ -964,32 +952,33 @@ class FilterTable:
         return df.where(~cond if negate else cond)
 
 
-def null_safe_udf(raw_udf, out_type: str, in_type: str = "long"):
-    """Wrap a keyed pandas UDF so nullable long columns NEVER reach python.
+def _apply_null_aware(kernel, arr: pa.Array, in_type: pa.DataType) -> pa.Array:
+    """``kernel`` over the values of ``arr``, with ``arr``'s nulls kept.
 
-    Why this exists: Arrow→pandas hands an int64 batch containing ANY null
-    to the UDF as float64, and float64 cannot represent all 64-bit keys —
-    every key in that batch silently loses low bits, which for a filter
-    probe means FALSE NEGATIVES (the one thing the contract forbids). The
-    returned callable applies the UDF as
-    ``CASE WHEN k IS NULL THEN NULL ELSE raw(coalesce(k, 0)) END`` — the
-    python side always sees a non-nullable int64 batch, and SQL null
-    semantics are applied JVM-side. The underlying pandas UDF stays
-    reachable as ``.raw`` (for ``spark.udf.register``; see
-    functions/registry.py, which registers a SQL-function wrapper with the
-    same guard)."""
-    def call(col):
-        if isinstance(col, str):
-            col = F.col(col)
-        # the cast also widens narrower integer key columns (int32/int16)
-        # JVM-side, so python sees exactly the expected dtype
-        return (F.when(col.isNull(), F.lit(None).cast(out_type))
-                .otherwise(raw_udf(
-                    F.coalesce(col, F.lit(0)).cast(in_type))))
+    ``arr`` is cast to ``in_type`` first: narrower ints widen, and a lossy
+    cast (fractions, out-of-range values) raises. The kernel sees a
+    null-free numpy view of the values — never ``to_numpy`` of a
+    null-bearing array, which returns float64 and silently drops the low
+    bits of every 64-bit key in it (false negatives for a filter probe).
+    Null slots are filled with 0 for the kernel; their results are masked
+    back to NULL."""
+    arr = pc.cast(arr, in_type)
+    if not arr.null_count:
+        return pa.array(kernel(arr.to_numpy()))
+    out = kernel(arr.fill_null(0).to_numpy())
+    return pa.array(out, mask=arr.is_null().to_numpy(zero_copy_only=False))
 
-    call.raw = raw_udf
-    call.out_type = out_type
-    return call
+
+def _arrow_probe_udf(kernel, out_type: str, in_type: pa.DataType = pa.int64()):
+    """Scalar ``arrow_udf`` running ``kernel`` (numpy in, numpy out) on each
+    batch through :func:`_apply_null_aware`: ``f(NULL) IS NULL``, and the
+    kernel only ever sees exact ``in_type`` values."""
+    from pyspark.sql.functions import arrow_udf
+
+    def probe(values: pa.Array) -> pa.Array:
+        return _apply_null_aware(kernel, values, in_type)
+
+    return arrow_udf(probe, out_type)
 
 
 def _ship_fp_files(spark: SparkSession, rows: dict[int, dict]
@@ -1049,27 +1038,6 @@ def _cached_table(tag: str, make) -> "FilterTable":
     return table
 
 
-def _probe_null_masked(table: "FilterTable", keys: pd.Series) -> pd.Series:
-    """SQL null semantics for membership probes: ``contains(NULL) IS NULL``,
-    never key-0's verdict (the old ``na_value=0`` behavior could silently
-    pass NULL-keyed rows through a WHERE clause). Null-free batches (the
-    common case) skip the nullable-BooleanArray conversion entirely — it
-    costs ~40% of probe throughput."""
-    if np.issubdtype(keys.dtype, np.integer):  # non-nullable int column:
-        # no masking needed; narrower ints widen losslessly
-        return pd.Series(table.contains_np(keys.to_numpy(np.int64)))
-    # A nullable long batch reaches pandas as float64, and float64 has
-    # already destroyed the low bits of every 64-bit key in the batch —
-    # probing the rounded keys would return silent FALSE NEGATIVES. The
-    # public UDFs prevent this via null_safe_udf (coalesce JVM-side);
-    # refuse rather than corrupt if a raw UDF meets a nullable column.
-    raise TypeError(
-        f"filter probe received a {keys.dtype} batch: a nullable long "
-        "column loses 64-bit key precision at the Arrow→pandas boundary. "
-        "Probe through the null-safe wrapper returned by contains_udf, "
-        "or filter NULL keys out first.")
-
-
 #: Above this many estimated fingerprint bytes the inline semi/anti-join stops
 #: collecting the shard table to the driver entirely and routes probes through
 #: the cogrouped shard-local path instead (driver memory never sees the
@@ -1113,8 +1081,7 @@ def _member_flag(probe_df: DataFrame, build_df: DataFrame,
     probed = doc_keys(probe_df, cols=probe_key, key_col="__xorf_key")
 
     def flag(t: FilterTable) -> DataFrame:
-        udf = null_safe_udf(t.contains_udf(spark).raw.asNondeterministic(),
-                            "boolean")
+        udf = t.contains_udf(spark).asNondeterministic()
         return probed.withColumn(out_col, udf(F.col("__xorf_key")))
 
     if table is not None:
@@ -1207,37 +1174,34 @@ def probe_cogrouped(probe_df: DataFrame, shard_df: DataFrame,
                     n_shards: int, key_col: str = "key",
                     out_col: str = "member") -> DataFrame:
     """Probe path for filters too large to broadcast: repartition probes by
-    the same hash prefix used at build time and cogroup with the shard table,
-    so each task sees exactly one shard's fingerprints (mmap-scale)."""
-    # NULL keys never enter the python stage: a nullable long batch would
-    # reach pandas as float64 and corrupt every 64-bit key in it (silent
-    # false negatives). They rejoin afterwards with a NULL verdict.
-    null_rows = (probe_df.where(F.col(key_col).isNull())
-                 .withColumn(out_col, F.lit(None).cast("boolean")))
-    nn = probe_df.where(F.col(key_col).isNotNull())
-    probes = nn.withColumn("shard_id", shard_id_col(key_col, n_shards))
+    the same hash prefix used at build time and cogroup (``applyInArrow``)
+    with the shard table, so each task sees exactly one shard's
+    fingerprints (mmap-scale). NULL keys fall into the NULL ``shard_id``
+    group, which no shard row joins, and get a NULL verdict there."""
+    probes = probe_df.withColumn("shard_id", shard_id_col(key_col, n_shards))
     out_schema = StructType(
         probe_df.schema.fields + [StructField(out_col, BooleanType(), True)])
 
-    def probe(pkeys: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-        pkeys = pkeys.drop(columns=["shard_id"])
-        if shard.empty or pkeys.empty:
-            pkeys[out_col] = False
-            return pkeys
-        if not np.issubdtype(pkeys[key_col].dtype, np.integer):
-            raise TypeError(
-                f"cogrouped probe got a {pkeys[key_col].dtype} key batch "
-                "(nullable long → float64 loses 64-bit precision)")
-        fn = _filter_from_row(shard.iloc[0].to_dict())
-        # narrower integer dtypes widen losslessly
-        arr = pkeys[key_col].to_numpy(np.int64).view(np.uint64)
-        pkeys[out_col] = pd.Series(fn(arr), index=pkeys.index)
-        return pkeys
+    def probe(pkeys: pa.Table, shard: pa.Table) -> pa.Table:
+        pkeys = pkeys.drop_columns(["shard_id"])
+        if shard.num_rows:
+            fn = _filter_from_row(shard.slice(0, 1).to_pylist()[0])
+        else:  # a shard with no keys, or the NULL-key group
+            def fn(keys):
+                return np.zeros(keys.size, dtype=bool)
+        verdict = _apply_null_aware(lambda k: fn(k.view(np.uint64)),
+                                    pkeys.column(key_col).combine_chunks(),
+                                    pa.int64())
+        return pkeys.append_column(pa.field(out_col, pa.bool_()), verdict)
 
-    probed = (probes.groupBy("shard_id")
-              .cogroup(shard_df.groupBy("shard_id"))
-              .applyInPandas(probe, out_schema))
-    return probed.unionByName(null_rows)
+    return (probes.groupBy("shard_id")
+            .cogroup(shard_df.groupBy("shard_id"))
+            .applyInArrow(probe, out_schema))
+
+
+_PA_PROBE_COUNTS = pa.schema([("shard_id", pa.int32()),
+                              ("n_probes", pa.int64()),
+                              ("n_members", pa.int64())])
 
 
 def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
@@ -1284,9 +1248,8 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
         import pyarrow as _pa
         import pyarrow.parquet as _pq
 
-        for pdf in batches:
-            for sid in pdf["shard_id"]:
-                sid = int(sid)
+        for batch in batches:
+            for sid in batch.column("shard_id").to_pylist():
                 files, fsys = _list_shard_files(stage_dir, sid)
                 tbl = _pq.read_table(files, columns=["key"],
                                      filesystem=fsys)
@@ -1303,8 +1266,9 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
                     _commit_members(
                         members_dir, sid,
                         _pa.table({"key": arr[verdict].view(np.int64)}))
-                yield pd.DataFrame([{"shard_id": sid,
-                                     "n_probes": int(arr.size),
-                                     "n_members": int(verdict.sum())}])
+                yield _pa.RecordBatch.from_pydict(
+                    {"shard_id": [sid], "n_probes": [int(arr.size)],
+                     "n_members": [int(verdict.sum())]},
+                    schema=_PA_PROBE_COUNTS)
 
-    return tasks.mapInPandas(probe_from_files, out_schema)
+    return tasks.mapInArrow(probe_from_files, out_schema)

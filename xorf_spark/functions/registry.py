@@ -17,32 +17,17 @@ from pyspark.sql import functions as F
 from ..dataflow import FilterTable
 
 
-def _register_null_safe(spark: SparkSession, name: str, wrapper,
-                        in_type: str, out_type: str) -> None:
-    """Register a null-safe keyed UDF for SQL: the raw pandas UDF goes in
-    as ``{name}_raw`` and a SQL function applies the same NULL guard the
-    python wrapper uses (a nullable long batch reaching pandas as float64
-    would corrupt 64-bit keys — see dataflow.null_safe_udf)."""
-    spark.udf.register(f"{name}_raw", wrapper.raw)
-    spark.sql(
-        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(k {in_type}) "
-        f"RETURNS {out_type} RETURN "
-        f"CASE WHEN k IS NULL THEN NULL "
-        f"ELSE {name}_raw(coalesce(k, 0)) END")
-
-
 def register_sql_udfs(spark: SparkSession, table: FilterTable,
                       name: str = "xorf_contains") -> None:
-    """Register the vectorized membership probe as a SQL-callable function
-    (NULL-safe: ``name(NULL)`` is NULL, and null-bearing columns cannot
-    corrupt the probe batch)."""
-    _register_null_safe(spark, name, table.contains_udf(spark),
-                        "BIGINT", "BOOLEAN")
+    """Register the vectorized membership probe (``contains_udf``, an
+    ``arrow_udf``) as a SQL-callable function: ``name(NULL)`` is NULL."""
+    spark.udf.register(name, table.contains_udf(spark))
 
 
 def register_sketch_udfs(spark: SparkSession, bloom=None, cms=None,
                          tdigest=None, prefix: str = "sketch") -> None:
-    """Register sketch probe UDFs as SQL-callable functions:
+    """Register sketch probe UDFs as SQL-callable functions (each maps a
+    NULL input to NULL):
 
         register_sketch_udfs(spark, bloom=bl, cms=cm, tdigest=td)
         spark.sql("SELECT * FROM t WHERE sketch_bloom_contains(xxhash64(k))")
@@ -52,17 +37,13 @@ def register_sketch_udfs(spark: SparkSession, bloom=None, cms=None,
     from ..sketches import bloom_contains_udf, cms_estimate_udf, tdigest_cdf_udf
 
     if bloom is not None:
-        _register_null_safe(spark, f"{prefix}_bloom_contains",
-                            bloom_contains_udf(spark, bloom),
-                            "BIGINT", "BOOLEAN")
+        spark.udf.register(f"{prefix}_bloom_contains",
+                           bloom_contains_udf(spark, bloom))
     if cms is not None:
-        _register_null_safe(spark, f"{prefix}_cms_count",
-                            cms_estimate_udf(spark, cms),
-                            "BIGINT", "BIGINT")
+        spark.udf.register(f"{prefix}_cms_count", cms_estimate_udf(spark, cms))
     if tdigest is not None:
-        _register_null_safe(spark, f"{prefix}_tdigest_cdf",
-                            tdigest_cdf_udf(spark, tdigest),
-                            "DOUBLE", "DOUBLE")
+        spark.udf.register(f"{prefix}_tdigest_cdf",
+                           tdigest_cdf_udf(spark, tdigest))
 
 
 def shingle_starts_sql(arr: str, n: int) -> str:

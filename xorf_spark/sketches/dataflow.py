@@ -7,7 +7,7 @@ stages so the sketch state can be numpy + Arrow):
 1. **partial**: ``mapInArrow`` folds each *input partition* into one sketch —
    zero shuffle, the map-side combine. One output row per non-empty
    partition: ``(part_id, kind, payload, n_rows, build_secs)``.
-2. **merge**: a fan-in tree of ``groupBy(part_id % g).applyInPandas`` merge
+2. **merge**: a fan-in tree of ``groupBy(part_id % g).applyInArrow`` merge
    stages. With 100k input partitions on a 1000-executor cluster the tree is
    2 levels of tiny (KB-MB) payload shuffles; locally it is a single stage.
 3. **final**: the 1-row result is collected and deserialized; or kept as a
@@ -34,6 +34,7 @@ from collections import OrderedDict
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from .kernels import KEYED_KINDS, SKETCH_KINDS, make_sketch, sketch_from_bytes
-from ..dataflow import null_safe_udf
+from ..dataflow import _arrow_probe_udf
 
 #: One row per partial sketch (per input partition, or per bucket in the
 #: resumable path). ``payload`` is the self-describing serialized sketch.
@@ -132,19 +133,17 @@ def partial_sketches(df: DataFrame, col: str, kind: str,
     return proj.mapInArrow(fold, PARTIAL_SCHEMA)
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _merge_group(table: pa.Table) -> pa.Table:
     t0 = time.time()
     sk = None
-    # deterministic merge order (payload bytes for valued sketches depend on
-    # it; keyed sketches are order-independent anyway)
-    pdf = pdf.sort_values("part_id", kind="stable")
-    for payload in pdf["payload"]:
+    for payload in table.column("payload").to_pylist():
         s = sketch_from_bytes(payload)
         sk = s if sk is None else sk.merge(s)
-    row = _partial_row(int(pdf["part_id"].iloc[0]), str(pdf["kind"].iloc[0]),
-                       sk, int(pdf["n_rows"].sum()), t0)
-    row["build_secs"] += float(pdf["build_secs"].max())
-    return pd.DataFrame([row])
+    row = _partial_row(table.column("part_id")[0].as_py(),
+                       table.column("kind")[0].as_py(), sk,
+                       pc.sum(table.column("n_rows")).as_py(), t0)
+    row["build_secs"] += pc.max(table.column("build_secs")).as_py()
+    return pa.Table.from_pylist([row], schema=_PA_PARTIAL)
 
 
 def tree_merge(partials: DataFrame, n_parts: int,
@@ -163,7 +162,7 @@ def tree_merge(partials: DataFrame, n_parts: int,
                   F.pmod(F.col("part_id"), F.lit(n_groups)).cast("int"))
               .repartition(n_groups, "part_id")
               .groupBy("part_id")
-              .applyInPandas(_merge_group, PARTIAL_SCHEMA))
+              .applyInArrow(_merge_group, PARTIAL_SCHEMA))
         n = n_groups
     return df
 
@@ -177,7 +176,7 @@ def sketch_agg(df: DataFrame, col: str, kind: str,
     are collected and merged driver-side — one Spark stage, no shuffle
     (exactly how Spark's own TypedImperativeAggregate finishes on a single
     reducer). Beyond that (100k-partition cluster scans) a fan-in tree of
-    ``applyInPandas`` merge stages keeps every fan-in ≤ ``fanout``.
+    ``applyInArrow`` merge stages keeps every fan-in ≤ ``fanout``.
 
     Returns the deserialized sketch (empty sketch if ``df`` has no rows)."""
     partials = partial_sketches(df, col, kind, params, weight_col)
@@ -249,8 +248,9 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
         import pyarrow.parquet as _pq
         from pyarrow import fs as _pafs2
 
-        for pdf in batches:
-            for pid, path in zip(pdf["part_id"], pdf["path"]):
+        for batch in batches:
+            for pid, path in zip(batch.column("part_id").to_pylist(),
+                                 batch.column("path").to_pylist()):
                 t0 = time.time()
                 fsys2, p2 = _pafs2.FileSystem.from_uri(path)
                 tbl = _pq.read_table(p2, filesystem=fsys2)
@@ -269,10 +269,10 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
                 sk = make_sketch(kind, **params)
                 if arr.size:
                     _feed(sk, kind, arr, w)
-                yield pd.DataFrame(
-                    [_partial_row(int(pid), kind, sk, int(arr.size), t0)])
+                row = _partial_row(pid, kind, sk, int(arr.size), t0)
+                yield pa.RecordBatch.from_pylist([row], schema=_PA_PARTIAL)
 
-    partials = tasks.mapInPandas(fold_files, PARTIAL_SCHEMA)
+    partials = tasks.mapInArrow(fold_files, PARTIAL_SCHEMA)
     if len(files) > driver_merge_threshold:
         partials = tree_merge(partials, len(files), fanout)
     rows = sorted(partials.collect(), key=lambda r: r["part_id"])
@@ -567,7 +567,7 @@ def sketch_from_table(spark: SparkSession, path: str):
 
 
 # ---------------------------------------------------------------------------
-# Probe-side UDFs (broadcast sketch → vectorized pandas UDF)
+# Probe-side UDFs (broadcast sketch → vectorized Arrow UDF)
 # ---------------------------------------------------------------------------
 
 #: Worker-side deserialized-sketch cache. Bounded (LRU): a long-lived
@@ -591,35 +591,17 @@ def _cached(tag: str, bc):
     return sk
 
 
-def _probe_keys(keys: pd.Series) -> np.ndarray:
-    """uint64 view of a probe-key batch. The null-safe wrappers guarantee
-    the batch is non-nullable int64; a float64 arrival means a nullable
-    long column reached pandas directly, where its 64-bit keys have
-    ALREADY lost low bits — refuse rather than return corrupt answers."""
-    if not np.issubdtype(keys.dtype, np.integer):
-        raise TypeError(
-            f"sketch probe received a {keys.dtype} batch: nullable long "
-            "columns lose 64-bit key precision at the Arrow→pandas "
-            "boundary. Probe through the null-safe wrapper these "
-            "factories return, or filter NULL keys first.")
-    return keys.to_numpy(np.int64).view(np.uint64)
-
-
 def cms_estimate_udf(spark: SparkSession, cms):
     """``long key -> long`` estimated count (never under the true count)."""
     import uuid
 
-    from pyspark.sql.functions import pandas_udf
-
     bc = spark.sparkContext.broadcast(cms.to_bytes())
     tag = uuid.uuid4().hex
 
-    @pandas_udf("long")
-    def _est(keys: pd.Series) -> pd.Series:
-        sk = _cached(tag, bc)
-        return pd.Series(sk.estimate_hashes(_probe_keys(keys)))
+    def estimate(keys: np.ndarray) -> np.ndarray:
+        return _cached(tag, bc).estimate_hashes(keys.view(np.uint64))
 
-    return null_safe_udf(_est, "long")
+    return _arrow_probe_udf(estimate, "long")
 
 
 def mg_estimate_udf(spark: SparkSession, mg):
@@ -638,34 +620,23 @@ def tdigest_cdf_udf(spark: SparkSession, td):
     percentiles with a WHERE clause — no global sort, no second pass."""
     import uuid
 
-    from pyspark.sql.functions import pandas_udf
-
     bc = spark.sparkContext.broadcast(td.to_bytes())
     tag = uuid.uuid4().hex
 
-    @pandas_udf("double")
-    def _cdf(vals: pd.Series) -> pd.Series:
-        sk = _cached(tag, bc)
-        return pd.Series(sk.cdf(vals.to_numpy(np.float64)))
+    def cdf(vals: np.ndarray) -> np.ndarray:
+        return _cached(tag, bc).cdf(vals)
 
-    # doubles lose nothing at the pandas boundary (NULL arrives as NaN),
-    # but SQL semantics say f(NULL) IS NULL, not NaN — same wrapper,
-    # double input (the default long cast would truncate fractions)
-    return null_safe_udf(_cdf, "double", in_type="double")
+    return _arrow_probe_udf(cdf, "double", in_type=pa.float64())
 
 
 def bloom_contains_udf(spark: SparkSession, bloom):
     """``long key -> boolean`` membership (zero false negatives)."""
     import uuid
 
-    from pyspark.sql.functions import pandas_udf
-
     bc = spark.sparkContext.broadcast(bloom.to_bytes())
     tag = uuid.uuid4().hex
 
-    @pandas_udf("boolean")
-    def _contains(keys: pd.Series) -> pd.Series:
-        sk = _cached(tag, bc)
-        return pd.Series(sk.contains_hashes(_probe_keys(keys)))
+    def contains(keys: np.ndarray) -> np.ndarray:
+        return _cached(tag, bc).contains_hashes(keys.view(np.uint64))
 
-    return null_safe_udf(_contains, "boolean")
+    return _arrow_probe_udf(contains, "boolean")

@@ -53,8 +53,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dataflow import (FilterTable, _write_keydef, build_filter_table,
-                        shard_id_col)
+from ..dataflow import FilterTable, build_filter_table
 # shared (filesystem, base) resolver + replace-aware rename: all
 # pointer/prune I/O here runs on the DRIVER (foreachBatch callbacks
 # execute driver-side), so no worker needs filesystem credentials
@@ -167,109 +166,11 @@ def compact_key_log(spark: SparkSession, table_path: str) -> int:
     return len(old)
 
 
-#: Per-version sidecar recording the sharding a version was built under —
-#: the guard that makes incremental reuse refuse across n_shards/kind
-#: changes (same shard_id value under a different prefix length covers a
-#: DIFFERENT key range; a coincidental count match there would reuse a
-#: wrong shard and violate zero-false-negatives).
-REFRESH_META_FILE = "_XORF_REFRESH"
-
-
-def _refresh_meta_path(table_path: str, version: str) -> tuple:
-    fsys, base = _fs(table_path)
-    return fsys, f"{base}/{version}/{REFRESH_META_FILE}"
-
-
-def _write_refresh_meta(table_path: str, version: str, n_shards: int,
-                        kind: str) -> None:
-    import json
-
-    fsys, p = _refresh_meta_path(table_path, version)
-    with fsys.open_output_stream(p) as fh:
-        fh.write(json.dumps({"n_shards": int(n_shards),
-                             "kind": kind}).encode())
-
-
-def _read_refresh_meta(table_path: str, version: str) -> dict | None:
-    import json
-
-    from pyarrow import fs as pafs
-
-    fsys, p = _refresh_meta_path(table_path, version)
-    if fsys.get_file_info(p).type == pafs.FileType.NotFound:
-        return None
-    with fsys.open_input_stream(p) as fh:
-        return json.loads(fh.read().decode())
-
-
-def _copy_unchanged_shards(spark: SparkSession, table_path: str,
-                           prev: str, version_dir: str, all_keys: DataFrame,
-                           n_shards: int, kind: str,
-                           key_def: str | None) -> int:
-    """Incremental-rebuild fast path (VERDICT r5 item 5): the key log only
-    GROWS, so a shard whose current distinct key count equals the previous
-    version's ``n_keys`` holds exactly the same key set — its row can be
-    copied instead of rebuilt (builds are deterministic per key set, so
-    the copied row is byte-identical to a rebuild). Shards with new keys
-    are left for the builder, whose resume pass treats the copied shards
-    as done. Returns the number of shards reused; 0 disables the fast
-    path (missing/incompatible sidecar, unreadable prev version, crash
-    replay with a partially-written new version — the full rebuild is
-    always the correct fallback)."""
-    from pyspark.errors import AnalysisException
-
-    import os as _os
-
-    meta = _read_refresh_meta(table_path, prev)
-    if (meta is None or meta.get("n_shards") != n_shards
-            or meta.get("kind") != kind):
-        return 0
-    try:
-        prev_rows = spark.read.parquet(_os.path.join(table_path, prev))
-    except AnalysisException:
-        return 0
-    try:
-        if spark.read.parquet(version_dir).limit(1).take(1):
-            # crash replay of this very version: the builder's own
-            # resume handles partially-built dirs; re-copying here
-            # would append duplicate shard rows
-            return 0
-    except AnalysisException:
-        pass
-    # ONE counting pass decides everything (the caller persists
-    # ``all_keys``, so the builder reuses the same materialization —
-    # without that, each extra action re-ran the global distinct and the
-    # fast path cost more than the rebuild it saved; first A/B round in
-    # BENCH/ROUND6_NOTES.md). Gate: uniform-hashed keys spread g new
-    # distinct keys so the untouched-shard fraction is e^(-g/S) — past
-    # g ≈ 4S (<2% reusable) skip the copy I/O outright.
-    prev_keys = {int(r["shard_id"]): int(r["n_keys"])
-                 for r in prev_rows.select("shard_id", "n_keys").collect()}
-    cnts = {int(r["shard_id"]): int(r["cnt"]) for r in
-            (all_keys
-             .groupBy(shard_id_col("key", n_shards).alias("shard_id"))
-             .agg(F.count(F.lit(1)).alias("cnt")).collect())}
-    growth = sum(cnts.values()) - sum(prev_keys.values())
-    if growth < 0 or growth >= 4 * n_shards:
-        return 0
-    unchanged = [sid for sid, n in prev_keys.items()
-                 if cnts.get(sid) == n]
-    if not unchanged:
-        return 0
-    if key_def is not None:
-        # stamp BEFORE the data append, same order as build_filter_table
-        _write_keydef(version_dir, key_def)
-    (prev_rows.where(F.col("shard_id").isin(unchanged))
-     .write.mode("append").parquet(version_dir))
-    return len(unchanged)
-
-
 def stream_filter_refresh(stream_df: DataFrame, table_path: str,
                           key_col: str = "key", kind: str = "bfuse8",
                           n_shards: int = 16, refresh_every: int = 1,
                           stage_dir: str | None = None,
-                          key_def: str | None = None,
-                          incremental: bool = False):
+                          key_def: str | None = None):
     """``writeStream``-able sink maintaining the ever-seen-keys filter.
 
     Returns a ``DataStreamWriter`` (caller adds ``.option("checkpoint..")``
@@ -287,28 +188,6 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
     rebuilt version is stamped with it, so a crashed rebuild resumed by
     a NEWER deployment with a changed key derivation fails loudly
     instead of mixing key definitions within one version dir.
-
-    ``incremental`` (default False — measured net-negative at bench
-    scale, see below) reuses the previous version's shard rows for
-    shards whose key set is provably unchanged: the key log only grows,
-    so per-shard distinct-count equality with the stored ``n_keys``
-    implies set equality, and builds are deterministic per key set, so
-    the resulting table is byte-identical to a full rebuild (equality
-    pinned in tests/test_filter_refresh.py). Reuse is guarded by a
-    per-version ``_XORF_REFRESH`` sidecar recording (n_shards, kind) —
-    same shard_id under a different prefix length covers a different
-    key range, so a coincidental count match would otherwise reuse a
-    wrong shard — and a low-rate gate (growth < 4×n_shards: uniformly
-    hashed keys leave ~e^(-g/S) of shards untouched, so past that
-    nothing is reusable anyway). WHY it is off by default: the rebuild
-    must still scan the whole key log (global distinct for counts and
-    sizing) and this library's shard kernels are fast, so at 7M keys
-    the full rebuild (2.0-3.4s trigger) beats the incremental path
-    (4.1-6.6s: persist + counting pass + copy + resume bookkeeping)
-    even at 20-key churn — A/B in scripts/ab_incremental_refresh.py,
-    BENCH/ROUND6_NOTES.md. Opt in only where per-shard construction
-    dominates the trigger (much larger shards, wider fingerprints, or
-    expensive storage between the stages).
     """
     keys_path = os.path.join(table_path, "keys")
 
@@ -355,28 +234,12 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
         # across batches, and the builder sizes arrays by RAW row count —
         # without this the filter would grow with total delivered keys
         all_keys = spark.read.parquet(keys_path).distinct()
-        version_dir = os.path.join(table_path, version)
-        use_incr = incremental and prev is not None
-        if use_incr:
-            # one materialization shared by the counting pass AND the
-            # rebuild — without it every extra action re-runs the global
-            # distinct and the fast path costs more than it saves
-            all_keys = all_keys.persist()
-        try:
-            if use_incr:
-                _copy_unchanged_shards(spark, table_path, prev,
-                                       version_dir, all_keys, n_shards,
-                                       kind, key_def)
-            version_stage = (os.path.join(stage_dir, version)
-                             if stage_dir else None)
-            build_filter_table(
-                all_keys, version_dir, kind=kind,
-                n_shards=n_shards, key_col="key", stage_dir=version_stage,
-                key_def=key_def)
-        finally:
-            if use_incr:
-                all_keys.unpersist()
-        _write_refresh_meta(table_path, version, n_shards, kind)
+        version_stage = (os.path.join(stage_dir, version)
+                         if stage_dir else None)
+        build_filter_table(
+            all_keys, os.path.join(table_path, version), kind=kind,
+            n_shards=n_shards, key_col="key", stage_dir=version_stage,
+            key_def=key_def)
         if version_stage is not None:
             sfs, sbase = _fs(version_stage)
             sfs.delete_dir(sbase)

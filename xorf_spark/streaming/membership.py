@@ -5,7 +5,7 @@ once built, src/lib.rs:116-125), which matches the streaming pattern
 "build filter from the historical batch table, apply to the live stream":
 
 - ``stream_membership``   — annotate a stream with a ``member`` column
-  (vectorized pandas-UDF probe of broadcast shards);
+  (vectorized Arrow-UDF probe of broadcast shards);
 - ``stream_dedup_filter`` — keep only stream rows whose key is NOT in the
   filter (dedup against history; zero false negatives ⇒ a key that was
   inserted is never let through; FPP-rate of fresh keys is wrongly dropped —
