@@ -13,6 +13,8 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from xorf_spark import dataflow as D
@@ -672,3 +674,74 @@ def test_where_member_accepts_narrow_int_keys(spark):
                                       .alias("key")),
                           kind="bfuse8", n_shards=1), n_shards=1)
     assert table.where_member(keys, "key").count() == 5_000
+
+
+_INT_KEY_BITS = {"byte": 8, "short": 16, "int": 32, "long": 64}
+
+
+@st.composite
+def _typed_keys(draw):
+    """An integer Spark type and distinct values spanning its whole range,
+    negatives included (they widen to the top shards)."""
+    name = draw(st.sampled_from(sorted(_INT_KEY_BITS)))
+    half = 1 << (_INT_KEY_BITS[name] - 1)
+    vals = draw(st.lists(st.integers(-half, half - 1), min_size=1,
+                         max_size=300, unique=True))
+    return name, vals
+
+
+@settings(max_examples=8, deadline=None)
+@given(typed=_typed_keys())
+def test_build_key_types_widen_to_long(spark, tmp_path_factory, typed):
+    """byte, short and int key columns build the filter of the same keys
+    as long: the same shard placement and fingerprint bytes, one-shot and
+    staged, and zero false negatives. A narrower Arrow buffer viewed as
+    uint64 would pair keys into one."""
+    name, vals = typed
+
+    def shards(rows):
+        return {r["shard_id"]: (r["n_keys"], r["seed"],
+                                bytes(r["fingerprints"])) for r in rows}
+
+    typed_df = spark.createDataFrame([(v,) for v in vals], f"key {name}")
+    long_df = spark.createDataFrame([(v,) for v in vals], "key long")
+    want = shards(D.build_filter_df(long_df, n_shards=4).collect())
+    got = D.build_filter_df(typed_df, n_shards=4).collect()
+    assert shards(got) == want
+    stage = str(tmp_path_factory.mktemp("stage"))
+    staged = shards(D.build_filter_df_staged(typed_df, stage,
+                                             n_shards=4).collect())
+    assert staged == want
+    table = D.FilterTable({r["shard_id"]: r.asDict() for r in got}, 4)
+    assert table.contains_np(np.array(vals, dtype=np.int64)).all()
+
+
+@pytest.mark.parametrize("cast", ["double", "float", "decimal(20,0)",
+                                  "string"])
+def test_build_refuses_non_integer_keys(spark, tmp_path, cast):
+    keys = spark.range(100).select(F.col("id").cast(cast).alias("key"))
+    for build in (
+            lambda: D.build_filter_df(keys, n_shards=4),
+            lambda: D.build_filter_df_staged(keys, str(tmp_path / "st"),
+                                             n_shards=4),
+            lambda: D.build_filter_table(keys, str(tmp_path / "t"),
+                                         n_shards=4)):
+        with pytest.raises(TypeError, match="key column 'key'"):
+            build()
+
+
+@pytest.mark.parametrize("kind", ["bfuse8", "xor8"])
+def test_stored_table_carries_its_shard_count(spark, tmp_path, kind):
+    """A stored table whose top shards hold no key loads with the shard
+    count it was built with: every shard gets a row. Inferring the count
+    from the highest non-empty shard id probed 16-shard keys with a
+    2-shard prefix and missed half of them."""
+    keys = np.array([1, 2, 1 << 60, (1 << 60) + 5], dtype=np.int64)
+    df = spark.createDataFrame([(int(k),) for k in keys], "key long")
+    for stage in (None, str(tmp_path / "stage")):
+        path = str(tmp_path / f"t{stage is None}")
+        D.build_filter_table(df, path, kind=kind, n_shards=16,
+                             stage_dir=stage)
+        table = D.FilterTable.load(spark, path)
+        assert table.n_shards == 16 and sorted(table.rows) == list(range(16))
+        assert table.contains_np(keys).all()

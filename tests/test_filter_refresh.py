@@ -130,38 +130,6 @@ def test_checkpoint_reset_never_reuses_version_names(spark, tmp_path):
     assert t.where_member(union, "key").count() == 60_000  # zero FN
 
 
-def test_stream_filter_refresh_staged_spill_cleaned(spark, tmp_path):
-    """With stage_dir set, the per-version staging spill is deleted after
-    each rebuild — a long-running stream must not accumulate
-    one-whole-corpus-per-refresh of spill."""
-    from xorf_spark.streaming import (
-        latest_version,
-        load_latest_filter_table,
-        stream_filter_refresh,
-    )
-
-    src = str(tmp_path / "in2")
-    table = str(tmp_path / "ftab2")
-    spill = str(tmp_path / "spill")
-    (spark.range(20_000).select(F.xxhash64("id").alias("key"))
-     .write.parquet(f"{src}/b1"))
-    stream = spark.readStream.schema("key long").option(
-        "maxFilesPerTrigger", "1").parquet(src + "/*")
-    q = (stream_filter_refresh(stream, table, n_shards=4,
-                               refresh_every=1, stage_dir=spill)
-         .option("checkpointLocation", str(tmp_path / "ckpt2"))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    assert latest_version(table) is not None
-    t = load_latest_filter_table(spark, table, n_shards=4)
-    probes = spark.range(20_000).select(F.xxhash64("id").alias("key"))
-    assert t.where_member(probes, "key").count() == 20_000
-    leftover = [d for d in (os.listdir(spill) if os.path.isdir(spill)
-                            else [])]
-    assert not leftover, leftover
-
-
 def test_compact_key_log_shrinks_and_preserves_zero_fn(spark, tmp_path):
     """compact_key_log rewrites the append-only log to its distinct set
     (bounding long-stream growth) without ever invalidating the filter
@@ -317,3 +285,144 @@ def test_pointer_swap_atomic_under_racing_reader(tmp_path):
     assert cur == f"g{n_swaps - 1}b{n_swaps - 1}"
     assert prv == f"g{n_swaps - 2}b{n_swaps - 2}"
     assert (base_dir / cur).is_dir() and (base_dir / prv).is_dir()
+
+
+def _feed(spark, src, name, lo, hi):
+    """One parquet file of ``xxhash64(id)`` keys: one micro-batch."""
+    (spark.range(lo, hi).select(F.xxhash64("id").alias("key"))
+     .repartition(1).write.parquet(f"{src}/{name}"))
+
+
+def _run_stream(spark, src, table, ckpt, n_shards=4):
+    from xorf_spark.streaming import stream_filter_refresh
+
+    stream = spark.readStream.schema("key long").option(
+        "maxFilesPerTrigger", "1").parquet(src + "/*")
+    q = (stream_filter_refresh(stream, table, n_shards=n_shards,
+                               refresh_every=1)
+         .option("checkpointLocation", ckpt).start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _uncommit(ckpt, batch_id):
+    """Forget the checkpoint commit of ``batch_id``, as a driver crash
+    before that commit would: a restart replays the batch."""
+    for name in (str(batch_id), f".{batch_id}.crc"):
+        p = os.path.join(ckpt, "commits", name)
+        if os.path.exists(p):
+            os.remove(p)
+
+
+def _snapshot(table):
+    """Pointer text and every version dir's file names and bytes."""
+    import re
+    from pathlib import Path
+
+    root = Path(table)
+    return (root.joinpath("_LATEST").read_text(),
+            {d.name: {f.name: f.read_bytes() for f in sorted(d.iterdir())}
+             for d in sorted(root.iterdir())
+             if re.fullmatch(r"g\d+b\d+", d.name)})
+
+
+def test_crash_after_swap_replay_keeps_pointer_and_versions(spark, tmp_path):
+    """A driver crash after the pointer swap and before the checkpoint
+    commit: the restarted stream replays the batch (its keys are appended
+    again) and skips the rebuild, so the pointer and every version dir
+    stay as they were, and every key is still a member."""
+    from xorf_spark.streaming import load_latest_filter_table
+
+    src, table = str(tmp_path / "in"), str(tmp_path / "ftab")
+    ckpt = str(tmp_path / "ckpt")
+    _feed(spark, src, "b0", 0, 20_000)
+    _feed(spark, src, "b1", 20_000, 40_000)
+    _run_stream(spark, src, table, ckpt)
+    before = _snapshot(table)
+    assert before[0] == "g1b1 g0b0"
+    log = os.path.join(table, "keys")
+    rows_before = spark.read.parquet(log).count()
+
+    _uncommit(ckpt, 1)
+    _run_stream(spark, src, table, ckpt)
+    assert spark.read.parquet(log).count() == rows_before + 20_000
+    assert _snapshot(table) == before
+    t = load_latest_filter_table(spark, table)
+    keys = spark.range(40_000).select(F.xxhash64("id").alias("key"))
+    assert t.where_member(keys, "key").count() == 40_000
+
+
+def test_partial_version_resumes_byte_identical(spark, tmp_path):
+    """A refresh that crashed with only some shard rows of its version
+    committed, before the pointer swap, resumes on restart: the replayed
+    batch builds only the missing shards, and the version's fingerprints
+    equal those of the clean refresh, byte for byte, although the replay
+    appended the batch's keys to the log a second time."""
+    import shutil
+
+    from xorf_spark.streaming import (
+        latest_version,
+        load_latest_filter_table,
+    )
+
+    src, table = str(tmp_path / "in"), str(tmp_path / "ftab")
+    ckpt = str(tmp_path / "ckpt")
+    _feed(spark, src, "b0", 0, 30_000)
+    _run_stream(spark, src, table, ckpt)
+    version = os.path.join(table, "g0b0")
+    clean = {r["shard_id"]: (r["seed"], r["n_keys"], bytes(r["fingerprints"]))
+             for r in spark.read.parquet(version).collect()}
+    assert sorted(clean) == [0, 1, 2, 3]
+
+    # the crashed state: shards 0 and 1 committed, no pointer, batch 0
+    # not committed to the checkpoint
+    (spark.read.parquet(version).where(F.col("shard_id") < 2)
+     .write.parquet(version + "_part"))
+    shutil.rmtree(version)
+    os.rename(version + "_part", version)
+    os.remove(os.path.join(table, "_LATEST"))
+    _uncommit(ckpt, 0)
+
+    _run_stream(spark, src, table, ckpt)
+    assert latest_version(table) == "g0b0"
+    resumed = {r["shard_id"]: (r["seed"], r["n_keys"],
+                               bytes(r["fingerprints"]))
+               for r in spark.read.parquet(version).collect()}
+    assert resumed == clean
+    assert spark.read.parquet(version).count() == 4   # no shard built twice
+    t = load_latest_filter_table(spark, table)        # shard count stored
+    assert t.n_shards == 4
+    keys = spark.range(30_000).select(F.xxhash64("id").alias("key"))
+    assert t.where_member(keys, "key").count() == 30_000
+
+
+def test_refresh_refuses_unpartitioned_key_log(spark, tmp_path):
+    """Parquet files in the root of ``keys/`` (a log written before the
+    shard layout) would be skipped by a shard-local refresh: refuse."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src, table = str(tmp_path / "in"), str(tmp_path / "ftab")
+    os.makedirs(os.path.join(table, "keys"))
+    pq.write_table(pa.table({"key": pa.array([1, 2, 3], pa.int64())}),
+                   os.path.join(table, "keys", "part-0.parquet"))
+    _feed(spark, src, "b0", 0, 1_000)
+    with pytest.raises(Exception, match="unpartitioned parquet files"):
+        _run_stream(spark, src, table, str(tmp_path / "ckpt"))
+
+
+def test_refresh_refuses_log_of_other_shard_count(spark, tmp_path):
+    """Shard directories written under another ``n_shards`` would be
+    misread: a larger earlier count leaves directories past the new
+    range, a smaller one leaves keys of several new shards in one
+    directory. Both refuse instead of skipping keys."""
+    src, table = str(tmp_path / "in"), str(tmp_path / "ftab")
+    _feed(spark, src, "b0", 0, 5_000)
+    _run_stream(spark, src, table, str(tmp_path / "c4"), n_shards=4)
+    _feed(spark, src, "b1", 5_000, 10_000)
+    with pytest.raises(Exception, match="larger shard count"):
+        _run_stream(spark, src, table, str(tmp_path / "c2"), n_shards=2)
+    with pytest.raises(Exception, match="shard count other than 8"):
+        _run_stream(spark, src, table, str(tmp_path / "c8"), n_shards=8)

@@ -115,7 +115,8 @@ def _peel(counts: np.ndarray, hxor: np.ndarray, idx3_fn, n: int,
             # duplicates with bitwise_xor.reduceat. Interleaved A/B at 8M
             # keys: xor peel 6.06s vs 6.71s scatter, bfuse 4.19s vs 4.59s —
             # and the sequential sort degrades less under DRAM contention
-            # than random scatters. Profile: scripts/xor_scaling_probe.py.
+            # than random scatters. Profile: scripts/xor_scaling_probe.py at
+            # commit 2f8c669.
             rowbits = max((3 * m - 1).bit_length(), 1)
             idx = np.concatenate((j0, j1, j2)).astype(np.uint64, copy=False)
             packed = (idx << np.uint64(rowbits)) | np.arange(

@@ -37,9 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
+    ByteType,
     DoubleType,
     IntegerType,
     LongType,
+    ShortType,
     StringType,
     StructField,
     StructType,
@@ -199,15 +201,46 @@ def shingle_keys(df: DataFrame, tokens_col: str = "tokens", k: int = 8,
                 F.expr(shingle_hashes_sql(tokens_col, k))).alias(key_col)))
 
 
-def shard_id_col(key_col: str = "key", n_shards: int = 16) -> Column:
+def _key_col(df: DataFrame, name: str) -> Column:
+    """``df``'s column ``name`` as a 64-bit filter key: long passes as is,
+    byte, short and int widen to long (as the probe side does), and any
+    other type raises ``TypeError`` naming the column. xorf takes only
+    64-bit keys (reference src/lib.rs:10-11); hash any other type to a
+    long first (``doc_keys``, ``xxhash64``: the HashProxy role)."""
+    dt = df.select(name).schema.fields[0].dataType
+    if isinstance(dt, LongType):
+        return F.col(name)
+    if isinstance(dt, (ByteType, ShortType, IntegerType)):
+        return F.col(name).cast("long")
+    raise TypeError(
+        f"key column {name!r} has type {dt.simpleString()}; a filter key "
+        f"must be byte, short, int or long. Hash other types to a long "
+        f"first (xxhash64, doc_keys).")
+
+
+def _np_keys(keys) -> np.ndarray:
+    """uint64 view of the non-null values of an int64 Arrow key column.
+    Any other Arrow type raises: viewing a narrower buffer as uint64 would
+    pair two keys into one."""
+    if keys.type != pa.int64():
+        raise TypeError(f"filter keys must be int64, got {keys.type}")
+    if isinstance(keys, pa.ChunkedArray):
+        keys = keys.combine_chunks()
+    return keys.drop_null().to_numpy(zero_copy_only=False).view(np.uint64)
+
+
+def shard_id_col(key: str | Column = "key", n_shards: int = 16) -> Column:
     """Hash-prefix shard id: top ``log2(n_shards)`` bits of the (already
-    uniform) 64-bit key. Disjoint ranges ⇒ shard merge is a plain union."""
+    uniform) 64-bit key. Disjoint ranges ⇒ shard merge is a plain union.
+    ``key`` must be a long column: pass ``_key_col(df, name)`` for a
+    column of unchecked type."""
     p = int(math.log2(n_shards))
     if 1 << p != n_shards:
         raise ValueError("n_shards must be a power of two")
     if p == 0:
         return F.lit(0).cast("int")
-    return F.shiftrightunsigned(F.col(key_col), 64 - p).cast("int")
+    key = F.col(key) if isinstance(key, str) else key
+    return F.shiftrightunsigned(key, 64 - p).cast("int")
 
 
 def pick_n_shards(n_keys: int,
@@ -223,7 +256,11 @@ def pick_n_shards(n_keys: int,
 # ---------------------------------------------------------------------------
 
 def _build_shard_row(kind: str, fp_bits: int, shard_id: int, keys: np.ndarray,
-                     uniform_random: bool, t0: float) -> dict:
+                     uniform_random: bool, t0: float) -> dict | None:
+    """The shard's row; None for an empty shard of the fuse family, which
+    cannot build an empty filter (xor and bfuse can)."""
+    if kind.startswith("fuse") and not keys.size:
+        return None
     if kind.startswith("xor"):
         r = B.build_xor(np.unique(keys), fp_bits, check_distinct=False)
     elif kind.startswith("bfuse"):
@@ -276,11 +313,11 @@ def _build_shard_arrow_fn(kind: str, uniform_random: bool = True):
 
     def build_shard(table: pa.Table) -> pa.Table:
         t0 = time.time()
-        col = table.column("key")
-        keys = col.combine_chunks().to_numpy(zero_copy_only=False).view(np.uint64)
+        keys = _np_keys(table.column("key"))
         shard_id = int(table.column("shard_id")[0].as_py()) if table.num_rows else 0
         row = _build_shard_row(kind, fp_bits, shard_id, keys, uniform_random, t0)
-        return pa.Table.from_pylist([row], schema=_PA_SHARD_SCHEMA)
+        return pa.Table.from_pylist([row] if row else [],
+                                    schema=_PA_SHARD_SCHEMA)
 
     return build_shard
 
@@ -291,7 +328,8 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
                     uniform_random: bool = True) -> DataFrame:
     """Lazy shard-table DataFrame for a distributed filter build.
 
-    ``keys_df`` is any DataFrame with a LongType ``key_col``. The plan is a
+    ``keys_df`` is any DataFrame with a long ``key_col`` (byte, short and
+    int widen; other types raise, see ``_key_col``). The plan is a
     SINGLE shuffle: project → repartition by hash-prefix shard id (explicit
     numPartitions, so AQE cannot coalesce the build stage) →
     groupBy(shard).applyInArrow(numpy kernel).
@@ -302,15 +340,34 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
 
     The shuffle key is the *hashed* key prefix — uniform by construction —
     so source/doc-length skew in the input cannot unbalance the build.
+    Only shards that receive a key get a row; pass ``n_shards`` to
+    ``FilterTable.from_df``.
     """
-    keys = (keys_df.select(F.col(key_col).alias("key"))
-            .where(F.col("key").isNotNull()))
     if n_shards is None:
-        n_shards = pick_n_shards(keys.count(), target_keys_per_shard)
-    sharded = (keys.withColumn("shard_id", shard_id_col("key", n_shards))
-               .repartition(n_shards, "shard_id"))
-    return sharded.groupBy("shard_id").applyInArrow(
-        _build_shard_arrow_fn(kind, uniform_random), SHARD_SCHEMA)
+        n_shards = pick_n_shards(keys_df.where(_key_col(
+            keys_df, key_col).isNotNull()).count(), target_keys_per_shard)
+    return _build_df(keys_df, key_col, n_shards, kind, uniform_random)
+
+
+def _build_df(keys_df: DataFrame, key_col: str, n_shards: int, kind: str,
+              uniform_random: bool = True,
+              every_shard: bool = False) -> DataFrame:
+    """The plan of :func:`build_filter_df`. With ``every_shard``, one
+    NULL-key row per shard id rides the shuffle, so every id in
+    ``range(n_shards)`` gets a row (an empty shard an empty filter): a
+    stored table whose top shards hold no key still carries its shard
+    count."""
+    sharded = (keys_df.select(_key_col(keys_df, key_col).alias("key"))
+               .where(F.col("key").isNotNull())
+               .withColumn("shard_id", shard_id_col("key", n_shards)))
+    if every_shard:
+        sharded = sharded.unionByName(
+            keys_df.sparkSession.range(n_shards, numPartitions=1).select(
+                F.lit(None).cast("long").alias("key"),
+                F.col("id").cast("int").alias("shard_id")))
+    return (sharded.repartition(n_shards, "shard_id").groupBy("shard_id")
+            .applyInArrow(_build_shard_arrow_fn(kind, uniform_random),
+                          SHARD_SCHEMA))
 
 
 def _make_batch_dedup():
@@ -374,8 +431,8 @@ def _stage_keys(keys_df: DataFrame, stage_dir: str, n_shards: int,
     # narrows by the 4-byte shard_id column (measured 5-7% on the
     # 54M-key token spill warm, ~40% cold; BENCH/ROUND6_NOTES.md)
     shard_expr = shard_id_col("key", n_shards)
-    staged = (keys_df.select(F.col(key_col).alias("key"))
-              .where(F.col(key_col).isNotNull())
+    staged = (keys_df.select(_key_col(keys_df, key_col).alias("key"))
+              .where(F.col("key").isNotNull())
               .repartition(n_shards * salt, shard_expr,
                            F.pmod(F.col("key"), F.lit(salt)))
               .withColumn("shard_id", shard_expr))
@@ -524,8 +581,9 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
     1. pure-JVM stage: project → repartition by hash-prefix shard →
        ``write.partitionBy(shard_id)`` parquet under ``stage_dir`` (all
        whole-stage codegen; no Python touches a row);
-    2. shuffle-free Python stage: one task per shard id reads ITS OWN
-       parquet files directly with pyarrow and runs the numpy construction.
+    2. shuffle-free Python stage (:func:`_build_from_shard_dirs`): one
+       task per shard id reads ITS OWN parquet files directly with
+       pyarrow and runs the numpy construction.
 
     Why: feeding a shuffled 64-bit key stream from the JVM into Python
     workers is the measured bottleneck of the one-shot build (and in
@@ -544,32 +602,68 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
     as if built from the deduped stream. Worth it only for genuinely
     duplicate-heavy key streams (BENCH/ROUND5_NOTES.md A/B).
     """
-    spark = keys_df.sparkSession
     if n_shards is None:
         n_shards = pick_n_shards(
-            keys_df.where(F.col(key_col).isNotNull()).count())
-    fp_bits = _fp_bits(kind)
-    shard_ids = _stage_keys(keys_df, stage_dir, n_shards, key_col,
-                            pre_dedup=pre_dedup)
+            keys_df.where(_key_col(keys_df, key_col).isNotNull()).count())
+    listed = _stage_keys(keys_df, stage_dir, n_shards, key_col,
+                         pre_dedup=pre_dedup)
+    return _build_from_shard_dirs(keys_df.sparkSession, stage_dir,
+                                  sorted(listed), set(listed), n_shards,
+                                  kind, uniform_random)
+
+
+def _build_from_shard_dirs(spark: SparkSession, key_dir: str,
+                           shard_ids: list[int], listed: set[int],
+                           n_shards: int, kind: str,
+                           uniform_random: bool = True,
+                           distinct: bool = False) -> DataFrame:
+    """Shuffle-free build stage over a shard-partitioned key directory
+    (``key_dir/shard_id=N/*.parquet``, the layout ``_stage_keys`` writes
+    and the streaming key log keeps): one python task per id in
+    ``shard_ids`` reads its own files with pyarrow and makes one
+    ``_build_shard_row`` call.
+
+    ``listed`` holds the shard ids whose directory the driver saw; a
+    listed shard with no parquet file raises (see ``_make_stage_lister``),
+    an unlisted one builds its empty filter. Every key read must carry its
+    directory's hash prefix, else the task raises: a directory written
+    under another ``n_shards`` would otherwise be half skipped (false
+    negatives). ``distinct`` runs ``np.unique`` first, for directories
+    that hold re-delivered keys: the bfuse build sizes its arrays by raw
+    key count."""
     if not shard_ids:
         return spark.createDataFrame([], SHARD_SCHEMA)
-    tasks = _one_row_per_task(spark, shard_id=shard_ids)
-
+    fp_bits = _fp_bits(kind)
+    shift = 64 - int(math.log2(n_shards))
+    tasks = _one_row_per_task(spark, shard_id=shard_ids,
+                              listed=[sid in listed for sid in shard_ids])
     _list_shard_files = _make_stage_lister()
 
     def build_from_files(batches):
         import pyarrow.parquet as _pq
 
         for batch in batches:
-            for sid in batch.column("shard_id").to_pylist():
-                files, fsys = _list_shard_files(stage_dir, sid)
-                tbl = _pq.read_table(files, columns=["key"],
-                                     filesystem=fsys)
-                arr = (tbl.column("key").combine_chunks().drop_null()
-                       .to_numpy(zero_copy_only=False).view(np.uint64))
-                row = _build_shard_row(kind, fp_bits, sid, arr,
+            for sid, has_files in zip(batch.column("shard_id").to_pylist(),
+                                      batch.column("listed").to_pylist()):
+                keys = np.empty(0, dtype=np.uint64)
+                if has_files:
+                    files, fsys = _list_shard_files(key_dir, sid)
+                    keys = _np_keys(_pq.read_table(
+                        files, columns=["key"], filesystem=fsys)
+                        .column("key"))
+                # the prefix is monotone in the key: min and max bound it
+                if shift < 64 and keys.size and not (
+                        int(keys.min()) >> shift == sid
+                        == int(keys.max()) >> shift):
+                    raise ValueError(
+                        f"{key_dir}/shard_id={sid} holds keys of another "
+                        f"shard: it was written under a shard count other "
+                        f"than {n_shards}")
+                if distinct:
+                    keys = np.unique(keys)
+                row = _build_shard_row(kind, fp_bits, sid, keys,
                                        uniform_random, time.time())
-                yield pa.RecordBatch.from_pylist([row],
+                yield pa.RecordBatch.from_pylist([row] if row else [],
                                                  schema=_PA_SHARD_SCHEMA)
 
     return tasks.mapInArrow(build_from_files, SHARD_SCHEMA)
@@ -663,7 +757,9 @@ def _guard_stamped_append(path: str, stamp: str | None, declared,
 def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
                        n_shards: int | None = None, key_col: str = "key",
                        resume: bool = True, stage_dir: str | None = None,
-                       key_def: str | None = None, **kw) -> DataFrame:
+                       key_def: str | None = None,
+                       target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
+                       uniform_random: bool = True) -> DataFrame:
     """Checkpoint-resumable build: writes the shard table as parquet.
 
     Shards are append-only and deterministic (fixed seed schedule from
@@ -671,10 +767,13 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
     anti-joins the already-committed shard ids and only builds the missing
     ones — the final table is identical to an uninterrupted run.
 
-    Pass ``stage_dir`` to route the pending shards through
+    Pass ``stage_dir`` to route the pending shards through the stages of
     ``build_filter_df_staged`` (JVM shuffle → parquet stage + shuffle-free
     python file-read stage — the faster path; see that function). Resume
     semantics are identical: pending keys are filtered before staging.
+    Either way every shard id in ``range(n_shards)`` gets a row, empty
+    shards included (except for the fuse family, which cannot build an
+    empty filter), so ``FilterTable.load`` infers the shard count.
 
     ``key_def`` names the DEFINITION of the key column (e.g.
     ``shingle_key_def(8)`` for :func:`shingle_keys` output). It is
@@ -690,6 +789,33 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
     changed).
     """
     spark = keys_df.sparkSession
+
+    def build(done_ids: set[int]) -> DataFrame:
+        n = n_shards
+        if n is None:
+            n = pick_n_shards(keys_df.select(_key_col(
+                keys_df, key_col)).distinct().count(), target_keys_per_shard)
+        pending = keys_df
+        if done_ids:
+            pending = keys_df.where(~shard_id_col(
+                _key_col(keys_df, key_col), n).isin(list(done_ids)))
+        if stage_dir is not None:
+            listed = set(_stage_keys(pending, stage_dir, n, key_col))
+            return _build_from_shard_dirs(spark, stage_dir, list(range(n)),
+                                          listed, n, kind, uniform_random)
+        return _build_df(pending, key_col, n, kind, uniform_random,
+                         every_shard=True)
+
+    _append_shards(spark, path, build, resume=resume, key_def=key_def)
+    return spark.read.parquet(path)
+
+
+def _append_shards(spark: SparkSession, path: str, build,
+                   resume: bool = True, key_def: str | None = None) -> None:
+    """The resumable write behind :func:`build_filter_table` and the
+    streaming refresh: read the shard ids already committed at ``path``
+    (``done_ids``), check the ``key_def`` stamp, then append
+    ``build(done_ids)``'s rows for the other shards."""
     done_ids: set[int] = set()
     if resume:
         try:
@@ -716,25 +842,7 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
             f"before versioning); cannot prove it matches "
             f"{key_def!r}. Rebuild at a fresh path, or pass "
             f"key_def=None only if the definition never changed."))
-
-    if n_shards is None:
-        keys = keys_df.select(F.col(key_col).alias("key")).distinct()
-        n_shards = pick_n_shards(keys.count(),
-                                 kw.get("target_keys_per_shard",
-                                        DEFAULT_TARGET_KEYS_PER_SHARD))
-    kw.pop("target_keys_per_shard", None)
-    pending = keys_df
-    if done_ids:
-        pending = keys_df.where(
-            ~shard_id_col(key_col, n_shards).isin(list(done_ids)))
-    if stage_dir is not None:
-        shard_df = build_filter_df_staged(
-            pending, stage_dir, kind=kind, n_shards=n_shards,
-            key_col=key_col,
-            uniform_random=kw.get("uniform_random", True))
-    else:
-        shard_df = build_filter_df(pending, kind=kind, n_shards=n_shards,
-                                   key_col=key_col, **kw)
+    shard_df = build(done_ids)
     if done_ids:
         shard_df = shard_df.where(~F.col("shard_id").isin(list(done_ids)))
     # stamp BEFORE the data append: a crash in between leaves a stamped
@@ -743,7 +851,6 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
     if should_stamp:
         _write_keydef(path, key_def)
     shard_df.write.mode("append").parquet(path)
-    return spark.read.parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -821,6 +928,11 @@ class FilterTable:
         already bounded the size (``_member_flag`` estimates from the key
         count before building) or hold an unmaterialized build plan the
         extra job would re-execute.
+
+        ``n_shards`` defaults to the power of two above the highest shard
+        id. Tables written by ``build_filter_table`` and the streaming
+        refresh hold a row per shard, empty ones included, so the
+        default is exact for them; for ``build_filter_df`` output pass it.
         """
         if check_size:
             limit = (MAX_COLLECT_FP_BYTES if max_collect_fp_bytes is None
@@ -1178,7 +1290,8 @@ def probe_cogrouped(probe_df: DataFrame, shard_df: DataFrame,
     with the shard table, so each task sees exactly one shard's
     fingerprints (mmap-scale). NULL keys fall into the NULL ``shard_id``
     group, which no shard row joins, and get a NULL verdict there."""
-    probes = probe_df.withColumn("shard_id", shard_id_col(key_col, n_shards))
+    probes = probe_df.withColumn(
+        "shard_id", shard_id_col(_key_col(probe_df, key_col), n_shards))
     out_schema = StructType(
         probe_df.schema.fields + [StructField(out_col, BooleanType(), True)])
 
@@ -1253,8 +1366,7 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
                 files, fsys = _list_shard_files(stage_dir, sid)
                 tbl = _pq.read_table(files, columns=["key"],
                                      filesystem=fsys)
-                arr = tbl.column("key").combine_chunks().to_numpy(
-                    zero_copy_only=False).view(np.uint64)
+                arr = _np_keys(tbl.column("key"))
                 # cached per table generation: a reused python worker
                 # re-probing the same shard set skips the per-task memmap
                 # + descriptor rebuild (VERDICT r5 item 6)

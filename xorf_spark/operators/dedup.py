@@ -192,9 +192,9 @@ def _minhash_signatures_expr(df: DataFrame, tokens_col: str,
     # form materializes a per-(row, permutation) long array before the
     # min scan — the fold is allocation-free and measured ~8% faster at
     # num_perm=64 with bit-identical signatures
-    # (scripts/ab_minhash_inner.py). Docs with NO shingles (shorter than
-    # ``shingle`` tokens) keep the old all-NULL signature — a bare fold
-    # would return the MAX_LONG seed instead
+    # (scripts/ab_minhash_inner.py at commit 2f8c669). Docs with NO
+    # shingles (shorter than ``shingle`` tokens) keep the old all-NULL
+    # signature — a bare fold would return the MAX_LONG seed instead
     sig = (f"CASE WHEN size(__sh) = 0 THEN "
            f"transform(sequence(0, {num_perm - 1}), "
            f"i -> CAST(NULL AS BIGINT)) ELSE "

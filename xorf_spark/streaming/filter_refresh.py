@@ -3,15 +3,30 @@ every key the stream has ever delivered, refreshed per micro-batch group
 via ``foreachBatch`` — the streaming completion of the batch build
 (reference semantics: a filter is built once over a key set; a stream's
 key set only grows, so the operator periodically rebuilds over the
-accumulated distinct keys).
+accumulated keys).
 
 Layout under ``table_path``::
 
-    keys/                  append-only distinct-per-batch key log (parquet)
+    keys/shard_id=N/       append-only key log, laid out by hash-prefix
+                           shard (``dataflow.shard_id_col``): the layout of
+                           the staged build's spill, so the log IS the
+                           build's stage
     g0b0/, g1b3/, ...      immutable shard tables (one per refresh;
                            name = monotonic GENERATION + triggering batch)
     _LATEST                text file: current version dir name, then the
                            predecessor's, whitespace-separated
+
+Each micro-batch appends its non-null keys, re-deliveries included, with
+``write.partitionBy("shard_id")``: no shuffle, no per-batch distinct. A
+refresh is the file-reading stage of the staged build run directly over
+the log: one python task per shard id reads ``keys/shard_id=N/`` with
+pyarrow, ``np.unique``s it and builds that shard. No global ``distinct()``
+is needed: hash-prefix shards are disjoint key ranges, so every copy of a
+key lies in the same shard directory and the per-shard ``np.unique`` is
+the global distinct restricted to that shard. The unique is required:
+the bfuse build sizes its arrays by raw key count, so re-delivered keys
+would inflate the filter. Every refresh writes one row per shard id,
+empty shards included, so a loaded version knows its shard count.
 
 Version names carry a monotonic **generation** read from the current
 pointer (gen = pointer's gen + 1), NOT the raw batch id: batch ids
@@ -35,25 +50,34 @@ records (current + predecessor), so a crash-after-swap replay can never
 delete the directory a concurrent reader loaded via the pre-crash
 pointer.
 
-Scale notes: the key log holds per-batch-distinct rows, so it grows with
-total delivered (not distinct) keys across batches; the rebuild runs one
-global ``distinct()`` so the FILTER is always sized by true distinct
-keys. For streams that re-deliver heavily, :func:`compact_key_log`
-rewrites the log to its distinct set — crash-safe, append-concurrent-
-safe; schedule it between refreshes (see its docstring); the immutable
-versions are never invalidated by log maintenance. Each rebuild is the staged
-production build when ``stage_dir`` is passed; its per-version spill is
-deleted after the build.
+Scale notes: the log grows with total delivered (not distinct) rows, and
+its file count with the number of batches (an append writes up to one
+file per shard per input partition). A refresh reads the whole log, and
+a shard's task holds that shard's raw log rows (8 bytes each) plus
+``np.unique``'s sorted copy. :func:`compact_key_log` rewrites each shard
+directory to its distinct keys in one file, bounding both — crash-safe,
+append-concurrent-safe; schedule it between refreshes (see its
+docstring); the immutable versions are never invalidated by log
+maintenance. A key log the layout would misread is refused: parquet
+files in the root of ``keys/`` (a log written before the shard layout)
+or shard directories written under another ``n_shards``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dataflow import FilterTable, build_filter_table
+from ..dataflow import (
+    FilterTable,
+    _append_shards,
+    _build_from_shard_dirs,
+    _key_col,
+    shard_id_col,
+)
 # shared (filesystem, base) resolver + replace-aware rename: all
 # pointer/prune I/O here runs on the DRIVER (foreachBatch callbacks
 # execute driver-side), so no worker needs filesystem credentials
@@ -91,8 +115,6 @@ def latest_version(table_path: str) -> str | None:
 def _generation(version: str | None) -> int:
     """Monotonic generation parsed from a version dir name; -1 for no /
     legacy (``v7``-style) pointers so the next generation starts at 0."""
-    import re
-
     m = re.fullmatch(r"g(\d+)b\d+", version or "")
     return int(m.group(1)) if m else -1
 
@@ -109,26 +131,54 @@ def load_latest_filter_table(spark: SparkSession, table_path: str,
     return FilterTable.from_df(shard_df, **kw)
 
 
+#: options of every key-log write: uniform 64-bit keys are incompressible
+_LOG_WRITE = {"compression": "none", "parquet.enable.dictionary": "false"}
+
+
+def _log_shard_dirs(keys_path: str) -> dict[int, str]:
+    """``{shard_id: directory}`` of the key log's ``shard_id=N`` dirs.
+    Raises on parquet files in the log's root: a log written before the
+    shard layout, which a shard-local refresh would silently skip."""
+    from pyarrow import fs as pafs
+
+    fsys, base = _fs(keys_path)
+    dirs = {}
+    for info in fsys.get_file_info(
+            pafs.FileSelector(base, allow_not_found=True)):
+        if info.is_file and info.base_name.endswith(".parquet"):
+            raise ValueError(
+                f"key log {keys_path!r} holds unpartitioned parquet files "
+                f"(a log written before the shard_id=N layout); a refresh "
+                f"would skip their keys. Start the stream at a fresh "
+                f"table path.")
+        m = re.fullmatch(r"shard_id=(\d+)", info.base_name)
+        if m and info.type == pafs.FileType.Directory:
+            dirs[int(m[1])] = info.path
+    return dirs
+
+
 def compact_key_log(spark: SparkSession, table_path: str) -> int:
-    """Compact the append-only ``keys/`` log to its distinct key set.
-    Returns the number of log files removed.
+    """Compact each ``keys/shard_id=N/`` directory of the append-only log
+    to its distinct keys. Returns the number of log files removed.
 
-    The log grows with total *delivered* keys across batches (per-batch
-    distinct only); for heavily re-delivering streams this rewrites it to
-    the true distinct set. Crash-safe, and safe against concurrent
-    micro-batch APPENDS, by construction:
+    The log grows with total *delivered* rows, and its file count per
+    shard with the number of batches: every append adds files to every
+    shard it touches. A refresh reads all of them, so schedule compaction
+    to bound both. Crash-safe, and safe against concurrent micro-batch
+    APPENDS, by construction:
 
-    1. list the current log files;
-    2. read exactly THOSE files, ``distinct()``, append the result as new
-       files into the same directory (new part files get unique names —
-       nothing is overwritten, and a concurrent micro-batch append is
-       untouched because deletion below only targets the pre-listed set);
+    1. list the current files of every shard directory;
+    2. read exactly THOSE files, ``distinct()`` (one shuffle, by shard),
+       append the result as one new file per shard into the same
+       directories (new part files get unique names — nothing is
+       overwritten, and a concurrent micro-batch append is untouched
+       because deletion below only targets the pre-listed set);
     3. delete the listed old files.
 
-    Every crash window leaves the directory a SUPERSET of the distinct
-    key set (duplicates at worst), and the rebuild path runs a global
-    ``distinct()`` anyway — so the filter's zero-false-negative contract
-    can never be violated by a failed compaction.
+    Every crash window leaves each directory a SUPERSET of its distinct
+    key set (duplicates at worst), and a refresh ``np.unique``s each shard
+    anyway — so the filter's zero-false-negative contract can never be
+    violated by a failed compaction.
 
     Concurrency caveat: a REBUILD that is scanning the log while step 3
     deletes files it listed will fail that batch with missing-file errors
@@ -140,8 +190,9 @@ def compact_key_log(spark: SparkSession, table_path: str) -> int:
 
     keys_path = os.path.join(table_path, "keys")
     fsys, base = _fs(keys_path)
-    old = [f.path for f in fsys.get_file_info(pafs.FileSelector(base))
-           if f.is_file and f.base_name.endswith(".parquet")]
+    dirs = _log_shard_dirs(keys_path).values()
+    old = [f.path for d in dirs for f in fsys.get_file_info(
+        pafs.FileSelector(d)) if f.is_file and f.path.endswith(".parquet")]
     if not old:
         return 0
     # pyarrow strips the URI scheme AND authority from listed paths;
@@ -155,12 +206,13 @@ def compact_key_log(spark: SparkSession, table_path: str) -> int:
             raise ValueError(
                 f"cannot split {keys_path!r} into authority + {base!r}")
         prefix = keys_path[:len(keys_path) - len(base)]
-    spark_paths = [prefix + p for p in old]
-    (spark.read.parquet(*spark_paths).distinct()
-     .write.mode("append")
-     .option("compression", "none")
-     .option("parquet.enable.dictionary", "false")
-     .parquet(keys_path))
+    logged = (spark.read.option("basePath", keys_path)
+              .parquet(*[prefix + p for p in old]))
+    # hash-partitioned by shard, the distinct needs no second shuffle and
+    # each task writes one file per shard it holds
+    (logged.repartition(len(dirs), "shard_id").distinct()
+     .write.mode("append").options(**_LOG_WRITE)
+     .partitionBy("shard_id").parquet(keys_path))
     for p in old:
         fsys.delete_file(p)
     return len(old)
@@ -169,19 +221,21 @@ def compact_key_log(spark: SparkSession, table_path: str) -> int:
 def stream_filter_refresh(stream_df: DataFrame, table_path: str,
                           key_col: str = "key", kind: str = "bfuse8",
                           n_shards: int = 16, refresh_every: int = 1,
-                          stage_dir: str | None = None,
                           key_def: str | None = None):
     """``writeStream``-able sink maintaining the ever-seen-keys filter.
 
     Returns a ``DataStreamWriter`` (caller adds ``.option("checkpoint..")``
-    / ``.start()``). Each micro-batch appends its distinct non-null keys
-    to the key log; every ``refresh_every`` batches the whole log is
-    globally de-duplicated and rebuilt into a fresh immutable version
-    directory, then ``_LATEST`` is swapped. Query the current filter any
-    time with :func:`load_latest_filter_table` — zero false negatives
-    over every key delivered up to the last refresh (the filter
-    contract). The current version and its predecessor are retained;
-    older version dirs (and the build's staging spill) are deleted.
+    / ``.start()``). Each micro-batch appends its non-null keys to the
+    shard-partitioned key log; every ``refresh_every`` batches each shard
+    is rebuilt from its own log directory into a fresh immutable version
+    directory, then ``_LATEST`` is swapped (see the module docstring).
+    Query the current filter any time with
+    :func:`load_latest_filter_table` — zero false negatives over every key
+    delivered up to the last refresh (the filter contract). The current
+    version and its predecessor are retained; older version dirs are
+    deleted. ``key_col`` may be byte, short, int or long (see
+    ``dataflow._key_col``); ``n_shards`` must stay the same for the life
+    of ``table_path``.
 
     ``key_def`` (optional) names the definition of the key column the
     caller derives upstream (see ``dataflow.build_filter_table``): each
@@ -193,12 +247,11 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        (batch_df.select(F.col(key_col).alias("key"))
-         .where(F.col(key_col).isNotNull()).distinct()
-         .write.mode("append")
-         .option("compression", "none")
-         .option("parquet.enable.dictionary", "false")
-         .parquet(keys_path))
+        (batch_df.select(_key_col(batch_df, key_col).alias("key"))
+         .where(F.col("key").isNotNull())
+         .withColumn("shard_id", shard_id_col("key", n_shards))
+         .write.mode("append").options(**_LOG_WRITE)
+         .partitionBy("shard_id").parquet(keys_path))
         if batch_id % refresh_every != refresh_every - 1:
             return
         prev, _ = pointer_versions(table_path)
@@ -206,12 +259,13 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
             # crash between the pointer swap and Spark's checkpoint
             # commit: the pointer's CURRENT version was built by this
             # very batch, and the rebuild is deterministic from the
-            # global key log — skip it if the log still holds exactly
-            # the keys that build saw (one distinct-count pass vs a
-            # full rebuild; r4 review finding). The key log only grows,
-            # so equality is exact, never coincidence: a checkpoint
-            # RESET whose colliding batch id delivered genuinely new
-            # keys raises the count and the rebuild proceeds.
+            # key log — skip it if the log still holds exactly the
+            # distinct keys that build saw (one distinct-count pass, on
+            # this replay path only, vs a full rebuild). The key log only
+            # grows (compaction keeps its distinct set), so equality is
+            # exact, never coincidence: a checkpoint RESET whose colliding
+            # batch id delivered genuinely new keys raises the count and
+            # the rebuild proceeds.
             from pyspark.errors import AnalysisException
             try:
                 built = (spark.read.parquet(
@@ -220,7 +274,8 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
             except AnalysisException:
                 built = None  # version dir unreadable: rebuild
             if built is not None and int(built) == (
-                    spark.read.parquet(keys_path).distinct().count()):
+                    spark.read.parquet(keys_path).select("key")
+                    .distinct().count()):
                 return
         # generation = current pointer's + 1: never collides with ANY
         # retained dir across checkpoint resets (batch ids restart at 0;
@@ -230,19 +285,21 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
         # (generation, batch) pair — a crashed replay of this very batch,
         # which is the checkpoint-resume case the builder exists for.
         version = f"g{_generation(prev) + 1}b{batch_id}"
-        # global distinct: per-batch distinct still re-delivers keys
-        # across batches, and the builder sizes arrays by RAW row count —
-        # without this the filter would grow with total delivered keys
-        all_keys = spark.read.parquet(keys_path).distinct()
-        version_stage = (os.path.join(stage_dir, version)
-                         if stage_dir else None)
-        build_filter_table(
-            all_keys, os.path.join(table_path, version), kind=kind,
-            n_shards=n_shards, key_col="key", stage_dir=version_stage,
-            key_def=key_def)
-        if version_stage is not None:
-            sfs, sbase = _fs(version_stage)
-            sfs.delete_dir(sbase)
+        listed = _log_shard_dirs(keys_path)
+        if max(listed, default=0) >= n_shards:
+            raise ValueError(
+                f"key log {keys_path!r} has shard directories up to "
+                f"shard_id={max(listed)}: it was written under a larger "
+                f"shard count than n_shards={n_shards}")
+
+        def build(done_ids: set[int]) -> DataFrame:
+            return _build_from_shard_dirs(
+                spark, keys_path,
+                [s for s in range(n_shards) if s not in done_ids],
+                set(listed), n_shards, kind, distinct=True)
+
+        _append_shards(spark, os.path.join(table_path, version), build,
+                       key_def=key_def)
         # pointer swap AFTER the version is fully committed: write to a
         # temp name, then rename over _LATEST — a single atomic rename on
         # POSIX (open_output_stream on the final path would truncate
@@ -263,8 +320,6 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
         # listing-derived predecessor: on a crash-after-swap replay the
         # pointer already names this version, and a guessed predecessor
         # could delete the dir a concurrent reader is still probing.
-        import re
-
         from pyarrow import fs as pafs
         keep = {version, prev}
         for info in fsys.get_file_info(pafs.FileSelector(base)):
