@@ -186,8 +186,7 @@ def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark):
     rows = {}
     for sid in (0, 1):
         mine = members[(members >> np.uint64(63)) == sid]
-        rows[sid] = D._build_shard_row("bfuse8", 8, sid, mine, True,
-                                       time.time())
+        rows[sid] = D._build_shard_row("bfuse8", 8, sid, mine, time.time())
     table = D.FilterTable(rows, n_shards=2)
     bloom = Bloom(n_bits=1 << 18, k=7).add_hashes(members)
     cms = CountMin(width=1 << 14, depth=5).add_hashes(np.repeat(members, 3))
@@ -284,33 +283,6 @@ def test_inline_semijoin_cogrouped_above_collect_cap(spark, token_df,
     assert got_anti == probe.count() - want
 
 
-def test_staged_build_pre_dedup_membership_unchanged(spark, tmp_path):
-    """pre_dedup (batch np.unique in the spill writer) must not change
-    membership: zero FN on the distinct key set, and on an
-    already-distinct input the shards are byte-identical to the plain
-    staged build (same raw counts -> same layout -> same seed schedule)."""
-    distinct = spark.range(40_000).select(F.xxhash64("id").alias("key"))
-    dup4 = spark.range(160_000).select(
-        F.xxhash64(F.col("id") % 40_000).alias("key"))
-
-    a = {r["shard_id"]: r for r in D.build_filter_df_staged(
-        distinct, str(tmp_path / "a"), kind="bfuse8", n_shards=4).collect()}
-    b = {r["shard_id"]: r for r in D.build_filter_df_staged(
-        distinct, str(tmp_path / "b"), kind="bfuse8", n_shards=4,
-        pre_dedup=True).collect()}
-    assert set(a) == set(b)
-    for sid in a:
-        assert a[sid]["fingerprints"] == b[sid]["fingerprints"]
-
-    # duplicate-heavy input: zero FN on the distinct set either way;
-    # pre_dedup sizes by the (smaller) deduped count
-    c = D.build_filter_df_staged(dup4, str(tmp_path / "c"), kind="bfuse8",
-                                 n_shards=4, pre_dedup=True)
-    t = D.FilterTable.from_df(c, n_shards=4, check_size=False)
-    assert t.where_member(distinct, "key").count() == 40_000
-    assert t.n_keys == 40_000  # builder saw the deduped stream
-
-
 def test_from_df_load_refuse_oversize_driver_collect(spark, token_df,
                                                      tmp_path):
     """r4 verdict finding #2: the PUBLIC FilterTable.load/from_df on a
@@ -390,10 +362,10 @@ def test_checkpoint_resume(spark, token_df, tmp_path):
     # simulate a killed job: only shards 0..2 committed
     partial = spark.read.parquet(path_full).where(F.col("shard_id") < 3)
     partial.write.parquet(path_resume)
-    resumed = D.build_filter_table(keys, path_resume, kind="bfuse8", n_shards=8)
+    D.build_filter_table(keys, path_resume, kind="bfuse8", n_shards=8)
 
     full = {r["shard_id"]: r for r in spark.read.parquet(path_full).collect()}
-    res = {r["shard_id"]: r for r in resumed.collect()}
+    res = {r["shard_id"]: r for r in spark.read.parquet(path_resume).collect()}
     assert set(full) == set(res)
     for sid in full:
         assert full[sid]["seed"] == res[sid]["seed"]
@@ -421,6 +393,7 @@ def test_build_filter_table_keydef_guard(spark, token_df, tmp_path):
     with pytest.raises(ValueError, match="key-definition mismatch"):
         D.build_filter_table(keys, p1, kind="bfuse8", n_shards=4,
                              key_def=D.shingle_key_def(5))
+    assert D._read_keydef(p1) == tag8  # sidecar NOT overwritten
 
     # legacy table (no stamp) + explicit key_def: unverifiable -> raise
     p2 = os.path.join(str(tmp_path), "legacy")
@@ -430,25 +403,6 @@ def test_build_filter_table_keydef_guard(spark, token_df, tmp_path):
                              key_def=tag8)
     # legacy + key_def=None keeps working (both unversioned)
     D.build_filter_table(keys, p2, kind="bfuse8", n_shards=4)
-
-    # r4 advice #2: resume=False still APPENDS to an existing table, so
-    # the stamp must govern it too — previously the guard read the stamp
-    # only under resume=True, letting resume=False both mix definitions
-    # and overwrite the sidecar with the new tag
-    with pytest.raises(ValueError, match="key-definition mismatch"):
-        D.build_filter_table(keys, p1, kind="bfuse8", n_shards=4,
-                             resume=False, key_def=D.shingle_key_def(5))
-    assert D._read_keydef(p1) == tag8  # sidecar NOT overwritten
-    # resume=False onto a non-empty UNSTAMPED table with an explicit
-    # key_def is equally unverifiable
-    with pytest.raises(ValueError, match="no key-definition stamp"):
-        D.build_filter_table(keys, p2, kind="bfuse8", n_shards=4,
-                             resume=False, key_def=tag8)
-    # resume=False on a FRESH path with a key_def stamps and builds
-    p3 = os.path.join(str(tmp_path), "fresh_norese")
-    D.build_filter_table(keys, p3, kind="bfuse8", n_shards=4,
-                         resume=False, key_def=tag8)
-    assert D._read_keydef(p3) == tag8
 
 
 def test_skew_defusal_plan(spark, token_df):
@@ -470,12 +424,11 @@ def test_staged_build_equals_oneshot(spark, token_df, tmp_path):
     keys = D.doc_keys(token_df).select("key")
     one = {r["shard_id"]: (r["seed"], r["n_keys"], bytes(r["fingerprints"]))
            for r in D.build_filter_df(
-               keys, kind="bfuse8", n_shards=4,
-               uniform_random=False).collect()}
+               keys, kind="bfuse8", n_shards=4).collect()}
     staged = {r["shard_id"]: (r["seed"], r["n_keys"], bytes(r["fingerprints"]))
               for r in D.build_filter_df_staged(
-                  keys, str(tmp_path / "stage"), kind="bfuse8", n_shards=4,
-                  uniform_random=False).collect()}
+                  keys, str(tmp_path / "stage"), kind="bfuse8",
+                  n_shards=4).collect()}
     assert staged == one
 
 
@@ -500,25 +453,6 @@ def test_staged_build_one_shard_per_task(spark, tmp_path):
         lambda rows: [r.shard_id for r in rows]).collect()
     assert all(len(t) == 1 for t in per_task), per_task
     assert sorted(t[0] for t in per_task) == list(range(16))
-
-
-def test_staged_resumable_table(spark, token_df, tmp_path):
-    """Checkpoint-resume through the staged path: half-committed table +
-    staged resume == clean build, byte-identical shards."""
-    keys = D.doc_keys(token_df).select("key")
-    clean = {r["shard_id"]: bytes(r["fingerprints"])
-             for r in D.build_filter_df(keys, kind="bfuse8", n_shards=4,
-                                        uniform_random=False).collect()}
-    path = str(tmp_path / "tbl")
-    # pretend shards 0 and 1 were committed by an interrupted run
-    full = D.build_filter_df(keys, kind="bfuse8", n_shards=4,
-                             uniform_random=False)
-    full.where(F.col("shard_id") < 2).write.parquet(path)
-    out = D.build_filter_table(keys, path, kind="bfuse8", n_shards=4,
-                               stage_dir=str(tmp_path / "stage"),
-                               uniform_random=False)
-    got = {r["shard_id"]: bytes(r["fingerprints"]) for r in out.collect()}
-    assert got == clean
 
 
 def test_probe_staged_counts_and_members(spark, tmp_path):
@@ -730,18 +664,55 @@ def test_build_refuses_non_integer_keys(spark, tmp_path, cast):
             build()
 
 
-@pytest.mark.parametrize("kind", ["bfuse8", "xor8"])
+@pytest.mark.parametrize("kind", ["bfuse8", "xor8", "fuse8"])
 def test_stored_table_carries_its_shard_count(spark, tmp_path, kind):
     """A stored table whose top shards hold no key loads with the shard
-    count it was built with: every shard gets a row. Inferring the count
-    from the highest non-empty shard id probed 16-shard keys with a
-    2-shard prefix and missed half of them."""
-    keys = np.array([1, 2, 1 << 60, (1 << 60) + 5], dtype=np.int64)
-    df = spark.createDataFrame([(int(k),) for k in keys], "key long")
-    for stage in (None, str(tmp_path / "stage")):
-        path = str(tmp_path / f"t{stage is None}")
-        D.build_filter_table(df, path, kind=kind, n_shards=16,
-                             stage_dir=stage)
-        table = D.FilterTable.load(spark, path)
-        assert table.n_shards == 16 and sorted(table.rows) == list(range(16))
-        assert table.contains_np(keys).all()
+    count it was built with: every shard gets a row, an empty one a
+    zero-slot row (the fuse family cannot build an empty filter).
+    Inferring the count from the highest non-empty shard id probed
+    16-shard keys with a 2-shard prefix and missed half of them."""
+    # keys in shards 0 and 1 of 16 only, ~250K each: fuse peels reliably
+    # only from ~200K keys
+    df = spark.range(500_000).select(
+        F.shiftrightunsigned(F.xxhash64("id"), 3).alias("key"))
+    keys = df.toArrow().column("key").to_numpy()
+    path = str(tmp_path / "t")
+    D.build_filter_table(df, path, kind=kind, n_shards=16)
+    table = D.FilterTable.load(spark, path)
+    assert table.n_shards == 16 and sorted(table.rows) == list(range(16))
+    assert {s for s, r in table.rows.items() if r["num_slots"]} == {0, 1}
+    assert table.contains_np(keys).all()
+    strangers = spark.range(2000).select(
+        F.xxhash64("id").alias("key"))  # every shard, mostly empty ones
+    for via_files in (False, True):
+        udf = table.contains_udf(spark, via_files=via_files)
+        assert df.where(udf("key")).count() == keys.size
+        assert strangers.where(udf("key")).count() < 2000 * 0.02
+
+
+def test_fresh_table_builds_run_no_read_back(spark, tmp_path):
+    """A fresh stored build runs only its write: the filter table's one
+    shuffle stage and write (two jobs under AQE), the sketch table's
+    likewise. Returning ``spark.read.parquet(path)`` added a schema
+    inference job that callers paid for even when they dropped it."""
+    from xorf_spark.sketches import build_sketch_table
+
+    sc = spark.sparkContext
+    keys = spark.range(5000).select(F.xxhash64("id").alias("key"))
+    builds = {
+        "filter": lambda: D.build_filter_table(
+            keys, str(tmp_path / "f"), n_shards=4),
+        "sketch": lambda: build_sketch_table(
+            keys, "key", "hll", str(tmp_path / "s"), {"p": 10},
+            n_buckets=4),
+    }
+    for name, build in builds.items():
+        group = f"fresh-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 2, (name, sorted(jobs))
+        assert out is None

@@ -107,3 +107,26 @@ spark.stop()
                        capture_output=True, text=True, timeout=300)
     assert "PYFILES_OK" in r.stdout, (r.stdout[-2000:], r.stderr[-2000:])
 
+
+
+def test_packaged_zip_mirrors_package():
+    """The tracked ``dist/xorf_spark.zip`` (spark-submit ``--py-files``)
+    holds exactly the package's ``.py`` files, byte for byte. Regenerate
+    it with ``scripts/make_pyfiles.sh`` after changing the library."""
+    import zipfile
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tree = {}
+    for root, _dirs, files in os.walk(os.path.join(repo, "xorf_spark")):
+        if "__pycache__" in root:
+            continue
+        for f in files:
+            if f.endswith(".py"):
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    tree[os.path.relpath(p, repo)] = fh.read()
+    with zipfile.ZipFile(os.path.join(repo, "dist", "xorf_spark.zip")) as z:
+        packed = {n: z.read(n) for n in z.namelist()}
+    stale = sorted(n for n in set(tree) | set(packed)
+                   if tree.get(n) != packed.get(n))
+    assert not stale, f"dist/xorf_spark.zip differs from the tree: {stale}"

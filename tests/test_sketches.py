@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from xorf_spark.kernels import mix64
@@ -1077,3 +1079,82 @@ def test_sketch_from_bytes_corruption_fuzz_contract():
                     s2.quantile(0.5)
             except (ValueError, NotImplementedError):
                 pass
+
+
+_KEYED_PARAMS = {"hll": {"p": 10}, "cms": {"width": 256, "depth": 3},
+                 "bloom": {"n_bits": 4096, "k": 3}, "mg": {"k": 512},
+                 "theta": {"k": 512}}
+_INT_BITS = {"byte": 8, "short": 16, "int": 32, "long": 64}
+
+
+def _sketch_bytes(spark, df, kind, stage):
+    """The sketch state each keyed entry point builds over ``df.key``:
+    one-shot, staged, grouped (one group) and the bucket lineage table
+    (per-bucket payloads, so the bucket of every key shows)."""
+    from xorf_spark.sketches import sketch_agg_staged
+
+    params = _KEYED_PARAMS[kind]
+    grouped = grouped_sketch(df.withColumn("g", F.lit(0)), ["g"], "key",
+                             kind, params).collect()
+    build_sketch_table(df, "key", kind, f"{stage}/table", params,
+                       n_buckets=8)
+    return {
+        "agg": sketch_agg(df, "key", kind, params).to_bytes(),
+        "staged": sketch_agg_staged(df, "key", kind, f"{stage}/spill",
+                                    params).to_bytes(),
+        "grouped": [bytes(r["payload"]) for r in grouped],
+        "table": {r["part_id"]: bytes(r["payload"]) for r in
+                  spark.read.parquet(f"{stage}/table").collect()},
+    }
+
+
+@st.composite
+def _typed_sketch_input(draw):
+    """A keyed kind, an integer Spark type and values spanning the type's
+    whole range, negatives included."""
+    kind = draw(st.sampled_from(sorted(_KEYED_PARAMS)))
+    name = draw(st.sampled_from(sorted(_INT_BITS)))
+    half = 1 << (_INT_BITS[name] - 1)
+    vals = draw(st.lists(st.integers(-half, half - 1), min_size=1,
+                         max_size=200))
+    return kind, name, vals
+
+
+@settings(max_examples=6, deadline=None)
+@given(case=_typed_sketch_input())
+@example(case=("hll", "int", [-(1 << 31), -5, 7, (1 << 28) + 3,
+                              (1 << 31) - 1]))
+def test_sketch_key_types_widen_to_long(spark, tmp_path_factory, case):
+    """byte, short and int key columns give every keyed sketch entry
+    point the bytes of the same keys as long. The lineage table's bucket
+    shifted an int column by (64 - p) mod 32, so its buckets differed."""
+    kind, name, vals = case
+    rows = [(v,) for v in vals]
+    typed = _sketch_bytes(spark, spark.createDataFrame(rows, f"key {name}"),
+                          kind, str(tmp_path_factory.mktemp("typed")))
+    want = _sketch_bytes(spark, spark.createDataFrame(rows, "key long"),
+                         kind, str(tmp_path_factory.mktemp("long")))
+    assert typed == want
+
+
+@pytest.mark.parametrize("cast", ["double", "float", "decimal(20,0)",
+                                  "string"])
+def test_keyed_sketches_refuse_non_integer_keys(spark, tmp_path, cast):
+    """A keyed sketch of a float, decimal or string column raises before
+    any Spark job, naming the column. The staged fold truncated doubles
+    to int64, the one-shot fold cast them to uint64."""
+    from xorf_spark.sketches import partial_sketches, sketch_agg_staged
+
+    df = spark.range(100).select(F.col("id").cast(cast).alias("key"))
+    for kind, params in _KEYED_PARAMS.items():
+        for build in (
+                lambda: partial_sketches(df, "key", kind, params),
+                lambda: sketch_agg(df, "key", kind, params),
+                lambda: sketch_agg_staged(df, "key", kind,
+                                          str(tmp_path / "st"), params),
+                lambda: grouped_sketch(df, [], "key", kind, params),
+                lambda: build_sketch_table(df, "key", kind,
+                                           str(tmp_path / "t"), params)):
+            with pytest.raises(TypeError, match="key column 'key'"):
+                build()
+    assert not (tmp_path / "t").exists()  # refused before any write

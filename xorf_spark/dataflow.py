@@ -251,25 +251,40 @@ def pick_n_shards(n_keys: int,
     return 1 << max(0, (want - 1).bit_length())
 
 
+def _shard_count(keys_df: DataFrame, key_col: str, n_shards: int | None,
+                 target: int = DEFAULT_TARGET_KEYS_PER_SHARD) -> int:
+    """``n_shards``, or when None the ``pick_n_shards`` count for the
+    non-null keys: the raw count, an upper bound on the distinct count,
+    at the price of one count job and no shuffle."""
+    if n_shards is not None:
+        return n_shards
+    return pick_n_shards(keys_df.where(_key_col(
+        keys_df, key_col).isNotNull()).count(), target)
+
+
 # ---------------------------------------------------------------------------
 # Distributed build
 # ---------------------------------------------------------------------------
 
 def _build_shard_row(kind: str, fp_bits: int, shard_id: int, keys: np.ndarray,
-                     uniform_random: bool, t0: float) -> dict | None:
-    """The shard's row; None for an empty shard of the fuse family, which
-    cannot build an empty filter (xor and bfuse can)."""
-    if kind.startswith("fuse") and not keys.size:
-        return None
+                     t0: float) -> dict:
+    """The shard's row. An empty shard gets a zero-slot row (no
+    fingerprints), which probes False for every key: the fuse family
+    cannot build an empty filter at all."""
+    if not keys.size:
+        return {"shard_id": shard_id, "kind": kind, "seed": 0,
+                "block_length": None, "segment_length": None,
+                "segment_length_mask": None, "segment_count_length": None,
+                "fingerprints": b"", "n_keys": 0, "num_slots": 0,
+                "retries": 0, "duplicates": 0, "peel_rounds": 0,
+                "build_secs": time.time() - t0}
     if kind.startswith("xor"):
         r = B.build_xor(np.unique(keys), fp_bits, check_distinct=False)
     elif kind.startswith("bfuse"):
         # per-shard deterministic fp-init seed for resumability
-        r = B.build_binary_fuse(keys, fp_bits, uniform_random=uniform_random,
-                                fp_seed=0xC0FFEE ^ shard_id)
+        r = B.build_binary_fuse(keys, fp_bits, fp_seed=0xC0FFEE ^ shard_id)
     elif kind.startswith("fuse"):
         r = B.build_fuse(np.unique(keys), fp_bits, check_distinct=False,
-                         uniform_random=uniform_random,
                          fp_seed=0xC0FFEE ^ shard_id)
     else:
         raise ValueError(f"unknown filter kind {kind}")
@@ -305,7 +320,7 @@ _PA_SHARD_SCHEMA = pa.schema([
 ])
 
 
-def _build_shard_arrow_fn(kind: str, uniform_random: bool = True):
+def _build_shard_arrow_fn(kind: str):
     """groupBy().applyInArrow kernel: pyarrow → numpy is zero-copy for the
     int64 key column (no pandas materialization — that conversion costs more
     than the construction itself at 64M-key scale)."""
@@ -315,17 +330,17 @@ def _build_shard_arrow_fn(kind: str, uniform_random: bool = True):
         t0 = time.time()
         keys = _np_keys(table.column("key"))
         shard_id = int(table.column("shard_id")[0].as_py()) if table.num_rows else 0
-        row = _build_shard_row(kind, fp_bits, shard_id, keys, uniform_random, t0)
-        return pa.Table.from_pylist([row] if row else [],
-                                    schema=_PA_SHARD_SCHEMA)
+        return pa.Table.from_pylist(
+            [_build_shard_row(kind, fp_bits, shard_id, keys, t0)],
+            schema=_PA_SHARD_SCHEMA)
 
     return build_shard
 
 
 def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
                     n_shards: int | None = None, key_col: str = "key",
-                    target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
-                    uniform_random: bool = True) -> DataFrame:
+                    target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD
+                    ) -> DataFrame:
     """Lazy shard-table DataFrame for a distributed filter build.
 
     ``keys_df`` is any DataFrame with a long ``key_col`` (byte, short and
@@ -343,18 +358,15 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
     Only shards that receive a key get a row; pass ``n_shards`` to
     ``FilterTable.from_df``.
     """
-    if n_shards is None:
-        n_shards = pick_n_shards(keys_df.where(_key_col(
-            keys_df, key_col).isNotNull()).count(), target_keys_per_shard)
-    return _build_df(keys_df, key_col, n_shards, kind, uniform_random)
+    n_shards = _shard_count(keys_df, key_col, n_shards, target_keys_per_shard)
+    return _build_df(keys_df, key_col, n_shards, kind)
 
 
 def _build_df(keys_df: DataFrame, key_col: str, n_shards: int, kind: str,
-              uniform_random: bool = True,
               every_shard: bool = False) -> DataFrame:
     """The plan of :func:`build_filter_df`. With ``every_shard``, one
     NULL-key row per shard id rides the shuffle, so every id in
-    ``range(n_shards)`` gets a row (an empty shard an empty filter): a
+    ``range(n_shards)`` gets a row (an empty shard a zero-slot one): a
     stored table whose top shards hold no key still carries its shard
     count."""
     sharded = (keys_df.select(_key_col(keys_df, key_col).alias("key"))
@@ -366,55 +378,17 @@ def _build_df(keys_df: DataFrame, key_col: str, n_shards: int, kind: str,
                 F.lit(None).cast("long").alias("key"),
                 F.col("id").cast("int").alias("shard_id")))
     return (sharded.repartition(n_shards, "shard_id").groupBy("shard_id")
-            .applyInArrow(_build_shard_arrow_fn(kind, uniform_random),
-                          SHARD_SCHEMA))
-
-
-def _make_batch_dedup():
-    """Factory (by-value pickling) for the optional per-PARTITION
-    ``np.unique`` pre-dedup in :func:`_stage_keys`. Duplicates of a key
-    always share a (shard, salt) partition — both are functions of the
-    key — so a whole-partition dedup removes ALL duplicate mass (per-
-    BATCH dedup does not: duplicates of a key are spread across the
-    partition's Arrow batches and almost never meet inside one — A/B'd,
-    BENCH/ROUND5_NOTES.md). Memory: the partition's keys resident once
-    (~8B/row; bounded by the staged-shard sizing, same order as the
-    build stage's own scratch). shard_id is a function of the key, so
-    uniquing keys alone is exact."""
-    def dedup_batches(batches):
-        import numpy as _np
-        import pyarrow as _pa
-
-        ks, ss = [], []
-        for b in batches:
-            ks.append(b.column("key").to_numpy(zero_copy_only=False))
-            ss.append(b.column("shard_id").to_numpy(zero_copy_only=False))
-        if not ks:
-            return
-        k = _np.concatenate(ks)
-        s = _np.concatenate(ss)
-        uk, idx = _np.unique(k, return_index=True)
-        yield _pa.record_batch(
-            [_pa.array(uk), _pa.array(s[idx])], names=["key", "shard_id"])
-
-    return dedup_batches
+            .applyInArrow(_build_shard_arrow_fn(kind), SHARD_SCHEMA))
 
 
 def _stage_keys(keys_df: DataFrame, stage_dir: str, n_shards: int,
-                key_col: str = "key", pre_dedup: bool = False) -> list[int]:
+                key_col: str = "key") -> list[int]:
     """Shared staging stage: project non-null keys → hash-prefix shard id →
     ``write.partitionBy(shard_id)`` parquet (pure JVM), then return the
     shard ids that actually materialized. Used by both the staged build
     and the staged probe so the layout and the empty-input handling can
-    never drift apart.
-
-    ``pre_dedup`` inserts a post-shuffle Arrow ``np.unique`` batch-dedup
-    before the parquet encode. It breaks the pure-JVM property of the
-    spill (a JVM→python→JVM detour) and pays ONLY when the key stream
-    carries real duplicate mass — A/B'd in BENCH/ROUND5_NOTES.md: ~2x
-    spill shrink at dup-factor 4, pure overhead at the bench corpus's
-    dup-factor 1.0. Never used by probe staging (probe counts must keep
-    multiplicity)."""
+    never drift apart. Duplicates stay: probe counts keep multiplicity,
+    and the bfuse build sizes by the raw count."""
     spark = keys_df.sparkSession
     # write parallelism: repartitioning to exactly n_shards caps the
     # parquet-encode stage at n_shards tasks (16 writers on a 32-core
@@ -431,15 +405,11 @@ def _stage_keys(keys_df: DataFrame, stage_dir: str, n_shards: int,
     # narrows by the 4-byte shard_id column (measured 5-7% on the
     # 54M-key token spill warm, ~40% cold; BENCH/ROUND6_NOTES.md)
     shard_expr = shard_id_col("key", n_shards)
-    staged = (keys_df.select(_key_col(keys_df, key_col).alias("key"))
-              .where(F.col("key").isNotNull())
-              .repartition(n_shards * salt, shard_expr,
-                           F.pmod(F.col("key"), F.lit(salt)))
-              .withColumn("shard_id", shard_expr))
-    if pre_dedup:
-        staged = staged.mapInArrow(_make_batch_dedup(),
-                                   "key long, shard_id int")
-    (staged
+    (keys_df.select(_key_col(keys_df, key_col).alias("key"))
+     .where(F.col("key").isNotNull())
+     .repartition(n_shards * salt, shard_expr,
+                  F.pmod(F.col("key"), F.lit(salt)))
+     .withColumn("shard_id", shard_expr)
      .write.mode("overwrite")
      # uniform 64-bit keys are incompressible: snappy + dictionary yield
      # byte-identical file sizes (measured: 416MB either way at 54M keys)
@@ -573,9 +543,7 @@ def _one_row_per_task(spark: SparkSession, **columns: list) -> DataFrame:
 
 def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
                            kind: str = "bfuse8", n_shards: int | None = None,
-                           key_col: str = "key",
-                           uniform_random: bool = True,
-                           pre_dedup: bool = False) -> DataFrame:
+                           key_col: str = "key") -> DataFrame:
     """Two-stage build that decouples the shuffle from the Python kernel:
 
     1. pure-JVM stage: project → repartition by hash-prefix shard →
@@ -585,37 +553,24 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
        task per shard id reads ITS OWN parquet files directly with
        pyarrow and runs the numpy construction.
 
-    Why: feeding a shuffled 64-bit key stream from the JVM into Python
-    workers is the measured bottleneck of the one-shot build (and in
-    local mode it also triggers a JVM-global slowdown of later python-feed
-    stages — BENCH/BASELINE.md "Reading these numbers"). Staging through
-    parquet turns that feed into a columnar file read on the worker side
-    (page-cache-speed locally; S3/HDFS at cluster scale, where the
-    materialization barrier also buys elastic retry/rescheduling between
-    the two stages — the classic staged-pipeline trade).
-
-    ``pre_dedup`` (default off): batch-``np.unique`` inside the spill
-    writer (see ``_stage_keys``). Membership is unchanged (the builder
-    drops duplicates exactly either way), but the bfuse ARRAY SIZING —
-    which follows the reference in using the raw count including
-    duplicates — then sees the deduped count, i.e. the filter is sized
-    as if built from the deduped stream. Worth it only for genuinely
-    duplicate-heavy key streams (BENCH/ROUND5_NOTES.md A/B).
+    Staging through parquet turns the JVM→python key feed into a
+    columnar file read on the worker side, and the materialization
+    barrier buys retry between the two stages. Since the Arrow feed's
+    per-row byte accounting is skipped (``_tune_arrow_feed``), the
+    one-shot build is the faster one: 2.77 s against 4.48 s for this
+    path in ``bench.py`` (BENCH_r06). Shards are byte-identical to
+    :func:`build_filter_df`'s.
     """
-    if n_shards is None:
-        n_shards = pick_n_shards(
-            keys_df.where(_key_col(keys_df, key_col).isNotNull()).count())
-    listed = _stage_keys(keys_df, stage_dir, n_shards, key_col,
-                         pre_dedup=pre_dedup)
+    n_shards = _shard_count(keys_df, key_col, n_shards)
+    listed = _stage_keys(keys_df, stage_dir, n_shards, key_col)
     return _build_from_shard_dirs(keys_df.sparkSession, stage_dir,
                                   sorted(listed), set(listed), n_shards,
-                                  kind, uniform_random)
+                                  kind)
 
 
 def _build_from_shard_dirs(spark: SparkSession, key_dir: str,
                            shard_ids: list[int], listed: set[int],
                            n_shards: int, kind: str,
-                           uniform_random: bool = True,
                            distinct: bool = False) -> DataFrame:
     """Shuffle-free build stage over a shard-partitioned key directory
     (``key_dir/shard_id=N/*.parquet``, the layout ``_stage_keys`` writes
@@ -625,7 +580,7 @@ def _build_from_shard_dirs(spark: SparkSession, key_dir: str,
 
     ``listed`` holds the shard ids whose directory the driver saw; a
     listed shard with no parquet file raises (see ``_make_stage_lister``),
-    an unlisted one builds its empty filter. Every key read must carry its
+    an unlisted one gets a zero-slot row. Every key read must carry its
     directory's hash prefix, else the task raises: a directory written
     under another ``n_shards`` would otherwise be half skipped (false
     negatives). ``distinct`` runs ``np.unique`` first, for directories
@@ -661,10 +616,9 @@ def _build_from_shard_dirs(spark: SparkSession, key_dir: str,
                         f"than {n_shards}")
                 if distinct:
                     keys = np.unique(keys)
-                row = _build_shard_row(kind, fp_bits, sid, keys,
-                                       uniform_random, time.time())
-                yield pa.RecordBatch.from_pylist([row] if row else [],
-                                                 schema=_PA_SHARD_SCHEMA)
+                yield pa.RecordBatch.from_pylist(
+                    [_build_shard_row(kind, fp_bits, sid, keys, time.time())],
+                    schema=_PA_SHARD_SCHEMA)
 
     return tasks.mapInArrow(build_from_files, SHARD_SCHEMA)
 
@@ -756,29 +710,23 @@ def _guard_stamped_append(path: str, stamp: str | None, declared,
 
 def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
                        n_shards: int | None = None, key_col: str = "key",
-                       resume: bool = True, stage_dir: str | None = None,
                        key_def: str | None = None,
-                       target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
-                       uniform_random: bool = True) -> DataFrame:
-    """Checkpoint-resumable build: writes the shard table as parquet.
+                       target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD
+                       ) -> None:
+    """Checkpoint-resumable build: writes the shard table as parquet at
+    ``path``; read it with ``FilterTable.load`` or ``spark.read.parquet``.
 
     Shards are append-only and deterministic (fixed seed schedule from
     splitmix64 state 1 + per-shard fp-init seed), so a restarted job
     anti-joins the already-committed shard ids and only builds the missing
-    ones — the final table is identical to an uninterrupted run.
-
-    Pass ``stage_dir`` to route the pending shards through the stages of
-    ``build_filter_df_staged`` (JVM shuffle → parquet stage + shuffle-free
-    python file-read stage — the faster path; see that function). Resume
-    semantics are identical: pending keys are filtered before staging.
-    Either way every shard id in ``range(n_shards)`` gets a row, empty
-    shards included (except for the fuse family, which cannot build an
-    empty filter), so ``FilterTable.load`` infers the shard count.
+    ones — the final table is identical to an uninterrupted run. Every
+    shard id in ``range(n_shards)`` gets a row, an empty shard a
+    zero-slot one, so ``FilterTable.load`` infers the shard count.
 
     ``key_def`` names the DEFINITION of the key column (e.g.
     ``shingle_key_def(8)`` for :func:`shingle_keys` output). It is
     stamped into a ``_XORF_KEYDEF`` sidecar on first build and checked on
-    every resume/append: resuming a table built under a different key
+    every resume: resuming a table built under a different key
     definition would mark old-definition shards "done" and build the rest
     under the new one — a mixed-key table whose probes (which derive keys
     with the CURRENT definition) silently miss the old shards, violating
@@ -788,50 +736,36 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
     fresh path, or keep ``key_def=None`` if the definition truly never
     changed).
     """
-    spark = keys_df.sparkSession
-
     def build(done_ids: set[int]) -> DataFrame:
-        n = n_shards
-        if n is None:
-            n = pick_n_shards(keys_df.select(_key_col(
-                keys_df, key_col)).distinct().count(), target_keys_per_shard)
+        n = _shard_count(keys_df, key_col, n_shards, target_keys_per_shard)
         pending = keys_df
         if done_ids:
             pending = keys_df.where(~shard_id_col(
                 _key_col(keys_df, key_col), n).isin(list(done_ids)))
-        if stage_dir is not None:
-            listed = set(_stage_keys(pending, stage_dir, n, key_col))
-            return _build_from_shard_dirs(spark, stage_dir, list(range(n)),
-                                          listed, n, kind, uniform_random)
-        return _build_df(pending, key_col, n, kind, uniform_random,
-                         every_shard=True)
+        return _build_df(pending, key_col, n, kind, every_shard=True)
 
-    _append_shards(spark, path, build, resume=resume, key_def=key_def)
-    return spark.read.parquet(path)
+    _append_shards(keys_df.sparkSession, path, build, key_def=key_def)
 
 
 def _append_shards(spark: SparkSession, path: str, build,
-                   resume: bool = True, key_def: str | None = None) -> None:
+                   key_def: str | None = None) -> None:
     """The resumable write behind :func:`build_filter_table` and the
     streaming refresh: read the shard ids already committed at ``path``
     (``done_ids``), check the ``key_def`` stamp, then append
     ``build(done_ids)``'s rows for the other shards."""
-    done_ids: set[int] = set()
-    if resume:
-        try:
-            done = spark.read.parquet(path).select("shard_id").distinct()
-            done_ids = {r.shard_id for r in done.collect()}
-        except AnalysisException:
-            # only path-not-found means "no table yet"; a transient FS
-            # error must propagate (duplicate shard rows are benign here —
-            # probe loaders key by shard_id — but rebuilding every shard
-            # on a flaky listing is still wrong)
-            done_ids = set()
+    try:
+        done = spark.read.parquet(path).select("shard_id").distinct()
+        done_ids = {r.shard_id for r in done.collect()}
+    except AnalysisException:
+        # only path-not-found means "no table yet"; a transient FS
+        # error must propagate (duplicate shard rows are benign here —
+        # probe loaders key by shard_id — but rebuilding every shard
+        # on a flaky listing is still wrong)
+        done_ids = set()
     # shared guard (r4 advice #2 lineage): sidecar read unconditionally,
-    # mismatch/unstamped refusal, resume=False existence probe
+    # mismatch/unstamped refusal
     should_stamp = _guard_stamped_append(
-        path, key_def, key_def, resume, bool(done_ids),
-        lambda: spark.read.parquet(path).limit(1).take(1),
+        path, key_def, key_def, True, bool(done_ids), None,
         lambda existing: (
             f"key-definition mismatch appending to {path!r}: table was "
             f"built under {existing!r}, current build derives "
@@ -858,7 +792,10 @@ def _append_shards(spark: SparkSession, path: str, build,
 # ---------------------------------------------------------------------------
 
 def _filter_from_row(row) -> tuple:
-    """(kind, probe-callable) from a shard row without copying fingerprints."""
+    """Probe callable from a shard row without copying fingerprints. A
+    zero-slot row (an empty shard) answers False for every key."""
+    if not len(row["fingerprints"]):
+        return lambda keys: np.zeros(keys.size, dtype=bool)
     kind = row["kind"]
     fp_bits = _fp_bits(kind)
     raw = row["fingerprints"]
@@ -931,8 +868,9 @@ class FilterTable:
 
         ``n_shards`` defaults to the power of two above the highest shard
         id. Tables written by ``build_filter_table`` and the streaming
-        refresh hold a row per shard, empty ones included, so the
-        default is exact for them; for ``build_filter_df`` output pass it.
+        refresh hold a row per shard, a zero-slot one for an empty shard,
+        so the default is exact for them; for ``build_filter_df`` output
+        pass it.
         """
         if check_size:
             limit = (MAX_COLLECT_FP_BYTES if max_collect_fp_bytes is None
@@ -1099,7 +1037,9 @@ def _ship_fp_files(spark: SparkSession, rows: dict[int, dict]
     ``SparkContext.addFile`` (fetched once per executor NODE, then
     ``np.memmap``-ed read-only by every worker process — one page-cache
     copy per node instead of N heap copies). Returns
-    ``({shard_id: descriptor_row_with___file}, tag)``."""
+    ``({shard_id: descriptor_row_with___file}, tag)``. A zero-slot row
+    ships no file (an empty file cannot be mmapped): it keeps its empty
+    fingerprints instead of a ``__file``."""
     import tempfile
     import uuid
 
@@ -1108,12 +1048,15 @@ def _ship_fp_files(spark: SparkSession, rows: dict[int, dict]
     tmpdir = tempfile.mkdtemp(prefix=f"xorf_fps_{tag}_")
     meta: dict[int, dict] = {}
     for sid, row in rows.items():
+        if not len(row["fingerprints"]):
+            meta[sid] = row
+            continue
+        meta[sid] = {k: row[k] for k in row if k != "fingerprints"}
         fname = f"xorf_{tag}_{sid}.bin"
         path = f"{tmpdir}/{fname}"
         with open(path, "wb") as fh:
             fh.write(row["fingerprints"])
         sc.addFile(path)
-        meta[sid] = {k: row[k] for k in row if k != "fingerprints"}
         meta[sid]["__file"] = fname
     return meta, tag
 

@@ -36,7 +36,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -49,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from .kernels import KEYED_KINDS, SKETCH_KINDS, make_sketch, sketch_from_bytes
-from ..dataflow import _arrow_probe_udf
+from ..dataflow import _arrow_probe_udf, _key_col, _np_keys, shard_id_col
 
 #: One row per partial sketch (per input partition, or per bucket in the
 #: resumable path). ``payload`` is the self-describing serialized sketch.
@@ -92,6 +92,14 @@ def _check_kind(kind: str) -> None:
             f"unknown sketch kind {kind!r}; one of {SKETCH_KINDS}")
 
 
+def _sketch_col(df: DataFrame, col: str, kind: str) -> Column:
+    """``df``'s column ``col`` as a sketch input: a keyed kind's column
+    goes through ``dataflow._key_col`` (byte, short and int widen to long,
+    any other type raises ``TypeError`` naming the column); a valued
+    kind's column passes as is."""
+    return _key_col(df, col) if kind in KEYED_KINDS else F.col(col)
+
+
 def partial_sketches(df: DataFrame, col: str, kind: str,
                      params: dict | None = None,
                      weight_col: str | None = None) -> DataFrame:
@@ -100,11 +108,12 @@ def partial_sketches(df: DataFrame, col: str, kind: str,
     ``col`` [+ ``weight_col``] cross the Arrow boundary)."""
     _check_kind(kind)
     params = dict(params or {})
-    cols = [F.col(col).alias("v")]
+    cols = [_sketch_col(df, col, kind).alias("v")]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("long").alias("w"))
     proj = df.select(*cols)
     has_w = weight_col is not None
+    keyed = kind in KEYED_KINDS
 
     def fold(batches):
         from pyspark import TaskContext
@@ -114,8 +123,9 @@ def partial_sketches(df: DataFrame, col: str, kind: str,
         n = 0
         for b in batches:
             tb = pa.table(b).drop_null()
-            arr = tb.column("v").combine_chunks().to_numpy(
-                zero_copy_only=False)
+            arr = (_np_keys(tb.column("v")) if keyed else
+                   tb.column("v").combine_chunks().to_numpy(
+                       zero_copy_only=False))
             w = (tb.column("w").combine_chunks().to_numpy(
                 zero_copy_only=False) if has_w else None)
             if arr.size == 0:
@@ -215,7 +225,7 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
     _check_kind(kind)
     params = dict(params or {})
     spark = df.sparkSession
-    cols = [F.col(col).alias("v")]
+    cols = [_sketch_col(df, col, kind).alias("v")]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("long").alias("w"))
     proj = _drop_null_keys(df.select(*cols), "v", kind)
@@ -254,15 +264,11 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
                 t0 = time.time()
                 fsys2, p2 = _pafs2.FileSystem.from_uri(path)
                 tbl = _pq.read_table(p2, filesystem=fsys2)
-                if not keyed:
-                    tbl = tbl.drop_null()
-                arr_col = tbl.column("v").combine_chunks()
                 if keyed:
-                    arr = arr_col.to_numpy(
-                        zero_copy_only=False).astype(
-                            np.int64, copy=False).view(np.uint64)
+                    arr = _np_keys(tbl.column("v"))
                 else:
-                    arr = arr_col.to_numpy(
+                    tbl = tbl.drop_null()
+                    arr = tbl.column("v").combine_chunks().to_numpy(
                         zero_copy_only=False).astype(np.float64, copy=False)
                 w = (tbl.column("w").combine_chunks().to_numpy(
                     zero_copy_only=False) if has_w else None)
@@ -346,7 +352,8 @@ def grouped_sketch(df: DataFrame, group_cols: list[str], col: str, kind: str,
     byte-identical to the single-phase build (max/sum/or merges)."""
     params = dict(params or {})
     _check_kind(kind)
-    df = _drop_null_keys(df, col, kind)
+    df = _drop_null_keys(df.withColumn(col, _sketch_col(df, col, kind)),
+                         col, kind)
     key_fields = [df.schema[c] for c in group_cols]
     out_schema = StructType(key_fields + [
         StructField("payload", BinaryType(), False),
@@ -411,18 +418,15 @@ def grouped_sketch(df: DataFrame, group_cols: list[str], col: str, kind: str,
 # Checkpoint-resumable sketch table (per-bucket lineage)
 # ---------------------------------------------------------------------------
 
-def bucket_col(col: str, kind: str, n_buckets: int):
-    """Deterministic bucket id for a sketched column. Keyed sketches bucket by
-    the top bits of the (already uniform) 64-bit key — same hash-prefix
-    discipline as the filter shard table; valued sketches bucket by
-    ``pmod(xxhash64(value), n))``."""
-    p = int(math.log2(n_buckets))
-    if 1 << p != n_buckets:
+def bucket_col(df: DataFrame, col: str, kind: str, n_buckets: int) -> Column:
+    """Deterministic bucket id for ``df``'s sketched column ``col``. Keyed
+    sketches bucket by the top bits of the (already uniform) 64-bit key —
+    the filter shard table's ``shard_id_col`` over the ``_key_col``-checked
+    key; valued sketches bucket by ``pmod(xxhash64(value), n))``."""
+    if 1 << int(math.log2(n_buckets)) != n_buckets:
         raise ValueError("n_buckets must be a power of two")
     if kind in KEYED_KINDS:
-        if p == 0:
-            return F.lit(0).cast("int")
-        return F.shiftrightunsigned(F.col(col), 64 - p).cast("int")
+        return shard_id_col(_key_col(df, col), n_buckets)
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
 
 
@@ -467,10 +471,13 @@ def _sketch_table_stamp(kind: str, params: dict, n_buckets: int,
 def build_sketch_table(df: DataFrame, col: str, kind: str, path: str,
                        params: dict | None = None, n_buckets: int = 16,
                        resume: bool = True,
-                       key_def: str | None = None) -> DataFrame:
+                       key_def: str | None = None) -> None:
     """Checkpoint-resumable sketch build: one partial per hash bucket,
     appended to a parquet lineage table ``(part_id, kind, payload, n_rows,
-    build_secs)``. Restarts skip committed buckets.
+    build_secs)`` at ``path``; merge it with :func:`sketch_from_table`.
+    Restarts skip committed buckets. A keyed kind's column goes through
+    ``dataflow._key_col``: byte, short and int widen, other types raise
+    before anything is written.
 
     The resume listing catches ONLY ``AnalysisException`` (path-not-found
     = genuinely no table yet). A transient FS/auth error must propagate:
@@ -493,6 +500,10 @@ def build_sketch_table(df: DataFrame, col: str, kind: str, path: str,
     params = dict(params or {})
     _check_kind(kind)
     spark = df.sparkSession
+    projected = _drop_null_keys(
+        df.select(_sketch_col(df, col, kind).alias(col)), col, kind)
+    bucketed = projected.withColumn(
+        "__bucket", bucket_col(projected, col, kind, n_buckets))
     done: set[int] = set()
     table_seen = False
     if resume:
@@ -529,9 +540,6 @@ def build_sketch_table(df: DataFrame, col: str, kind: str, path: str,
         # non-empty table is left UNSTAMPED — stamping it now would
         # certify a wiring history this build cannot verify.
         _write_keydef(path, stamp)
-    bucketed = _drop_null_keys(
-        df.select(F.col(col).alias(col)), col, kind).withColumn(
-        "__bucket", bucket_col(col, kind, n_buckets))
     if done:
         bucketed = bucketed.where(~F.col("__bucket").isin(list(done)))
     partials = (bucketed.repartition(n_buckets, "__bucket")
@@ -541,7 +549,6 @@ def build_sketch_table(df: DataFrame, col: str, kind: str, path: str,
     if done:
         partials = partials.where(~F.col("part_id").isin(list(done)))
     partials.write.mode("append").parquet(path)
-    return spark.read.parquet(path)
 
 
 def sketch_from_table(spark: SparkSession, path: str):

@@ -164,7 +164,7 @@ def stream_exact_dedup(stream_df: DataFrame, key_col: str = "key",
     # so shiftrightunsigned(key, 64) is the IDENTITY — every distinct
     # key would become its own state entry (defeating the bounded-bucket
     # sizing law) and the bucket column would carry raw keys (same guard
-    # as dataflow.bucket_col; r4 review finding)
+    # as dataflow.shard_id_col)
     bucket = (F.lit(0).cast("long") if p == 0 else
               F.shiftrightunsigned(F.col(key_col), 64 - p).cast("long"))
     cols = [F.col(key_col).alias("key"), bucket.alias("bucket")]
