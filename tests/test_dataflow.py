@@ -716,3 +716,18 @@ def test_fresh_table_builds_run_no_read_back(spark, tmp_path):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) == 2, (name, sorted(jobs))
         assert out is None
+
+
+def test_dataflow_modules_keep_an_arrow_boundary():
+    """The filter and sketch dataflows cross the python boundary in Arrow
+    only: a pandas stage turns a null-bearing long column into float64,
+    which rounds 64-bit keys (silent false negatives, diverged sketch
+    state)."""
+    import inspect
+
+    from xorf_spark.sketches import dataflow as SD
+
+    for mod in (D, SD):
+        src = inspect.getsource(mod)
+        for api in ("applyInPandas", "mapInPandas", "pandas_udf"):
+            assert api not in src, (mod.__name__, api)

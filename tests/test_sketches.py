@@ -5,7 +5,10 @@ error bounds, with merge associativity and checkpoint-resume)."""
 
 from __future__ import annotations
 
+from typing import Iterator, Tuple
+
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -383,16 +386,69 @@ def test_grouped_theta_estimates(spark, keyed_df):
         assert abs(r.estimate - exact[r.grp]) <= bound
 
 
-def test_grouped_sketch_two_phase_matches_single_phase(spark, keyed_df):
-    """The map-side-combine grouped path (no group ever materializes whole)
-    must produce byte-identical keyed-sketch state to the single-phase
-    groupBy build — the law that lets hot groups scale past worker memory."""
-    one = grouped_sketch(keyed_df, ["grp"], "key", "hll", {"p": 12})
-    two = grouped_sketch(keyed_df, ["grp"], "key", "hll", {"p": 12},
-                         two_phase=True)
-    a = {r.grp: (bytes(r.payload), r.n_rows) for r in one.collect()}
-    b = {r.grp: (bytes(r.payload), r.n_rows) for r in two.collect()}
-    assert a == b and len(a) == 4
+def test_grouped_sketch_folds_a_group_across_many_arrow_batches(spark):
+    """grouped_sketch folds a group batch by batch, so a group larger than
+    ``maxRecordsPerBatch`` never materializes whole. Keyed kinds whose
+    merge is max/sum/or/bottom-k (hll, cms, bloom, theta) must give the
+    payload of one local feed of the group's keys; mg below capacity is
+    exact; kll and t-digest stay within their bounds. ``n_rows`` is exact
+    for every kind."""
+    from xorf_spark.sketches import make_sketch
+
+    df = (spark.range(12_050, numPartitions=4)
+          .select(F.xxhash64("id").alias("key"),
+                  F.xxhash64(F.col("id") % 40).alias("item"),
+                  (F.col("id") % 997).cast("double").alias("v"),
+                  F.when(F.col("id") < 12_000, 0).otherwise(1).alias("grp")))
+    rows = {g: [r for r in df.collect() if r.grp == g] for g in (0, 1)}
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1000")
+    try:
+        def n_batches(key: Tuple[pa.Scalar, ...],
+                      batches: Iterator[pa.RecordBatch]
+                      ) -> Iterator[pa.RecordBatch]:
+            yield pa.RecordBatch.from_pydict(
+                {"grp": [key[0].as_py()], "n": [sum(1 for _ in batches)]})
+
+        seen = {r.grp: r.n for r in df.groupBy("grp").applyInArrow(
+            n_batches, "grp long, n long").collect()}
+        assert seen[0] >= 12 and seen[1] == 1, seen
+        for kind, params in (("hll", {"p": 12}),
+                             ("cms", {"width": 1024, "depth": 4}),
+                             ("bloom", {"n_bits": 1 << 16, "k": 5}),
+                             ("theta", {"k": 1024})):
+            out = {r.grp: r for r in grouped_sketch(
+                df, ["grp"], "key", kind, params).collect()}
+            for g, rs in rows.items():
+                keys = np.array([r.key for r in rs],
+                                dtype=np.int64).view(np.uint64)
+                local = make_sketch(kind, **params).add_hashes(keys)
+                assert out[g].n_rows == len(rs), (kind, g)
+                assert bytes(out[g].payload) == local.to_bytes(), (kind, g)
+
+        out = {r.grp: r for r in grouped_sketch(
+            df, ["grp"], "item", "mg", {"k": 64}).collect()}
+        for g, rs in rows.items():
+            mg = sketch_from_bytes(out[g].payload)
+            items, counts = np.unique(np.array([r.item for r in rs]),
+                                      return_counts=True)
+            assert out[g].n_rows == mg.n == len(rs) and mg.dsub == 0
+            assert (mg.estimate_hashes(items) == counts).all(), g
+
+        for kind, params in (("kll", {"k": 400}), ("tdigest", {"delta": 300})):
+            out = {r.grp: r for r in grouped_sketch(
+                df, ["grp"], "v", kind, params).collect()}
+            for g, rs in rows.items():
+                vals = np.array([r.v for r in rs])
+                sk = sketch_from_bytes(out[g].payload)
+                assert out[g].n_rows == len(rs) and sk.n == len(rs)
+                for q in (0.1, 0.5, 0.9):
+                    est = (float(sk.quantiles([q])[0]) if kind == "kll"
+                           else sk.quantile(q))
+                    assert abs((vals <= est).mean() - q) < 0.015, (kind, g, q)
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_bloom_udf_zero_fn_in_where_clause(spark, keyed_df):
@@ -440,8 +496,7 @@ def test_sketch_table_checkpoint_resume(spark, keyed_df, tmp_path):
     # simulate a first run that only committed buckets 0-3
     first = keyed_df.where(
         F.shiftrightunsigned("key", 64 - 3).cast("int") < 4)
-    build_sketch_table(first, "key", "hll", path, {"p": 12}, n_buckets=8,
-                       resume=False)
+    build_sketch_table(first, "key", "hll", path, {"p": 12}, n_buckets=8)
     assert spark.read.parquet(path).count() == 4
     # resumed run: builds only the missing buckets
     build_sketch_table(keyed_df, "key", "hll", path, {"p": 12}, n_buckets=8)
@@ -463,8 +518,7 @@ def test_sketch_table_duplicate_partials_not_double_counted(spark, tmp_path):
           .select(F.pmod(F.xxhash64("id"), F.lit(50)).alias("v")))
     path = str(tmp_path / "cms_partials")
     build_sketch_table(df, "v", "cms", path,
-                       {"width": 2048, "depth": 5}, n_buckets=8,
-                       resume=False)
+                       {"width": 2048, "depth": 5}, n_buckets=8)
     clean = sketch_from_table(spark, path)
     # replayed append: every partial row lands a second time
     tbl = spark.read.parquet(path)
@@ -490,9 +544,8 @@ def test_sketch_table_wiring_stamp_guard(spark, keyed_df, tmp_path):
     resume-under-changed-derivation hazard as the filter table — a resume
     with a different key_def merges two key universes; a different
     n_buckets reinterprets committed part_ids; different params break the
-    merge law. The _XORF_KEYDEF wiring stamp refuses all three, for
-    resume=True AND resume=False appends; legacy unstamped tables refuse
-    an explicit key_def."""
+    merge law. The _XORF_KEYDEF wiring stamp refuses all three; legacy
+    unstamped tables refuse every append."""
     import pytest
 
     path = str(tmp_path / "stamped")
@@ -502,7 +555,7 @@ def test_sketch_table_wiring_stamp_guard(spark, keyed_df, tmp_path):
     build_sketch_table(keyed_df, "key", "hll", path, {"p": 12},
                        n_buckets=8, key_def="shingle/v2/k=8")
     assert spark.read.parquet(path).count() == 8
-    # changed derivation / wiring: loud refusal, resume=True and False
+    # changed derivation / wiring: loud refusal
     for kw in ({"key_def": "shingle/v2/k=5"}, {"params": {"p": 14}},
                {"n_buckets": 16}):
         args = {"params": {"p": 12}, "n_buckets": 8,
@@ -511,10 +564,6 @@ def test_sketch_table_wiring_stamp_guard(spark, keyed_df, tmp_path):
             build_sketch_table(keyed_df, "key", "hll", path,
                                args["params"], n_buckets=args["n_buckets"],
                                key_def=args["key_def"])
-        with pytest.raises(ValueError, match="wiring mismatch"):
-            build_sketch_table(keyed_df, "key", "hll", path,
-                               args["params"], n_buckets=args["n_buckets"],
-                               key_def=args["key_def"], resume=False)
 
     # legacy (pre-stamp) table simulation: data without a sidecar.
     # Unlike the filter table (whose stamp covers ONLY an optional

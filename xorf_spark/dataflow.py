@@ -27,6 +27,7 @@ import math
 import re
 import time
 from collections import OrderedDict
+from typing import Callable
 
 import numpy as np
 import pyarrow as pa
@@ -660,54 +661,6 @@ def _write_keydef(path: str, tag: str) -> None:
         fh.write(tag.encode("utf-8"))
 
 
-def _guard_stamped_append(path: str, stamp: str | None, declared,
-                          resume: bool, table_seen: bool, probe,
-                          mismatch_msg, unstamped_msg,
-                          probe_always: bool = False,
-                          refuse_unstamped_always: bool = False) -> bool:
-    """Shared stamp/refuse flow for append-able versioned tables — filter
-    shard tables here and sketch lineage tables
-    (``sketches.dataflow.build_sketch_table``). One implementation so a
-    guard fix cannot land on one table type and silently miss the other.
-
-    * The sidecar is read UNCONDITIONALLY: appends are governed whether
-      or not this run resumes (``resume=False`` still appends).
-    * ``stamp`` different from an existing sidecar raises
-      ``mismatch_msg(existing)``.
-    * With ``resume=False`` (no done-ids scan proved non-emptiness) the
-      table's existence is probed via ``probe()`` when either
-      ``probe_always`` or a ``declared`` definition makes an unstamped
-      append refusable; path-not-found means "fresh".
-    * A non-empty unstamped table with a ``declared`` definition raises
-      ``unstamped_msg()`` — compatibility can't be proven.
-      ``refuse_unstamped_always`` extends the refusal to ``declared is
-      None``: the sketch table's stamp covers kind/params/n_buckets,
-      which are ALWAYS declared (function arguments), so — unlike the
-      filter table's key-def-only stamp — there is no "nothing was
-      declared, nothing to check" case; an unstamped non-empty sketch
-      table could hold any wiring and appending to it under a changed
-      n_buckets would silently corrupt the merged estimate.
-
-    Returns True when the caller should write the stamp BEFORE its data
-    append (fresh table with a stamp to record); a legacy non-empty
-    table is left unstamped — stamping it would certify a history this
-    build cannot verify.
-    """
-    existing = _read_keydef(path)
-    if existing is not None and stamp != existing:
-        raise ValueError(mismatch_msg(existing))
-    if (not resume and existing is None
-            and (probe_always or declared is not None)):
-        try:
-            table_seen = bool(probe())
-        except AnalysisException:
-            pass
-    if table_seen and existing is None and (declared is not None
-                                            or refuse_unstamped_always):
-        raise ValueError(unstamped_msg())
-    return existing is None and stamp is not None and not table_seen
-
-
 def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
                        n_shards: int | None = None, key_col: str = "key",
                        key_def: str | None = None,
@@ -744,58 +697,73 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
                 _key_col(keys_df, key_col), n).isin(list(done_ids)))
         return _build_df(pending, key_col, n, kind, every_shard=True)
 
-    _append_shards(keys_df.sparkSession, path, build, key_def=key_def)
+    _append_shards(keys_df.sparkSession, path, build, key_def)
 
 
 def _append_shards(spark: SparkSession, path: str, build,
-                   key_def: str | None = None) -> None:
-    """The resumable write behind :func:`build_filter_table` and the
-    streaming refresh: read the shard ids already committed at ``path``
-    (``done_ids``), check the ``key_def`` stamp, then append
-    ``build(done_ids)``'s rows for the other shards."""
+                   stamp: str | None = None, id_col: str = "shard_id",
+                   noun: str = "key-definition") -> None:
+    """The resumable, stamped write behind both lineage tables: filter
+    shard tables (:func:`build_filter_table`, the streaming refresh's
+    versions; ``stamp`` is the ``key_def``) and sketch tables
+    (``sketches.dataflow.build_sketch_table``; ``id_col="part_id"``,
+    ``stamp`` the wiring tag, ``noun="wiring"``). Reads the ids already
+    committed at ``path`` (``done_ids``), checks the ``_XORF_KEYDEF``
+    sidecar, then appends ``build(done_ids)``'s rows for the other ids.
+
+    - The sidecar is read on every call.
+    - A ``stamp`` that differs from the sidecar raises: the table was
+      built under another definition, and mixing the two corrupts what
+      it answers.
+    - A table with committed ids and no sidecar (built before
+      versioning) raises when ``stamp`` is not None: its compatibility
+      cannot be proven.
+    - A fresh table is stamped BEFORE its data: a crash in between leaves
+      a stamped empty table that continues cleanly, whereas data-then-
+      stamp could strand an unstamped table that later appends refuse.
+    """
     try:
-        done = spark.read.parquet(path).select("shard_id").distinct()
-        done_ids = {r.shard_id for r in done.collect()}
+        done = spark.read.parquet(path).select(id_col).distinct()
+        done_ids = {r[0] for r in done.collect()}
     except AnalysisException:
         # only path-not-found means "no table yet"; a transient FS
-        # error must propagate (duplicate shard rows are benign here —
-        # probe loaders key by shard_id — but rebuilding every shard
-        # on a flaky listing is still wrong)
+        # error must propagate (rebuilding every id on a flaky listing
+        # appends duplicates, which double an additive sketch's mass)
         done_ids = set()
-    # shared guard (r4 advice #2 lineage): sidecar read unconditionally,
-    # mismatch/unstamped refusal
-    should_stamp = _guard_stamped_append(
-        path, key_def, key_def, True, bool(done_ids), None,
-        lambda existing: (
-            f"key-definition mismatch appending to {path!r}: table was "
-            f"built under {existing!r}, current build derives "
-            f"{key_def!r}. Mixed-key shards would probe as silent "
-            f"false negatives — rebuild the table at a fresh path."),
-        lambda: (
-            f"table at {path!r} has no key-definition stamp (built "
-            f"before versioning); cannot prove it matches "
-            f"{key_def!r}. Rebuild at a fresh path, or pass "
-            f"key_def=None only if the definition never changed."))
-    shard_df = build(done_ids)
+    existing = _read_keydef(path)
+    if existing is not None and stamp != existing:
+        raise ValueError(
+            f"{noun} mismatch appending to {path!r}: table was built "
+            f"under {existing!r}, this build derives {stamp!r}. Mixing "
+            f"them corrupts what the table answers — rebuild it at a "
+            f"fresh path.")
+    if existing is None and stamp is not None and done_ids:
+        raise ValueError(
+            f"table at {path!r} has no {noun} stamp (built before "
+            f"versioning); cannot prove it matches {stamp!r}. Rebuild "
+            f"at a fresh path.")
+    df = build(done_ids)
     if done_ids:
-        shard_df = shard_df.where(~F.col("shard_id").isin(list(done_ids)))
-    # stamp BEFORE the data append: a crash in between leaves a stamped
-    # empty/partial table that resumes cleanly, whereas data-then-stamp
-    # could strand an unstamped table that later resumes refuse
-    if should_stamp:
-        _write_keydef(path, key_def)
-    shard_df.write.mode("append").parquet(path)
+        df = df.where(~F.col(id_col).isin(list(done_ids)))
+    if existing is None and stamp is not None:
+        _write_keydef(path, stamp)
+    df.write.mode("append").parquet(path)
 
 
 # ---------------------------------------------------------------------------
 # Probe side
 # ---------------------------------------------------------------------------
 
-def _filter_from_row(row) -> tuple:
+def _no_members(keys: np.ndarray) -> np.ndarray:
+    """The verdict of a shard that holds no keys: False for every key."""
+    return np.zeros(keys.size, dtype=bool)
+
+
+def _filter_from_row(row) -> Callable[[np.ndarray], np.ndarray]:
     """Probe callable from a shard row without copying fingerprints. A
-    zero-slot row (an empty shard) answers False for every key."""
+    zero-slot row (an empty shard) answers :func:`_no_members`."""
     if not len(row["fingerprints"]):
-        return lambda keys: np.zeros(keys.size, dtype=bool)
+        return _no_members
     kind = row["kind"]
     fp_bits = _fp_bits(kind)
     raw = row["fingerprints"]
@@ -906,8 +874,11 @@ class FilterTable:
 
     def _fn(self, sid: int):
         fn = self._fns.get(sid)
-        if fn is None and sid in self.rows:
-            row = self.rows[sid]  # a shipped meta row is mmapped on first use
+        if fn is None:
+            row = self.rows.get(sid)
+            if row is None:  # a shard with no keys and no row
+                return _no_members
+            # a shipped meta row is mmapped on first use
             fn = self._fns[sid] = _filter_from_row(
                 _row_from_meta(row) if "__file" in row else row)
         return fn
@@ -930,8 +901,7 @@ class FilterTable:
             keys = keys.view(np.uint64)
         keys = keys.astype(np.uint64, copy=False)
         if self.prefix_bits == 0:
-            fn = self._fn(0)
-            return fn(keys) if fn is not None else np.zeros(keys.size, dtype=bool)
+            return self._fn(0)(keys)
         out = np.zeros(keys.size, dtype=bool)
         pref = (keys >> np.uint64(64 - self.prefix_bits)).astype(np.int64)
         for sid in self.rows:
@@ -1240,11 +1210,9 @@ def probe_cogrouped(probe_df: DataFrame, shard_df: DataFrame,
 
     def probe(pkeys: pa.Table, shard: pa.Table) -> pa.Table:
         pkeys = pkeys.drop_columns(["shard_id"])
-        if shard.num_rows:
-            fn = _filter_from_row(shard.slice(0, 1).to_pylist()[0])
-        else:  # a shard with no keys, or the NULL-key group
-            def fn(keys):
-                return np.zeros(keys.size, dtype=bool)
+        # no shard row: a shard with no keys, or the NULL-key group
+        fn = (_filter_from_row(shard.slice(0, 1).to_pylist()[0])
+              if shard.num_rows else _no_members)
         verdict = _apply_null_aware(lambda k: fn(k.view(np.uint64)),
                                     pkeys.column(key_col).combine_chunks(),
                                     pa.int64())
@@ -1313,10 +1281,8 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
                 # cached per table generation: a reused python worker
                 # re-probing the same shard set skips the per-task memmap
                 # + descriptor rebuild (VERDICT r5 item 6)
-                fn = _cached_table(
-                    tag, lambda: FilterTable(*bc_meta.value))._fn(sid)
-                verdict = (fn(arr) if fn is not None
-                           else np.zeros(arr.size, dtype=bool))
+                verdict = _cached_table(
+                    tag, lambda: FilterTable(*bc_meta.value))._fn(sid)(arr)
                 if members_dir is not None:
                     _commit_members(
                         members_dir, sid,

@@ -49,7 +49,7 @@ ORACLE_HLL_DISTINCT = ("SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) AS "
 
 
 def q_hll_group_distinct(spark, sf_dir):
-    """Grouped HLL (sketch-per-key applyInPandas): distinct customers per
+    """Grouped HLL (sketch-per-key applyInArrow): distinct customers per
     order priority, each within the HLL bound of the exact count."""
     orders = _load(spark, sf_dir, "orders")
     keyed = orders.select("o_orderpriority",

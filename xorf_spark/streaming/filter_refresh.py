@@ -299,7 +299,7 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
                 set(listed), n_shards, kind, distinct=True)
 
         _append_shards(spark, os.path.join(table_path, version), build,
-                       key_def=key_def)
+                       key_def)
         # pointer swap AFTER the version is fully committed: write to a
         # temp name, then rename over _LATEST — a single atomic rename on
         # POSIX (open_output_stream on the final path would truncate
