@@ -83,6 +83,17 @@ def test_duplicate_keys_rejected_xor():
         B.build_xor(np.array([1, 2, 1], dtype=np.uint64))
 
 
+def test_fuse_small_shard_failure_names_the_fix():
+    """A fuse build that runs out of attempts says how many keys it had,
+    how many attempts, and that bfuse builds small shards: 5K-100K keys
+    fail every attempt, from ~200K keys the fuse family peels."""
+    keys = np.unique(np.random.default_rng(3).integers(
+        0, 2**64, 5000, dtype=np.uint64))
+    with pytest.raises(RuntimeError,
+                       match=rf"{keys.size} keys .* max_iter=3 .*bfuse"):
+        B.build_fuse(keys, max_iter=3)
+
+
 def test_duplicate_keys_dropped_bfuse():
     # binary fuse detects-and-drops duplicates (src/prelude/bfuse.rs:200-215)
     r = B.build_binary_fuse(np.array([1, 2, 1, 3], dtype=np.uint64))

@@ -136,35 +136,64 @@ def test_filter_anti_join_equals_exact(spark, token_df, monkeypatch):
         assert {"null-1", "null-2"} <= set(got)  # NULL keys survive
 
 
-def test_table_cache_bounded_in_one_worker(spark, monkeypatch):
-    """A python worker outlives tasks: probing many table generations in
-    one process keeps at most ``_TABLE_CACHE_MAX`` mmap-path tables cached,
-    and broadcast tables not at all (they live on their broadcast). The
-    UDFs' python bodies run here, in-process, as a reused worker would run
-    them."""
-    from collections import OrderedDict
+def test_probe_state_made_once_per_broadcast(spark, monkeypatch):
+    """Worker-side probe state lives on its broadcast: ``make`` runs once
+    per broadcast however many batches it serves, and a second broadcast
+    of the same value gets its own object. The filter UDF bodies build one
+    table per broadcast over either transport, and a sketch UDF body
+    deserializes its sketch once; they run here, in-process, as a reused
+    worker runs them."""
+    from xorf_spark.sketches import cms_estimate_udf
+    from xorf_spark.sketches import dataflow as SD
+    from xorf_spark.sketches.kernels import CountMin
 
-    monkeypatch.setattr(D, "_TABLE_CACHE", OrderedDict())
+    sc = spark.sparkContext
+    made = []
+
+    def make(value):
+        made.append(value)
+        return object()
+
+    first, second = sc.broadcast("v"), sc.broadcast("v")
+    obj = D._on_broadcast(first, make)
+    assert D._on_broadcast(first, make) is obj and made == ["v"]
+    assert D._on_broadcast(second, make) is not obj and made == ["v", "v"]
+
     keys = spark.range(3000).select(F.xxhash64("id").alias("key"))
     # an int64 Arrow array, as the worker receives it
     member = pa.array(keys.toPandas()["key"], pa.int64())
-    shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=2).cache()
-    for via_files, most in ((False, 0), (True, D._TABLE_CACHE_MAX)):
-        for _ in range(D._TABLE_CACHE_MAX + 3):
-            table = D.FilterTable.from_df(shard_df, n_shards=2)
-            udf = table.contains_udf(spark, via_files=via_files).func
+    table = D.FilterTable.from_df(
+        D.build_filter_df(keys, kind="bfuse8", n_shards=2), n_shards=2)
+    tables = []
+    init = D.FilterTable.__init__
 
-            def probe(k):
-                return udf(k).to_numpy(zero_copy_only=False)
+    def spy(self, *args):
+        tables.append(self)
+        init(self, *args)
 
-            assert probe(member).all()
-            assert probe(member).all()  # served from the cache
-            assert len(D._TABLE_CACHE) <= most
-    assert len(D._TABLE_CACHE) == most
-    shard_df.unpersist()
+    for limit in (D.MAX_BROADCAST_FP_BYTES, 0):
+        monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", limit)
+        udf = table.contains_udf(spark).func
+        monkeypatch.setattr(D.FilterTable, "__init__", spy)
+        for _ in range(3):
+            assert udf(member).to_numpy(zero_copy_only=False).all()
+        monkeypatch.setattr(D.FilterTable, "__init__", init)
+    assert len(tables) == 2
+    assert not any("__file" in r for r in tables[0].rows.values())
+    assert all("__file" in r for r in tables[1].rows.values())  # mmap path
+
+    cms = CountMin(width=1 << 12, depth=4).add_hashes(
+        np.asarray(member).view(np.uint64))
+    loads, load = [], SD.sketch_from_bytes
+    monkeypatch.setattr(SD, "sketch_from_bytes",
+                        lambda b: loads.append(b) or load(b))
+    udf = cms_estimate_udf(spark, cms).func
+    for _ in range(3):
+        assert (udf(member).to_numpy() >= 1).all()
+    assert len(loads) == 1
 
 
-def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark):
+def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark, monkeypatch):
     """The keyed UDF bodies (``.func``), called in-process on one int64
     Arrow batch holding NULLs and keys above 2**53: each verdict equals the
     kernel's on the exact key, and NULL keys give NULL. ``to_numpy`` of a
@@ -199,11 +228,11 @@ def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark):
     assert (np.abs(keys[~null]) > 2 ** 53).all()
 
     is_member = np.isin(keys.view(np.uint64), members)[~null]
+    broadcast_udf = table.contains_udf(spark)
+    monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", 0)
     cases = [  # (udf, kernel, what every member's verdict must satisfy)
-        (table.contains_udf(spark, via_files=False), table.contains_np,
-         lambda v: v),
-        (table.contains_udf(spark, via_files=True), table.contains_np,
-         lambda v: v),
+        (broadcast_udf, table.contains_np, lambda v: v),
+        (table.contains_udf(spark), table.contains_np, lambda v: v),
         (bloom_contains_udf(spark, bloom), bloom.contains_hashes,
          lambda v: v),
         (cms_estimate_udf(spark, cms), cms.estimate_hashes,
@@ -218,26 +247,45 @@ def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark):
         assert member_ok(got[is_member]).all()  # zero false negatives
 
 
-def test_table_cache_outlives_tasks_bounded(spark):
-    """In reused python workers the mmap-path cache persists between tasks
-    (a closure pickled by value would start each task empty) and stays
-    bounded over more table generations than it holds."""
+def test_probe_state_dies_with_its_broadcast(spark, monkeypatch):
+    """In reused python workers, probe state lives as long as its
+    broadcast, no longer. After 6 table generations probed through the
+    mmap path and 6 sketch UDFs, a python task that uses none of their
+    broadcasts (so its worker drops them) finds no live ``FilterTable``
+    and no live sketch in its worker."""
+    from xorf_spark.sketches import cms_estimate_udf
+    from xorf_spark.sketches.kernels import CountMin
+
+    monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", 0)
     keys = spark.range(3000).select(F.xxhash64("id").alias("key"))
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=2).cache()
-    for _ in range(D._TABLE_CACHE_MAX + 2):
+    cms = CountMin(width=1 << 12, depth=4).add_hashes(
+        keys.toArrow().column("key").to_numpy().view(np.uint64))
+    for _ in range(6):
         table = D.FilterTable.from_df(shard_df, n_shards=2)
-        udf = table.contains_udf(spark, via_files=True)
-        assert keys.where(udf(F.col("key"))).count() == 3000
+        member = table.contains_udf(spark)
+        count = cms_estimate_udf(spark, cms)
+        assert keys.where(member("key") & (count("key") >= 1)).count() == 3000
+        assert table._shipped  # the mmap path ran
     shard_df.unpersist()
 
-    @F.pandas_udf("long")
-    def cache_len(x: pd.Series) -> pd.Series:
-        from xorf_spark import dataflow
-        return pd.Series([len(dataflow._TABLE_CACHE)] * len(x))
+    @F.pandas_udf("string")
+    def live(x: pd.Series) -> pd.Series:
+        import gc
+        import os
 
-    sizes = {r[0] for r in spark.range(0, 64, numPartitions=16)
-             .select(cache_len("id")).distinct().collect()}
-    assert 0 < max(sizes) <= D._TABLE_CACHE_MAX, sizes
+        from xorf_spark.dataflow import FilterTable
+        from xorf_spark.sketches import kernels
+
+        gc.collect()
+        objs = gc.get_objects()
+        n_tables = sum(isinstance(o, FilterTable) for o in objs)
+        n_sketches = sum(isinstance(o, kernels.CountMin) for o in objs)
+        return pd.Series([f"{os.getpid()} {n_tables} {n_sketches}"] * len(x))
+
+    seen = {r[0] for r in spark.range(0, 64, numPartitions=16)
+            .select(live("id")).distinct().collect()}
+    assert seen and all(s.endswith(" 0 0") for s in seen), seen
 
 
 def test_inline_semijoin_shards_by_default(spark, token_df, monkeypatch):
@@ -665,7 +713,8 @@ def test_build_refuses_non_integer_keys(spark, tmp_path, cast):
 
 
 @pytest.mark.parametrize("kind", ["bfuse8", "xor8", "fuse8"])
-def test_stored_table_carries_its_shard_count(spark, tmp_path, kind):
+def test_stored_table_carries_its_shard_count(spark, tmp_path, kind,
+                                              monkeypatch):
     """A stored table whose top shards hold no key loads with the shard
     count it was built with: every shard gets a row, an empty one a
     zero-slot row (the fuse family cannot build an empty filter).
@@ -684,8 +733,9 @@ def test_stored_table_carries_its_shard_count(spark, tmp_path, kind):
     assert table.contains_np(keys).all()
     strangers = spark.range(2000).select(
         F.xxhash64("id").alias("key"))  # every shard, mostly empty ones
-    for via_files in (False, True):
-        udf = table.contains_udf(spark, via_files=via_files)
+    for limit in (D.MAX_BROADCAST_FP_BYTES, 0):
+        monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", limit)
+        udf = table.contains_udf(spark)
         assert df.where(udf("key")).count() == keys.size
         assert strangers.where(udf("key")).count() < 2000 * 0.02
 

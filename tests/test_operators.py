@@ -1,6 +1,8 @@
 """Tests for the training-data pipeline operators (dedup, similarity, text,
 multimodal) and the streaming membership filter."""
 
+import glob
+
 import numpy as np
 import pytest
 from pyspark.sql import Row
@@ -403,42 +405,53 @@ def test_frame_sample_stub(spark, docs_df):
 
 # --- streaming ---------------------------------------------------------------
 
-def test_streaming_membership(spark, token_df, tmp_path):
+@pytest.mark.parametrize("limit", [D.MAX_BROADCAST_FP_BYTES, 0],
+                         ids=["broadcast", "mmap"])
+def test_streaming_membership(spark, token_df, tmp_path, monkeypatch, limit):
     """Structured Streaming probe: build filter from history, filter a stream
-    (file source → memory sink)."""
+    (file source → memory sink), one file per micro-batch so one probe UDF
+    serves several micro-batches; over both fingerprint transports."""
     from xorf_spark.streaming import stream_dedup_filter, stream_membership
 
+    monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", limit)
     hist = D.doc_keys(token_df).select("key")
     table = D.FilterTable.from_df(
         D.build_filter_df(hist, kind="bfuse8", n_shards=4), n_shards=4)
 
-    # stream input: half historical keys, half fresh
+    # stream input: half historical keys, half fresh, in 4 files
     fresh = spark.range(500).select(
         F.xxhash64(F.col("id") + 123_456_789).alias("key"))
     stream_src = str(tmp_path / "stream_in")
-    hist.limit(500).unionByName(fresh).write.parquet(stream_src)
+    hist.limit(500).unionByName(fresh).repartition(4).write.parquet(
+        stream_src)
+    assert len(glob.glob(f"{stream_src}/*.parquet")) >= 2
 
-    stream = (spark.readStream.schema("key long").parquet(stream_src))
-    annotated = stream_membership(stream, table, "key")
+    def stream():
+        return (spark.readStream.schema("key long")
+                .option("maxFilesPerTrigger", 1).parquet(stream_src))
+
+    annotated = stream_membership(stream(), table, "key")
     q = (annotated.writeStream.format("memory")
-         .queryName("members").outputMode("append").start())
+         .queryName(f"members_{limit}").outputMode("append").start())
     q.processAllAvailable()
     q.stop()
-    out = spark.sql("select * from members").collect()
+    assert len(q.recentProgress) >= 2  # several micro-batches
+    assert bool(table._shipped) == (limit == 0)
+    out = spark.sql(f"select * from members_{limit}").collect()
     assert len(out) == 1000
     # zero FN on the historical half
-    hist_keys = {r["key"] for r in hist.limit(500).collect()}
+    hist_keys = {r["key"] for r in hist.collect()}
     for r in out:
         if r["key"] in hist_keys:
             assert r["member"]
 
-    deduped = stream_dedup_filter(
-        (spark.readStream.schema("key long").parquet(stream_src)), table, "key")
+    deduped = stream_dedup_filter(stream(), table, "key")
     q2 = (deduped.writeStream.format("memory")
-          .queryName("deduped").outputMode("append").start())
+          .queryName(f"deduped_{limit}").outputMode("append").start())
     q2.processAllAvailable()
     q2.stop()
-    survivors = {r["key"] for r in spark.sql("select * from deduped").collect()}
+    survivors = {r["key"] for r in
+                 spark.sql(f"select * from deduped_{limit}").collect()}
     assert not (survivors & hist_keys)  # no historical key survives
 
 

@@ -2,6 +2,7 @@
 
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -376,25 +377,21 @@ def _join_inputs(spark):
     return probe, build, table
 
 
-@pytest.mark.parametrize("via_files", [False, True],
+@pytest.mark.parametrize("limit", [D.MAX_BROADCAST_FP_BYTES, 0],
                          ids=["broadcast", "mmap"])
 @pytest.mark.parametrize("join", ["semi", "anti"])
 def test_filter_join_one_probe_eval_none_on_build(spark, monkeypatch, join,
-                                                  via_files):
+                                                  limit):
     """The filter runs once per probe row: one ArrowEvalPython in the
     executed plan, on the probe side of the backstop join, and none on
     the build side (Catalyst must not copy the probe filter across the
     join equality). Both UDF distribution paths."""
-    contains_udf = D.FilterTable.contains_udf
-    monkeypatch.setattr(
-        D.FilterTable, "contains_udf",
-        lambda self, spark, via_files=None, _f=via_files:
-            contains_udf(self, spark, via_files=_f))
+    monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", limit)
     probe, build, table = _join_inputs(spark)
     fn = D.filter_semi_join if join == "semi" else D.filter_anti_join
     df = fn(probe, build, "pk", "bk", table=table)
     assert _python_evals(df) == (1, 1, 0)
-    assert bool(table._shipped) == via_files  # the mmap path really ran
+    assert bool(table._shipped) == (limit == 0)  # the mmap path really ran
     n_member = len(range(0, 20_000, 3))
     assert df.count() == (n_member if join == "semi" else 30_000 - n_member)
 
@@ -428,3 +425,36 @@ def test_filter_join_output_predicate_stays_above_probe(spark, join):
     n_member = len(range(15_000, 20_000, 3)) if join == "semi" else \
         15_000 - len(range(15_000, 20_000, 3))
     assert df.count() == n_member
+
+
+@pytest.mark.parametrize("group_cols", [["grp"], ["grp", "key"]],
+                         ids=["col_not_grouped", "col_grouped"])
+def test_grouped_sketch_feeds_only_its_columns(spark, group_cols):
+    """grouped_sketch's Arrow feed holds the group columns and the sketched
+    one, each once: a wide column the fold never reads stays on the JVM
+    side of ``FlatMapGroupsInArrow``. Payloads are those of one local feed
+    of each group's keys, whether or not the sketched column is also a
+    group column."""
+    from xorf_spark.sketches import grouped_sketch, make_sketch
+
+    df = spark.range(600).select(
+        F.xxhash64("id").alias("key"), (F.col("id") % 3).alias("grp"),
+        F.repeat(F.lit("x"), 1000).alias("body"))
+    out = grouped_sketch(df, group_cols, "key", "hll", {"p": 10})
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    node = [ln for ln in plan.splitlines() if "FlatMapGroupsInArrow" in ln]
+    assert len(node) == 1, plan
+    args = re.search(r"build\(([^)]*)\)", node[0])[1].split(", ")
+    assert sorted(a.split("#")[0] for a in args) == sorted(
+        {*group_cols, "key"}), node
+
+    groups = {}
+    for r in df.select("key", "grp").collect():
+        groups.setdefault(tuple(r[c] for c in group_cols), []).append(r.key)
+    got = {tuple(r[c] for c in group_cols): r for r in out.collect()}
+    assert got.keys() == groups.keys()
+    for g, keys in groups.items():
+        local = make_sketch("hll", p=10).add_hashes(
+            np.array(keys, dtype=np.int64).view(np.uint64))
+        assert got[g].n_rows == len(keys)
+        assert bytes(got[g].payload) == local.to_bytes(), g

@@ -762,20 +762,6 @@ def test_filter_probe_null_semantics(spark, keyed_df):
             assert r["m"] is True, r       # zero FN, even in null batches
 
 
-def test_sketch_cache_bounded():
-    from xorf_spark.sketches import dataflow as SD
-
-    class FakeBC:
-        def __init__(self, payload):
-            self.value = payload
-
-    payload = HyperLogLog(p=8).to_bytes()
-    SD._SKETCH_CACHE.clear()
-    for i in range(SD._SKETCH_CACHE_MAX * 3):
-        SD._cached(f"tag{i}", FakeBC(payload))
-    assert len(SD._SKETCH_CACHE) <= SD._SKETCH_CACHE_MAX
-
-
 def test_kll_weight_conservation():
     """Canonical odd-size compaction rule: total retained weight must equal
     n exactly after arbitrary adds and merges (no per-compaction drift)."""

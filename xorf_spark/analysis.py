@@ -15,7 +15,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-_FP_DTYPES = {"8": np.uint8, "16": np.uint16, "32": np.uint32}
+from .kernels import _FP_DTYPES
 
 ZERO_DENSITY_SCHEMA = ("shard_id int, kind string, num_slots long, "
                        "n_zero long, zero_frac double, "
@@ -34,7 +34,7 @@ def fingerprint_zero_density(shard_df: DataFrame,
             for _, row in pdf.iterrows():
                 width = "".join(ch for ch in row["kind"] if ch.isdigit())
                 fps = np.frombuffer(row["fingerprints"],
-                                    dtype=_FP_DTYPES[width])
+                                    dtype=_FP_DTYPES[int(width)])
                 zeros = fps == 0
                 n = fps.size
                 if n == 0:
@@ -76,7 +76,7 @@ def zero_density_series(shard_df: DataFrame, window: int = 2000,
             for _, row in pdf.iterrows():
                 width = "".join(ch for ch in row["kind"] if ch.isdigit())
                 fps = np.frombuffer(row["fingerprints"],
-                                    dtype=_FP_DTYPES[width])
+                                    dtype=_FP_DTYPES[int(width)])
                 zeros = (fps == 0).astype(np.int64)
                 cs = np.concatenate(([0], np.cumsum(zeros)))
                 idx = np.arange(window, fps.size, stride)

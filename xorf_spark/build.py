@@ -27,8 +27,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from . import kernels as K
-
-_FP_DTYPES = {8: np.uint8, 16: np.uint16, 32: np.uint32}
+from .kernels import _FP_DTYPES
 
 
 def _count3(capacity: int, j0: np.ndarray, j1: np.ndarray, j2: np.ndarray
@@ -398,7 +397,11 @@ def build_fuse(keys: np.ndarray, fp_bits: int = 8, max_iter: int = 1000,
         retries += 1
         rng_state, seed = K.splitmix64(rng_state)
     if not done:
-        raise RuntimeError("Failed to construct fuse filter.")
+        raise RuntimeError(
+            f"Failed to construct fuse filter: {n} keys did not peel in "
+            f"max_iter={max_iter} attempts. The fuse family rarely peels "
+            f"below ~200K keys; build binary fuse (bfuse) for smaller "
+            f"shards, or use fewer shards.")
 
     if uniform_random:
         B = np.random.default_rng(fp_seed).integers(

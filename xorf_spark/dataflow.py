@@ -26,7 +26,6 @@ from __future__ import annotations
 import math
 import re
 import time
-from collections import OrderedDict
 from typing import Callable
 
 import numpy as np
@@ -49,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from . import build as B
+from .kernels import _FP_DTYPES
 
 MASK64 = (1 << 64) - 1
 
@@ -72,8 +72,6 @@ SHARD_SCHEMA = StructType([
     StructField("peel_rounds", IntegerType(), False),
     StructField("build_secs", DoubleType(), False),
 ])
-
-_FP_DTYPES = {8: np.dtype("<u1"), 16: np.dtype("<u2"), 32: np.dtype("<u4")}
 
 #: bfuse peak scratch ≈ hxor(8B) + counts(8B) + posxor(1B) per slot ≈ 19B/key
 #: at 1.125 overhead plus the key batch itself — 16M keys/shard ≈ ~500MB peak,
@@ -358,6 +356,10 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
     so source/doc-length skew in the input cannot unbalance the build.
     Only shards that receive a key get a row; pass ``n_shards`` to
     ``FilterTable.from_df``.
+
+    A fuse-family ``kind`` (fuse8/16/32) rarely peels a shard of fewer
+    than ~200K keys: the build task fails after ``build_fuse``'s
+    attempts. Build bfuse for smaller shards, or use fewer shards.
     """
     n_shards = _shard_count(keys_df, key_col, n_shards, target_keys_per_shard)
     return _build_df(keys_df, key_col, n_shards, kind)
@@ -674,7 +676,9 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
     anti-joins the already-committed shard ids and only builds the missing
     ones — the final table is identical to an uninterrupted run. Every
     shard id in ``range(n_shards)`` gets a row, an empty shard a
-    zero-slot one, so ``FilterTable.load`` infers the shard count.
+    zero-slot one, so ``FilterTable.load`` infers the shard count. As in
+    :func:`build_filter_df`, a fuse-family shard of fewer than ~200K keys
+    rarely builds: use bfuse for smaller shards, or fewer shards.
 
     ``key_def`` names the DEFINITION of the key column (e.g.
     ``shingle_key_def(8)`` for :func:`shingle_keys` output). It is
@@ -798,20 +802,20 @@ class FilterTable:
         self.n_shards = max(int(n_shards), 1)
         self.prefix_bits = int(math.log2(self.n_shards))
         self._fns: dict[int, object] = {}
-        #: per-SparkContext cache of shipped fingerprint files, keyed by
+        #: per-SparkContext shipped fingerprint files, keyed by
         #: applicationId (NOT id(sc) — ids are reused after GC): shipping
         #: ~GBs of fingerprints is a fixed cost worth paying once per table
-        self._shipped: dict[str, tuple[dict, str]] = {}
+        self._shipped: dict[str, dict[int, dict]] = {}
 
-    def ship_fps(self, spark: SparkSession) -> tuple[dict, str]:
+    def ship_fps(self, spark: SparkSession) -> dict[int, dict]:
         """addFile-ship this table's fingerprints (once per SparkContext;
-        repeat probes reuse the same files)."""
+        repeat probes reuse the same files); returns the shard descriptor
+        rows, each naming its file."""
         app = spark.sparkContext.applicationId
-        hit = self._shipped.get(app)
-        if hit is None:
-            hit = _ship_fp_files(spark, self.rows)
-            self._shipped[app] = hit
-        return hit
+        meta = self._shipped.get(app)
+        if meta is None:
+            meta = self._shipped[app] = _ship_fp_files(spark, self.rows)
+        return meta
 
     @classmethod
     def from_df(cls, shard_df: DataFrame, n_shards: int | None = None,
@@ -910,47 +914,40 @@ class FilterTable:
                 out[m] = self._fn(sid)(keys[m])
         return out
 
-    def contains_udf(self, spark: SparkSession, via_files: bool | None = None):
+    def contains_udf(self, spark: SparkSession):
         """Membership probe as a scalar ``arrow_udf`` (``long -> boolean``):
         call it on a column for WHERE clauses and joins, or register it
         for SQL strings with ``functions.register_sql_udfs``. A NULL key
         gives a NULL verdict; integer columns narrower than long widen.
 
-        Two distribution modes for the fingerprint bytes:
+        The table's own fingerprint byte count picks how the bytes reach
+        the python workers; only what is broadcast differs:
 
-        - broadcast (default for small filters): shard rows ride a Spark
-          broadcast; each python worker unpickles its own copy.
-        - ``via_files`` (default above ~64 MiB): fingerprints are written to
-          per-shard files shipped with ``SparkContext.addFile`` — fetched once
-          per executor *node* and ``np.memmap``-ed read-only in workers, so
-          all worker processes on a node share one page-cache copy instead of
-          N private heap copies. This is the scale path for multi-GB filters.
+        - up to ``MAX_BROADCAST_FP_BYTES``, the shard rows ride the
+          broadcast: each python worker holds its own heap copy, freed
+          when the broadcast dies;
+        - above it, the broadcast carries descriptors only, and each
+          shard's fingerprints go to a file shipped with
+          ``SparkContext.addFile``, fetched once per executor node and
+          ``np.memmap``-ed read-only: all workers on a node share one
+          page-cache copy, so worker memory does not grow with the
+          worker count. Files added with ``addFile`` live as long as the
+          SparkContext, not the broadcast: a table ships them once per
+          SparkContext, and they are not freed before it stops.
+
+        Each worker builds the probe table once per broadcast and drops
+        it with the broadcast (:func:`_on_broadcast`).
         """
-        if via_files is None:
-            via_files = self.total_fingerprint_bytes > (64 << 20)
+        shards = (self.ship_fps(spark)
+                  if self.total_fingerprint_bytes > MAX_BROADCAST_FP_BYTES
+                  else self.rows)
+        bc = spark.sparkContext.broadcast((shards, self.n_shards))
 
-        if not via_files:
-            bc = spark.sparkContext.broadcast((self.rows, self.n_shards))
-
-            def contains(keys: np.ndarray) -> np.ndarray:
-                # cached on the worker's broadcast object, which the worker
-                # drops when the JVM drops the broadcast: the table lives
-                # across tasks exactly as long as its fingerprint bytes do
-                table = getattr(bc, "_xorf_table", None)
-                if table is None:
-                    table = bc._xorf_table = FilterTable(*bc.value)
-                return table.contains_np(keys)
-
-            return _arrow_probe_udf(contains, "boolean")
-
-        meta, tag = self.ship_fps(spark)
-        bc_meta = spark.sparkContext.broadcast((meta, self.n_shards))
-
-        def contains_mmap(keys: np.ndarray) -> np.ndarray:
-            table = _cached_table(tag, lambda: FilterTable(*bc_meta.value))
+        def contains(keys: np.ndarray) -> np.ndarray:
+            table = _on_broadcast(bc, lambda v: FilterTable(*v))
             return table.contains_np(keys)
 
-        return _arrow_probe_udf(contains_mmap, "boolean")
+        return _arrow_probe_udf(contains, "boolean")
 
     def where_member(self, df: DataFrame, key_col: str = "key",
                      negate: bool = False) -> DataFrame:
@@ -970,6 +967,19 @@ class FilterTable:
         udf = self.contains_udf(df.sparkSession)
         cond = udf(F.col(key_col))
         return df.where(~cond if negate else cond)
+
+
+def _on_broadcast(bc, make):
+    """``make(bc.value)``, made once per python worker and kept on the
+    worker's ``Broadcast`` object. The worker's broadcast registry hands
+    every task the same object and drops it when a task arrives without
+    the broadcast, so what ``make`` builds lives exactly as long as the
+    bytes it was built from: probe state needs no cache and no eviction."""
+    try:
+        return bc._xorf_probe
+    except AttributeError:
+        made = bc._xorf_probe = make(bc.value)
+        return made
 
 
 def _apply_null_aware(kernel, arr: pa.Array, in_type: pa.DataType) -> pa.Array:
@@ -1002,33 +1012,33 @@ def _arrow_probe_udf(kernel, out_type: str, in_type: pa.DataType = pa.int64()):
 
 
 def _ship_fp_files(spark: SparkSession, rows: dict[int, dict]
-                   ) -> tuple[dict[int, dict], str]:
+                   ) -> dict[int, dict]:
     """Write each shard's fingerprints to a per-shard file shipped with
     ``SparkContext.addFile`` (fetched once per executor NODE, then
     ``np.memmap``-ed read-only by every worker process — one page-cache
     copy per node instead of N heap copies). Returns
-    ``({shard_id: descriptor_row_with___file}, tag)``. A zero-slot row
+    ``{shard_id: descriptor_row_with___file}``. A zero-slot row
     ships no file (an empty file cannot be mmapped): it keeps its empty
     fingerprints instead of a ``__file``."""
     import tempfile
     import uuid
 
     sc = spark.sparkContext
-    tag = uuid.uuid4().hex[:12]
-    tmpdir = tempfile.mkdtemp(prefix=f"xorf_fps_{tag}_")
+    uid = uuid.uuid4().hex[:12]
+    tmpdir = tempfile.mkdtemp(prefix=f"xorf_fps_{uid}_")
     meta: dict[int, dict] = {}
     for sid, row in rows.items():
         if not len(row["fingerprints"]):
             meta[sid] = row
             continue
         meta[sid] = {k: row[k] for k in row if k != "fingerprints"}
-        fname = f"xorf_{tag}_{sid}.bin"
+        fname = f"xorf_{uid}_{sid}.bin"
         path = f"{tmpdir}/{fname}"
         with open(path, "wb") as fh:
             fh.write(row["fingerprints"])
         sc.addFile(path)
         meta[sid]["__file"] = fname
-    return meta, tag
+    return meta
 
 
 def _row_from_meta(m: dict) -> dict:
@@ -1043,33 +1053,17 @@ def _row_from_meta(m: dict) -> dict:
     return r
 
 
-#: Probe tables over shipped fingerprint files, per process by table
-#: generation, least recently used first: bounded, as python workers outlive
-#: tasks. They hold no fingerprints on the heap (the shards are mmapped).
-_TABLE_CACHE: OrderedDict[str, FilterTable] = OrderedDict()
-_TABLE_CACHE_MAX = 4
-
-
-def _cached_table(tag: str, make) -> "FilterTable":
-    """``make()``'s table for ``tag``, cached per process. Module-level:
-    a closure pickled by value would carry its own copy of the cache."""
-    table = _TABLE_CACHE.get(tag)
-    if table is None:
-        table = _TABLE_CACHE[tag] = make()
-        while len(_TABLE_CACHE) > _TABLE_CACHE_MAX:
-            _TABLE_CACHE.popitem(last=False)
-    else:
-        _TABLE_CACHE.move_to_end(tag)
-    return table
-
-
 #: Above this many estimated fingerprint bytes the inline semi/anti-join stops
 #: collecting the shard table to the driver entirely and routes probes through
 #: the cogrouped shard-local path instead (driver memory never sees the
-#: filter). Below it, ``contains_udf`` still auto-switches broadcast → addFile
-#: mmap at 64 MiB, so the ladder is: broadcast ≤64MB < mmap files ≤4GB <
-#: cogrouped.
+#: filter). Below it, ``contains_udf`` still switches broadcast → addFile
+#: mmap at ``MAX_BROADCAST_FP_BYTES``, so the ladder is: broadcast ≤64MB <
+#: mmap files ≤4GB < cogrouped.
 MAX_COLLECT_FP_BYTES = 4 << 30
+
+#: Above this many fingerprint bytes ``contains_udf`` ships a table's
+#: fingerprints as addFile'd, mmapped files instead of broadcasting them.
+MAX_BROADCAST_FP_BYTES = 64 << 20
 
 #: Hint ``F.broadcast`` on the exact-backstop join when the build side has at
 #: most this many distinct keys (8M longs ≈ 64MB hashed relation) instead of
@@ -1257,8 +1251,8 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
     finding #3).
     """
     spark = probe_df.sparkSession
-    meta, tag = table.ship_fps(spark)
-    bc_meta = spark.sparkContext.broadcast((meta, table.n_shards))
+    bc_meta = spark.sparkContext.broadcast(
+        (table.ship_fps(spark), table.n_shards))
     shard_ids = _stage_keys(probe_df, stage_dir, table.n_shards, key_col)
     out_schema = "shard_id int, n_probes long, n_members long"
     if not shard_ids:
@@ -1278,11 +1272,11 @@ def probe_staged(probe_df: DataFrame, table: "FilterTable", stage_dir: str,
                 tbl = _pq.read_table(files, columns=["key"],
                                      filesystem=fsys)
                 arr = _np_keys(tbl.column("key"))
-                # cached per table generation: a reused python worker
-                # re-probing the same shard set skips the per-task memmap
-                # + descriptor rebuild (VERDICT r5 item 6)
-                verdict = _cached_table(
-                    tag, lambda: FilterTable(*bc_meta.value))._fn(sid)(arr)
+                # one table per broadcast: a reused python worker probing
+                # more of its shards skips the descriptor rebuild, and a
+                # shard's memmap is made once per worker
+                shards = _on_broadcast(bc_meta, lambda v: FilterTable(*v))
+                verdict = shards._fn(sid)(arr)
                 if members_dir is not None:
                     _commit_members(
                         members_dir, sid,

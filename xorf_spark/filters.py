@@ -23,8 +23,7 @@ import numpy as np
 
 from . import build as B
 from . import kernels as K
-
-_FP_DTYPES = {8: np.dtype("<u1"), 16: np.dtype("<u2"), 32: np.dtype("<u4")}
+from .kernels import _FP_DTYPES
 
 
 def _as_u64_array(keys) -> np.ndarray:

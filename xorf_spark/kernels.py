@@ -29,6 +29,10 @@ U64 = np.uint64
 U32 = np.uint32
 MASK64 = (1 << 64) - 1
 
+#: Fingerprint dtype per width in bits: the little-endian DMA layout of
+#: the fingerprint bytes (reference src/lib.rs:139-154).
+_FP_DTYPES = {8: np.dtype("<u1"), 16: np.dtype("<u2"), 32: np.dtype("<u4")}
+
 
 # murmur3 finalizer multipliers (reference src/murmur3.rs:32-34)
 _M1 = U64(0xFF51AFD7ED558CCD)

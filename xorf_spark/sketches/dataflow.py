@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import math
 import time
-from collections import OrderedDict
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -50,7 +49,13 @@ from pyspark.sql.types import (
 )
 
 from .kernels import KEYED_KINDS, SKETCH_KINDS, make_sketch, sketch_from_bytes
-from ..dataflow import _arrow_probe_udf, _key_col, _np_keys, shard_id_col
+from ..dataflow import (
+    _arrow_probe_udf,
+    _key_col,
+    _np_keys,
+    _on_broadcast,
+    shard_id_col,
+)
 
 #: One row per partial sketch (per input partition, or per bucket in the
 #: resumable path). ``payload`` is the self-describing serialized sketch.
@@ -334,11 +339,14 @@ def grouped_sketch(df: DataFrame, group_cols: list[str], col: str, kind: str,
     memory. The fold is the merge law of mergeable summaries: HLL, CMS,
     Bloom and theta state is byte-identical to one feed of the group's
     rows (max/sum/or/bottom-k); MG, KLL and t-digest state depends on the
-    batching and stays within its published bounds."""
+    batching and stays within its published bounds.
+
+    Only the group columns and ``col`` cross the Arrow boundary; ``col``
+    crosses once when it is also a group column."""
     params = dict(params or {})
     _check_kind(kind)
     df = _drop_null_keys(df.withColumn(col, _sketch_col(df, col, kind)),
-                         col, kind)
+                         col, kind).select(*dict.fromkeys([*group_cols, col]))
     out_schema = StructType([df.schema[c] for c in group_cols] + [
         StructField("payload", BinaryType(), False),
         StructField("n_rows", LongType(), False),
@@ -482,39 +490,18 @@ def sketch_from_table(spark: SparkSession, path: str):
 
 
 # ---------------------------------------------------------------------------
-# Probe-side UDFs (broadcast sketch → vectorized Arrow UDF)
+# Probe-side UDFs (broadcast sketch → vectorized Arrow UDF). Each worker
+# deserializes a UDF's sketch once and keeps it on the broadcast
+# (``dataflow._on_broadcast``), so it dies with the broadcast.
 # ---------------------------------------------------------------------------
-
-#: Worker-side deserialized-sketch cache. Bounded (LRU): a long-lived
-#: executor that keeps creating probe UDFs (e.g. rebuilding a t-digest per
-#: training batch) must not accumulate dead sketches forever.
-_SKETCH_CACHE: "OrderedDict[str, object]" = OrderedDict()
-_SKETCH_CACHE_MAX = 32
-
-
-def _cached(tag: str, bc):
-    # keyed by a per-UDF uuid, NOT id(bc): python ids are reused after GC,
-    # so an id key could hand one query's UDF another query's sketch
-    sk = _SKETCH_CACHE.get(tag)
-    if sk is None:
-        sk = sketch_from_bytes(bc.value)
-        _SKETCH_CACHE[tag] = sk
-        while len(_SKETCH_CACHE) > _SKETCH_CACHE_MAX:
-            _SKETCH_CACHE.popitem(last=False)
-    else:
-        _SKETCH_CACHE.move_to_end(tag)
-    return sk
-
 
 def cms_estimate_udf(spark: SparkSession, cms):
     """``long key -> long`` estimated count (never under the true count)."""
-    import uuid
-
     bc = spark.sparkContext.broadcast(cms.to_bytes())
-    tag = uuid.uuid4().hex
 
     def estimate(keys: np.ndarray) -> np.ndarray:
-        return _cached(tag, bc).estimate_hashes(keys.view(np.uint64))
+        sk = _on_broadcast(bc, sketch_from_bytes)
+        return sk.estimate_hashes(keys.view(np.uint64))
 
     return _arrow_probe_udf(estimate, "long")
 
@@ -522,7 +509,7 @@ def cms_estimate_udf(spark: SparkSession, cms):
 def mg_estimate_udf(spark: SparkSession, mg):
     """``long key -> long`` Misra-Gries lower-bound count (0 for untracked
     keys; ``true ≤ est + mg.dsub``). Dual of the CMS probe — CMS never
-    under-counts, MG never over-counts — and shares its broadcast/cache
+    under-counts, MG never over-counts — and shares its broadcast
     plumbing: the probe body only calls ``estimate_hashes`` on the
     deserialized sketch, which both kinds implement."""
     return cms_estimate_udf(spark, mg)
@@ -533,25 +520,20 @@ def tdigest_cdf_udf(spark: SparkSession, td):
     distribution ≤ value). The training-data filtering primitive: train a
     t-digest over e.g. document lengths, then keep rows between chosen
     percentiles with a WHERE clause — no global sort, no second pass."""
-    import uuid
-
     bc = spark.sparkContext.broadcast(td.to_bytes())
-    tag = uuid.uuid4().hex
 
     def cdf(vals: np.ndarray) -> np.ndarray:
-        return _cached(tag, bc).cdf(vals)
+        return _on_broadcast(bc, sketch_from_bytes).cdf(vals)
 
     return _arrow_probe_udf(cdf, "double", in_type=pa.float64())
 
 
 def bloom_contains_udf(spark: SparkSession, bloom):
     """``long key -> boolean`` membership (zero false negatives)."""
-    import uuid
-
     bc = spark.sparkContext.broadcast(bloom.to_bytes())
-    tag = uuid.uuid4().hex
 
     def contains(keys: np.ndarray) -> np.ndarray:
-        return _cached(tag, bc).contains_hashes(keys.view(np.uint64))
+        sk = _on_broadcast(bc, sketch_from_bytes)
+        return sk.contains_hashes(keys.view(np.uint64))
 
     return _arrow_probe_udf(contains, "boolean")
