@@ -200,8 +200,6 @@ def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark, monkeypatch):
     null-bearing int64 array returns float64, which rounds such keys and
     turns members into false negatives; this pins that trap. No Spark job
     runs: the filter shards and sketches are built here."""
-    import time
-
     from xorf_spark.sketches import bloom_contains_udf, cms_estimate_udf
     from xorf_spark.sketches.kernels import Bloom, CountMin
 
@@ -215,7 +213,7 @@ def test_arrow_probe_udfs_exact_64bit_keys_and_nulls(spark, monkeypatch):
     rows = {}
     for sid in (0, 1):
         mine = members[(members >> np.uint64(63)) == sid]
-        rows[sid] = D._build_shard_row("bfuse8", 8, sid, mine, time.time())
+        rows[sid] = D._build_shard_row("bfuse8", sid, mine)
     table = D.FilterTable(rows, n_shards=2)
     bloom = Bloom(n_bits=1 << 18, k=7).add_hashes(members)
     cms = CountMin(width=1 << 14, depth=5).add_hashes(np.repeat(members, 3))
@@ -590,14 +588,13 @@ def test_probe_staged_member_commit_portable(spark, tmp_path):
         def from_uri(uri):
             return fs2, real_from_uri(uri)[1]
 
-    commit = D._make_member_committer()
     tbl = pa.table({"key": np.arange(5, dtype=np.int64)})
     hdir = str(tmp_path / "hdfsish")
     orig_fs_cls = pafs.FileSystem
     pafs.FileSystem = _ShimFS  # scoped: restore before any parquet read
     try:
-        final = commit(hdir, 0, tbl)
-        final2 = commit(hdir, 0, tbl)  # the "speculative twin" attempt
+        final = D._commit_members(hdir, 0, tbl)
+        final2 = D._commit_members(hdir, 0, tbl)  # the "speculative twin"
     finally:
         pafs.FileSystem = orig_fs_cls
     assert final == final2
@@ -607,6 +604,35 @@ def test_probe_staged_member_commit_portable(spark, tmp_path):
     import os
     # listdir (not glob: it hides dotfiles) — temps cleaned, one file
     assert os.listdir(f"{hdir}/shard_id=0") == ["part-0.parquet"]
+
+
+def test_shipped_files_live_in_the_context_temp_dir(spark, tmp_path,
+                                                    monkeypatch):
+    """The mmap transport's fingerprint files are written under the
+    SparkContext's own temp dir, which Spark deletes at shutdown: an
+    mmap-path probe and a ``probe_staged`` leave no new ``xorf_fps_*``
+    entry in the system temp dir."""
+    import glob
+    import tempfile
+
+    def fps_dirs():
+        return {n for n in os.listdir(tempfile.gettempdir())
+                if n.startswith("xorf_fps_")}
+
+    monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", 0)
+    before = fps_dirs()
+    keys = spark.range(5000).select(F.xxhash64("id").alias("key"))
+    shard_df = D.build_filter_df(keys, n_shards=2).cache()
+    # a fresh table per probe: each ships its own files
+    table = D.FilterTable.from_df(shard_df, n_shards=2)
+    assert table.where_member(keys).count() == 5000
+    table = D.FilterTable.from_df(shard_df, n_shards=2)
+    res = D.probe_staged(keys, table, str(tmp_path / "st")).collect()
+    assert sum(r["n_members"] for r in res) == 5000
+    shard_df.unpersist()
+    assert fps_dirs() == before
+    ctx_dir = spark.sparkContext._temp_dir
+    assert len(glob.glob(os.path.join(ctx_dir, "xorf_fps_*"))) >= 2
 
 
 def test_where_member_null_semantics_and_members(spark):
@@ -775,9 +801,69 @@ def test_dataflow_modules_keep_an_arrow_boundary():
     state)."""
     import inspect
 
+    from xorf_spark import analysis
     from xorf_spark.sketches import dataflow as SD
 
-    for mod in (D, SD):
+    for mod in (D, SD, analysis):
         src = inspect.getsource(mod)
         for api in ("applyInPandas", "mapInPandas", "pandas_udf"):
             assert api not in src, (mod.__name__, api)
+
+
+@pytest.mark.parametrize("kind", ["bfuse8", "xor8"])
+def test_every_build_path_dedups_once(spark, tmp_path, kind):
+    """Every build path drops duplicate keys once per shard, in
+    ``_build_shard_row``: over input with ~25% exact copies, each shard's
+    ``(seed, n_keys, fingerprints)`` equals a build over the distinct
+    keys, and its ``duplicates`` counts the copies it dropped. The stream
+    re-delivers the copies in its second batch. (bfuse sizes by the count
+    it is handed, so a raw-count build differs in bytes.)"""
+    from xorf_spark.streaming import latest_version, stream_filter_refresh
+
+    n_shards = 4
+    distinct = spark.range(20_000).select(F.xxhash64("id").alias("key"))
+    copies = distinct.where(F.col("key") % 3 == 0)
+    raw = distinct.unionByName(copies)
+    keys = np.array(raw.toPandas()["key"], dtype=np.int64).view(np.uint64)
+
+    def per_shard(k):
+        return np.bincount((k >> np.uint64(62)).astype(np.int64),
+                           minlength=n_shards)
+
+    dups = per_shard(keys) - per_shard(np.unique(keys))
+    assert 0.2 < dups.sum() / keys.size < 0.3 and (dups > 0).all()
+
+    src, table_path = str(tmp_path / "in"), str(tmp_path / "stream")
+    stream = None
+    for name, batch in (("b1", distinct), ("b2", copies)):
+        batch.coalesce(1).write.parquet(f"{src}/{name}")
+        if stream is None:
+            stream = (stream_filter_refresh(
+                spark.readStream.schema("key long")
+                .option("maxFilesPerTrigger", "1").parquet(src + "/*"),
+                table_path, kind=kind, n_shards=n_shards, refresh_every=2)
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .start())
+        stream.processAllAvailable()
+    stream.stop()
+
+    D.build_filter_table(raw, str(tmp_path / "table"), kind, n_shards)
+    got = {
+        "one-shot": D.build_filter_df(raw, kind, n_shards).collect(),
+        "staged": D.build_filter_df_staged(
+            raw, str(tmp_path / "stage"), kind, n_shards).collect(),
+        "table": spark.read.parquet(str(tmp_path / "table")).collect(),
+        "stream": spark.read.parquet(os.path.join(
+            table_path, latest_version(table_path))).collect(),
+    }
+    want = {r["shard_id"]: r
+            for r in D.build_filter_df(distinct, kind, n_shards).collect()}
+    assert set(want) == set(range(n_shards))
+    assert all(r["duplicates"] == 0 for r in want.values())
+    for path, rows in got.items():
+        rows = {r["shard_id"]: r for r in rows}
+        assert set(rows) == set(want), path
+        for sid, r in rows.items():
+            for col in ("seed", "n_keys", "fingerprints"):
+                assert r[col] == want[sid][col], (path, sid, col)
+            assert r["duplicates"] == dups[sid], (path, sid)

@@ -9,17 +9,42 @@ distributed over the shard table (one Arrow batch per shard row).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from .dataflow import _fp_bits
 from .kernels import _FP_DTYPES
 
 ZERO_DENSITY_SCHEMA = ("shard_id int, kind string, num_slots long, "
                        "n_zero long, zero_frac double, "
                        "win_zero_min double, win_zero_max double")
+_PA_ZERO_DENSITY = pa.schema([
+    ("shard_id", pa.int32()), ("kind", pa.string()),
+    ("num_slots", pa.int64()), ("n_zero", pa.int64()),
+    ("zero_frac", pa.float64()), ("win_zero_min", pa.float64()),
+    ("win_zero_max", pa.float64())])
+
+
+def _per_shard(shard_df: DataFrame, stats, schema: str,
+               pa_schema: pa.Schema) -> DataFrame:
+    """``mapInArrow`` of ``stats(shard_id, kind, fps)`` over each shard
+    row, ``fps`` the row's fingerprints as an array of the kind's width;
+    ``stats`` returns the output row, or None to skip the shard."""
+
+    def run(batches):
+        for batch in batches:
+            out = []
+            for sid, kind, raw in zip(*(batch.column(c).to_pylist() for c in
+                                        ("shard_id", "kind", "fingerprints"))):
+                fps = np.frombuffer(raw, dtype=_FP_DTYPES[_fp_bits(kind)])
+                row = stats(sid, kind, fps)
+                if row is not None:
+                    out.append(row)
+            yield pa.RecordBatch.from_pylist(out, schema=pa_schema)
+
+    return (shard_df.select("shard_id", "kind", "fingerprints")
+            .mapInArrow(run, schema))
 
 
 def fingerprint_zero_density(shard_df: DataFrame,
@@ -28,40 +53,26 @@ def fingerprint_zero_density(shard_df: DataFrame,
     min/max zero fraction over sliding windows of ``window`` slots
     (stride = window; mirrors the reference's windowed scan)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                width = "".join(ch for ch in row["kind"] if ch.isdigit())
-                fps = np.frombuffer(row["fingerprints"],
-                                    dtype=_FP_DTYPES[int(width)])
-                zeros = fps == 0
-                n = fps.size
-                if n == 0:
-                    continue
-                w = min(window, n)
-                n_win = n // w
-                trimmed = zeros[: n_win * w].reshape(n_win, w)
-                frac = trimmed.mean(axis=1)
-                out.append({
-                    "shard_id": int(row["shard_id"]),
-                    "kind": row["kind"],
-                    "num_slots": int(n),
-                    "n_zero": int(zeros.sum()),
-                    "zero_frac": float(zeros.mean()),
-                    "win_zero_min": float(frac.min()),
-                    "win_zero_max": float(frac.max()),
-                })
-            yield pd.DataFrame(out, columns=[
-                "shard_id", "kind", "num_slots", "n_zero", "zero_frac",
-                "win_zero_min", "win_zero_max"])
+    def stats(sid, kind, fps):
+        n = fps.size
+        if n == 0:
+            return None
+        zeros = fps == 0
+        w = min(window, n)
+        n_win = n // w
+        frac = zeros[: n_win * w].reshape(n_win, w).mean(axis=1)
+        return {"shard_id": sid, "kind": kind, "num_slots": n,
+                "n_zero": int(zeros.sum()), "zero_frac": float(zeros.mean()),
+                "win_zero_min": float(frac.min()),
+                "win_zero_max": float(frac.max())}
 
-    return (shard_df.select("shard_id", "kind", "fingerprints")
-            .mapInPandas(run, ZERO_DENSITY_SCHEMA))
+    return _per_shard(shard_df, stats, ZERO_DENSITY_SCHEMA, _PA_ZERO_DENSITY)
 
 
 ZERO_SERIES_SCHEMA = ("shard_id int, kind string, "
                       "series array<int>")
+_PA_ZERO_SERIES = pa.schema([("shard_id", pa.int32()), ("kind", pa.string()),
+                             ("series", pa.list_(pa.int32()))])
 
 
 def zero_density_series(shard_df: DataFrame, window: int = 2000,
@@ -70,24 +81,13 @@ def zero_density_series(shard_df: DataFrame, window: int = 2000,
     of zero fingerprints (window ``window``, sampled every ``stride`` slots —
     analysis/src/zeroes.rs:24-36), one downsampled series per shard."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                width = "".join(ch for ch in row["kind"] if ch.isdigit())
-                fps = np.frombuffer(row["fingerprints"],
-                                    dtype=_FP_DTYPES[int(width)])
-                zeros = (fps == 0).astype(np.int64)
-                cs = np.concatenate(([0], np.cumsum(zeros)))
-                idx = np.arange(window, fps.size, stride)
-                series = (cs[idx + 1] - cs[idx + 1 - window]).astype(np.int32)
-                out.append({"shard_id": int(row["shard_id"]),
-                            "kind": row["kind"],
-                            "series": series.tolist()})
-            yield pd.DataFrame(out, columns=["shard_id", "kind", "series"])
+    def stats(sid, kind, fps):
+        cs = np.concatenate(([0], np.cumsum(fps == 0, dtype=np.int64)))
+        idx = np.arange(window, fps.size, stride)
+        series = (cs[idx + 1] - cs[idx + 1 - window]).astype(np.int32)
+        return {"shard_id": sid, "kind": kind, "series": series.tolist()}
 
-    return (shard_df.select("shard_id", "kind", "fingerprints")
-            .mapInPandas(run, ZERO_SERIES_SCHEMA))
+    return _per_shard(shard_df, stats, ZERO_SERIES_SCHEMA, _PA_ZERO_SERIES)
 
 
 def plot_zero_density(shard_df: DataFrame, path: str, window: int = 2000,

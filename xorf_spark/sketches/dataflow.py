@@ -239,7 +239,7 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
 
     ``stage_dir`` is a transient spill (shared filesystem or object store
     on a cluster); caller owns cleanup."""
-    from ..dataflow import _make_stage_lister, _one_row_per_task
+    from ..dataflow import _one_row_per_task
 
     _check_kind(kind)
     params = dict(params or {})

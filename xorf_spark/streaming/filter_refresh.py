@@ -20,13 +20,14 @@ Each micro-batch appends its non-null keys, re-deliveries included, with
 ``write.partitionBy("shard_id")``: no shuffle, no per-batch distinct. A
 refresh is the file-reading stage of the staged build run directly over
 the log: one python task per shard id reads ``keys/shard_id=N/`` with
-pyarrow, ``np.unique``s it and builds that shard. No global ``distinct()``
-is needed: hash-prefix shards are disjoint key ranges, so every copy of a
-key lies in the same shard directory and the per-shard ``np.unique`` is
-the global distinct restricted to that shard. The unique is required:
-the bfuse build sizes its arrays by raw key count, so re-delivered keys
-would inflate the filter. Every refresh writes one row per shard id,
-empty shards included, so a loaded version knows its shard count.
+pyarrow and builds that shard through the build's one shard-row maker
+(``dataflow._build_shard_row``), which ``np.unique``s the keys first. No
+global ``distinct()`` is needed: hash-prefix shards are disjoint key
+ranges, so every copy of a key lies in the same shard directory and the
+per-shard ``np.unique`` is the global distinct restricted to that shard;
+re-delivered keys are counted in the version's ``duplicates`` column.
+Every refresh writes one row per shard id, empty shards included, so a
+loaded version knows its shard count.
 
 Version names carry a monotonic **generation** read from the current
 pointer (gen = pointer's gen + 1), NOT the raw batch id: batch ids
@@ -296,7 +297,7 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
             return _build_from_shard_dirs(
                 spark, keys_path,
                 [s for s in range(n_shards) if s not in done_ids],
-                set(listed), n_shards, kind, distinct=True)
+                set(listed), n_shards, kind)
 
         _append_shards(spark, os.path.join(table_path, version), build,
                        key_def)
