@@ -176,10 +176,10 @@ def test_merge_by_disjoint_shards(keys_1m):
     assert routed[1000:].mean() < 0.01
 
 
-def test_peel_strategies_equivalent():
-    """The sorted-scatter peel and the direct ufunc.at peel are the same
-    associative math — identical rounds, selections and found-codes for both
-    families (byte-identical downstream builds)."""
+def test_peel_removes_every_key_once():
+    """The vectorized peel removes every key exactly once and unwinds the
+    slot state to zero, for both families; each bfuse found-code names
+    which of the key's three slots it was peeled from."""
     import numpy as np
 
     from xorf_spark import build as B
@@ -190,33 +190,24 @@ def test_peel_strategies_equivalent():
     keys = rng.integers(0, 2**64, n, dtype=np.uint64)
     _, seed = K.splitmix64(1)
 
+    def check(rounds, total, hashes, *state):
+        assert total == n
+        peeled = np.concatenate([r[0] for r in rounds])
+        assert np.array_equal(np.sort(peeled), np.sort(hashes))
+        assert all(not a.any() for a in state)
+
     lay = K.xor_layout(n)
     cap, bl = lay["capacity"], lay["block_length"]
     hashes = B._sort_by_low32(K.mix(keys, seed))
     g0, g1, g2 = K.xor_h012(hashes, bl)
-
-    def xsetup():
-        counts = B._count3(cap, g0, g1, g2)
-        masks = np.zeros(cap, dtype=np.uint64)
-        np.bitwise_xor.at(masks, g0, hashes)
-        np.bitwise_xor.at(masks, g1, hashes)
-        np.bitwise_xor.at(masks, g2, hashes)
-        return counts, masks
-
-    outs = []
-    for mode in (True, False):
-        counts, masks = xsetup()
-        rounds, total = B._peel(counts, masks,
-                                lambda uh: K.xor_h012(uh, bl), n,
-                                sorted_scatter=mode)
-        outs.append((rounds, total))
-    (ra, ta), (rb, tb) = outs
-    assert ta == tb == n and len(ra) == len(rb)
-    for (uha, sela, _, ja0, ja1, ja2), (uhb, selb, _, jb0, jb1, jb2) \
-            in zip(ra, rb):
-        assert np.array_equal(uha, uhb) and np.array_equal(sela, selb)
-        assert (np.array_equal(ja0, jb0) and np.array_equal(ja1, jb1)
-                and np.array_equal(ja2, jb2))
+    counts = B._count3(cap, g0, g1, g2)
+    masks = np.zeros(cap, dtype=np.uint64)
+    np.bitwise_xor.at(masks, g0, hashes)
+    np.bitwise_xor.at(masks, g1, hashes)
+    np.bitwise_xor.at(masks, g2, hashes)
+    rounds, total = B._peel(counts, masks,
+                            lambda uh: K.xor_h012(uh, bl), n)
+    check(rounds, total, hashes, counts, masks)
 
     lay = K.bfuse_layout(n)
     sl, slm, scl = (lay["segment_length"], lay["segment_length_mask"],
@@ -224,27 +215,17 @@ def test_peel_strategies_equivalent():
     alen = lay["array_len"]
     bh = np.sort(K.mix(keys, seed))
     i0, i1, i2 = K.bfuse_hash_of_hash(bh, sl, slm, scl)
-
-    def bsetup():
-        counts = B._count3(alen, i0, i1, i2)
-        hxor = np.zeros(alen, dtype=np.uint64)
-        np.bitwise_xor.at(hxor, i0, bh)
-        np.bitwise_xor.at(hxor, i1, bh)
-        np.bitwise_xor.at(hxor, i2, bh)
-        posxor = np.zeros(alen, dtype=np.uint8)
-        np.bitwise_xor.at(posxor, i1, np.uint8(1))
-        np.bitwise_xor.at(posxor, i2, np.uint8(2))
-        return counts, hxor, posxor
-
-    outs = []
-    for mode in (True, False):
-        counts, hxor, posxor = bsetup()
-        rounds, total = B._peel(
-            counts, hxor, lambda uh: K.bfuse_hash_of_hash(uh, sl, slm, scl),
-            n, posxor=posxor, sorted_scatter=mode)
-        outs.append((rounds, total))
-    (ra, ta), (rb, tb) = outs
-    assert ta == tb == n and len(ra) == len(rb)
-    for (uha, sela, fa, *_ja), (uhb, selb, fb, *_jb) in zip(ra, rb):
-        assert np.array_equal(uha, uhb) and np.array_equal(sela, selb)
-        assert np.array_equal(fa, fb)
+    counts = B._count3(alen, i0, i1, i2)
+    hxor = np.zeros(alen, dtype=np.uint64)
+    np.bitwise_xor.at(hxor, i0, bh)
+    np.bitwise_xor.at(hxor, i1, bh)
+    np.bitwise_xor.at(hxor, i2, bh)
+    posxor = np.zeros(alen, dtype=np.uint8)
+    np.bitwise_xor.at(posxor, i1, np.uint8(1))
+    np.bitwise_xor.at(posxor, i2, np.uint8(2))
+    rounds, total = B._peel(
+        counts, hxor, lambda uh: K.bfuse_hash_of_hash(uh, sl, slm, scl),
+        n, posxor=posxor)
+    check(rounds, total, bh, counts, hxor, posxor)
+    for _, sel, fnd, j0, j1, j2 in rounds:
+        assert np.array_equal(np.choose(fnd, (j0, j1, j2)), sel)

@@ -376,6 +376,39 @@ def test_shingle_keys(spark, token_df):
     assert sk.select("key").distinct().count() > 0
 
 
+def test_shingle_keys_match_the_transform_form(spark):
+    """Both exploded shingle-key streams (``explode_shingles``) return the
+    rows of the exploded ``transform`` array they replace, value for value
+    and in order, so ``shingle_key_def`` stays v2 and stored tables and
+    oracle answers are unchanged. Docs of length 0, k-1, k and k+5, one
+    with a NULL token, and one whose token array is NULL."""
+    from xorf_spark.functions import shingle_hashes_sql
+    from xorf_spark.operators import decontam
+
+    k = 8
+    rows = [(i, [j * 7 + i for j in range(n)])
+            for i, n in enumerate((0, k - 1, k, k + 5))]
+    rows += [(4, [1, 2, None, 4, 5, 6, 7, 8, 9]), (5, None)]
+    tok = spark.createDataFrame(rows, "doc_id long, tokens array<long>") \
+        .coalesce(1)
+    want = tok.select("doc_id", F.explode(
+        F.expr(shingle_hashes_sql("tokens", k))).alias("key")).collect()
+    got = D.shingle_keys(tok, k=k).select("doc_id", "key").collect()
+    assert len(want) == 1 + 6 + 2
+    assert got == want
+
+    words = tok.select("doc_id", F.concat_ws(
+        " ", F.col("tokens").cast("array<string>")).alias("text"))
+    words = words.withColumn(
+        "text", F.when(F.col("doc_id") == 5, None).otherwise(F.col("text")))
+    want = (words.withColumn("__w", F.split("text", " "))
+            .select("doc_id", F.explode(F.expr(
+                shingle_hashes_sql("__w", k))).alias("key")).collect())
+    got = decontam.shingle_keys(words, n=k).collect()
+    assert len(want) == 1 + 6 + 1
+    assert got == want
+
+
 def test_cogrouped_probe_matches_broadcast(spark, token_df, built):
     shard_df, table = built
     keyed = (D.doc_keys(token_df).limit(3000)

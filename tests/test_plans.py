@@ -28,6 +28,19 @@ def test_key_derivation_stays_jvm(spark):
         "ArrowEvalPython", "Python")
 
 
+def test_shingle_keys_plan_is_codegen(spark, tmp_path):
+    """Shingle keys come from a compiled ``explode(sequence)`` plus one
+    projection: no interpreted ``transform`` lambda (``ArrayTransform`` is
+    a ``CodegenFallback``) in the executed plan, and the ``Generate`` sits
+    inside a whole-stage-codegen stage."""
+    docs_tokens(spark, 200).write.parquet(str(tmp_path / "docs"))
+    keys = D.shingle_keys(spark.read.parquet(str(tmp_path / "docs"))) \
+        .select("key")
+    plan = keys._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan, plan
+    assert re.search(r"\*\(\d+\) Generate ", plan), plan
+
+
 def test_scan_pushdown_reaches_parquet(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     q = li.where(F.col("l_orderkey") == 7).select("l_orderkey", "l_quantity")

@@ -57,7 +57,7 @@ def _sort_by_low32(h: np.ndarray) -> np.ndarray:
 
 
 def _peel(counts: np.ndarray, hxor: np.ndarray, idx3_fn, n: int,
-          posxor: np.ndarray | None = None, sorted_scatter: bool = True):
+          posxor: np.ndarray | None = None):
     """Frontier-based vectorized peel of the 3-uniform hypergraph.
 
     Each round removes *every* currently-singleton key at once; only slots
@@ -106,46 +106,34 @@ def _peel(counts: np.ndarray, hxor: np.ndarray, idx3_fn, n: int,
         rounds.append((uh, sel, fnd, j0, j1, j2))
         total += int(uh.size)
         m = int(uh.size)
-        if sorted_scatter:
-            # Packed sort + segmented xor/count reductions instead of six
-            # ufunc.at scatters (default): pack
-            # (slot_index << rowbits | source_row) into a uint64, np.sort it
-            # (2-3x faster than argsort's indirection), reduce per-slot
-            # duplicates with bitwise_xor.reduceat. Interleaved A/B at 8M
-            # keys: xor peel 6.06s vs 6.71s scatter, bfuse 4.19s vs 4.59s —
-            # and the sequential sort degrades less under DRAM contention
-            # than random scatters. Profile: scripts/xor_scaling_probe.py at
-            # commit 2f8c669.
-            rowbits = max((3 * m - 1).bit_length(), 1)
-            idx = np.concatenate((j0, j1, j2)).astype(np.uint64, copy=False)
-            packed = (idx << np.uint64(rowbits)) | np.arange(
-                3 * m, dtype=np.uint64)
-            packed.sort()
-            sidx = packed >> np.uint64(rowbits)
-            rows = (packed & np.uint64((1 << rowbits) - 1)).astype(np.int64)
-            starts = np.flatnonzero(
-                np.concatenate(([True], sidx[1:] != sidx[:-1])))
-            uidx = sidx[starts]
-            hxor[uidx] ^= np.bitwise_xor.reduceat(uh[rows % m], starts)
-            slot_n = np.diff(np.append(starts, sidx.size)).astype(counts.dtype)
-            counts[uidx] -= slot_n
-            if posxor is not None:
-                # source code (0 for j0, 1 for j1, 2 for j2) = row's third
-                posxor[uidx] ^= np.bitwise_xor.reduceat(
-                    (rows // m).astype(np.uint8), starts)
-            frontier = uidx[counts[uidx] == 1]
-            continue
-        np.subtract.at(counts, j0, 1)
-        np.subtract.at(counts, j1, 1)
-        np.subtract.at(counts, j2, 1)
-        np.bitwise_xor.at(hxor, j0, uh)
-        np.bitwise_xor.at(hxor, j1, uh)
-        np.bitwise_xor.at(hxor, j2, uh)
+        # Packed sort + segmented xor/count reductions instead of six
+        # ufunc.at scatters: pack (slot_index << rowbits | source_row)
+        # into a uint64, np.sort it (2-3x faster than argsort's
+        # indirection), reduce per-slot duplicates with
+        # bitwise_xor.reduceat. Interleaved A/B at 8M keys: xor peel
+        # 6.06s vs 6.71s scatter, bfuse 4.19s vs 4.59s; bfuse8 builds at
+        # 1M keys 947 vs 1135 ms, at 124K 108 vs 116 ms, identical bytes.
+        # The sequential sort also degrades less under DRAM contention
+        # than random scatters. Profile: scripts/xor_scaling_probe.py at
+        # commit 2f8c669.
+        rowbits = max((3 * m - 1).bit_length(), 1)
+        idx = np.concatenate((j0, j1, j2)).astype(np.uint64, copy=False)
+        packed = (idx << np.uint64(rowbits)) | np.arange(
+            3 * m, dtype=np.uint64)
+        packed.sort()
+        sidx = packed >> np.uint64(rowbits)
+        rows = (packed & np.uint64((1 << rowbits) - 1)).astype(np.int64)
+        starts = np.flatnonzero(
+            np.concatenate(([True], sidx[1:] != sidx[:-1])))
+        uidx = sidx[starts]
+        hxor[uidx] ^= np.bitwise_xor.reduceat(uh[rows % m], starts)
+        slot_n = np.diff(np.append(starts, sidx.size)).astype(counts.dtype)
+        counts[uidx] -= slot_n
         if posxor is not None:
-            np.bitwise_xor.at(posxor, j1, np.uint8(1))
-            np.bitwise_xor.at(posxor, j2, np.uint8(2))
-        cand = np.unique(np.concatenate((j0, j1, j2)))
-        frontier = cand[counts[cand] == 1]
+            # source code (0 for j0, 1 for j1, 2 for j2) = row's third
+            posxor[uidx] ^= np.bitwise_xor.reduceat(
+                (rows // m).astype(np.uint8), starts)
+        frontier = uidx[counts[uidx] == 1]
     return rounds, total
 
 

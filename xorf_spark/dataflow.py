@@ -126,11 +126,8 @@ def _tune_arrow_feed(spark: SparkSession) -> None:
     """Pin the byte-cap sentinel when the conf holds the default byte count,
     in any spelling. A cap the user set explicitly to the default value
     cannot be told apart from the default, and is pinned too."""
-    try:
-        current = spark.conf.get(_ARROW_MAX_BYTES_KEY)
-    except Exception:  # pre-4.x Spark without the conf: nothing to tune
-        return
-    if _byte_count(current) == _ARROW_MAX_BYTES_DEFAULT:
+    if _byte_count(spark.conf.get(_ARROW_MAX_BYTES_KEY)) == \
+            _ARROW_MAX_BYTES_DEFAULT:
         spark.conf.set(_ARROW_MAX_BYTES_KEY, _ARROW_MAX_BYTES_SENTINEL)
 
 
@@ -193,16 +190,17 @@ def shingle_keys(df: DataFrame, tokens_col: str = "tokens", k: int = 8,
     k scalar array accesses per position instead of the earlier
     ``xxhash64(slice(tokens, i, k))``, whose per-position k-element array
     allocation made shingle derivation the token pipeline's dominant cost
-    (measured 7.6× slower at 54M shingles; BENCH/ROUND4_NOTES.md). Key
+    (measured 7.6× slower at 54M shingles; BENCH/ROUND4_NOTES.md). The
+    positions are an exploded ``sequence`` and the hash one projection
+    over them (:func:`~xorf_spark.functions.explode_shingles`), so
+    whole-stage codegen compiles the lot; exploding a ``transform`` array
+    instead ran an interpreted lambda per shingle (``ArrayTransform`` is
+    a ``CodegenFallback``) and cost a third of ``corpus_build``. Key
     VALUES are an internal fingerprint (build and probe share this
     definition); only determinism and uniformity are contractual."""
-    from .functions import shingle_hashes_sql
+    from .functions import explode_shingles
 
-    n = F.size(F.col(tokens_col))
-    return (df
-            .where(n >= k)
-            .select("*", F.explode(
-                F.expr(shingle_hashes_sql(tokens_col, k))).alias(key_col)))
+    return explode_shingles(df, tokens_col, k, key_col)
 
 
 def _key_col(df: DataFrame, name: str) -> Column:
@@ -596,7 +594,10 @@ def shingle_key_def(k: int) -> str:
     """Canonical ``key_def`` tag for tables built from
     :func:`shingle_keys` output. Bump the version whenever the shingle
     fingerprint definition changes (v2 = scalar element accesses,
-    BENCH/ROUND4_NOTES.md; v1 was ``xxhash64(slice(tokens, i, k))``)."""
+    BENCH/ROUND4_NOTES.md; v1 was ``xxhash64(slice(tokens, i, k))``).
+    Moving from an exploded ``transform`` array to an exploded
+    ``sequence`` plus a projection changed how the keys are computed, not
+    their values, so it is still v2."""
     return f"shingle/xxhash64-scalar/v2/k={int(k)}"
 
 

@@ -6,7 +6,8 @@ This is the canonical LLM-pipeline use of the reference's filter family
 reference src/lib.rs:2-4) at corpus scale:
 
 1. derive 64-bit shingle keys per training doc (pure Catalyst — split →
-   transform → xxhash64 inside a SQL lambda, no python in the row path);
+   explode(sequence) → xxhash64 over the words, no python in the row
+   path);
 2. the eval set's distinct shingle keys build a binary-fuse filter via the
    scale-routed inline build (broadcast ≤64MB / addFile-mmap / cogrouped —
    ``dataflow.filter_semi_join``), which eliminates ~(1-FPP) of training
@@ -42,14 +43,13 @@ def shingle_keys(df: DataFrame, text_col: str = "text",
     # (BENCH/ROUND4_NOTES.md). Key values are internal (train and eval
     # shingles hash identically); word-boundary identity is unchanged
     # (xxhash64 folds each word separately, so "a b"+"c" vs "a"+"b c"
-    # collide no more than the joined form did).
-    from ..functions import shingle_hashes_sql
-    from ._util import reserve_temp_cols
+    # collide no more than the joined form did). explode_shingles keeps
+    # the per-shingle work in compiled code (no transform lambda).
+    from ..functions import explode_shingles
 
-    reserve_temp_cols(df, "__w")
-    return (df.withColumn("__w", F.expr(f"split({text_col}, ' ')"))
-            .select(F.col(id_col), F.explode(
-                F.expr(shingle_hashes_sql("__w", n))).alias("key")))
+    words = df.select(F.col(id_col),
+                      F.expr(f"split({text_col}, ' ')").alias("__w"))
+    return explode_shingles(words, "__w", n, "key").drop("__w")
 
 
 def contaminated_ids(train: DataFrame, eval_df: DataFrame,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import dataflow as D
-from .functions import word_shingles_sql
+from .functions import explode_shingles, word_shingles_sql
 from .sources import tokens_from_documents
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -307,10 +307,9 @@ def q_shingle_stats(spark, sf_dir):
     """Distinct 8-word shingles per source (the shingle key-derivation stage,
     word-level so the oracle can reproduce it without xxhash64)."""
     docs = load(spark, sf_dir, "documents")
-    sh = (docs.withColumn("__w", F.split("text", " "))
-          .select("source",
-                  F.explode(F.expr(word_shingles_sql("__w", 8)))
-                  .alias("shingle")))
+    sh = explode_shingles(docs.select("source",
+                                      F.split("text", " ").alias("__w")),
+                          "__w", 8, "shingle", sep=" ")
     return (sh.groupBy("source")
             .agg(F.countDistinct("shingle").alias("n_distinct_shingles"),
                  F.count(F.lit(1)).alias("n_shingles"))
@@ -337,9 +336,8 @@ def q_shingle_key_dedup(spark, sf_dir):
     (tokenization is an injective per-word mapping in expectation; verified
     exactly at the word level)."""
     docs = load(spark, sf_dir, "documents")
-    sh = (docs.withColumn("__w", F.split("text", " "))
-          .select(F.explode(F.expr(word_shingles_sql("__w", 8)))
-                  .alias("shingle")))
+    sh = explode_shingles(docs.select(F.split("text", " ").alias("__w")),
+                          "__w", 8, "shingle", sep=" ")
     return sh.agg(F.countDistinct("shingle").alias("n_distinct_shingles"))
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sketches as S
-from .functions import word_shingles_sql
+from .functions import explode_shingles
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -235,11 +235,10 @@ def _src01_shingle_sets(spark, sf_dir):
     and the exact-cardinality aggregate. ONE definition keeps both
     queries and the shared SQL oracle in lockstep."""
     docs = _load(spark, sf_dir, "documents")
-    sh = (docs.where(F.col("source").isin("src0", "src1"))
-          .withColumn("__w", F.split("text", " "))
-          .select("source",
-                  F.explode(F.expr(word_shingles_sql("__w", 4)))
-                  .alias("shingle")).cache())
+    words = (docs.where(F.col("source").isin("src0", "src1"))
+             .select("source", F.split("text", " ").alias("__w")))
+    sh = (explode_shingles(words, "__w", 4, "shingle", sep=" ")
+          .select("source", "shingle").cache())
     keyed = sh.select("source", F.xxhash64("shingle").alias("key"))
     exact = (sh.groupBy().agg(
         F.countDistinct(F.when(F.col("source") == "src0",
