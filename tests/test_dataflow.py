@@ -34,7 +34,7 @@ def token_df(spark):
 def built(spark, token_df):
     keys = D.doc_keys(token_df).select("key")
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=8).cache()
-    table = D.FilterTable.from_df(shard_df, n_shards=8)
+    table = D.FilterTable.from_df(shard_df)
     return shard_df, table
 
 
@@ -88,9 +88,9 @@ def test_merge_associativity(spark, token_df):
     (north_rule merge criterion: shards are disjoint hash ranges)."""
     keys = D.doc_keys(token_df).select("key")
     t4 = D.FilterTable.from_df(
-        D.build_filter_df(keys, kind="bfuse8", n_shards=4), n_shards=4)
+        D.build_filter_df(keys, kind="bfuse8", n_shards=4))
     t16 = D.FilterTable.from_df(
-        D.build_filter_df(keys, kind="bfuse8", n_shards=16), n_shards=16)
+        D.build_filter_df(keys, kind="bfuse8", n_shards=16))
     member = np.array([r["key"] for r in keys.distinct().collect()], dtype=np.int64)
     assert t4.contains_np(member).all()
     assert t16.contains_np(member).all()
@@ -163,7 +163,7 @@ def test_probe_state_made_once_per_broadcast(spark, monkeypatch):
     # an int64 Arrow array, as the worker receives it
     member = pa.array(keys.toPandas()["key"], pa.int64())
     table = D.FilterTable.from_df(
-        D.build_filter_df(keys, kind="bfuse8", n_shards=2), n_shards=2)
+        D.build_filter_df(keys, kind="bfuse8", n_shards=2))
     tables = []
     init = D.FilterTable.__init__
 
@@ -260,7 +260,7 @@ def test_probe_state_dies_with_its_broadcast(spark, monkeypatch):
     cms = CountMin(width=1 << 12, depth=4).add_hashes(
         keys.toArrow().column("key").to_numpy().view(np.uint64))
     for _ in range(6):
-        table = D.FilterTable.from_df(shard_df, n_shards=2)
+        table = D.FilterTable.from_df(shard_df)
         member = table.contains_udf(spark)
         count = cms_estimate_udf(spark, cms)
         assert keys.where(member("key") & (count("key") >= 1)).count() == 3000
@@ -288,8 +288,8 @@ def test_probe_state_dies_with_its_broadcast(spark, monkeypatch):
 
 def test_inline_semijoin_shards_by_default(spark, token_df, monkeypatch):
     """Scale-safety of the convenience path: with a small
-    ``target_keys_per_shard`` the inline build must produce >1 shard (the old
-    default funneled everything into n_shards=1)."""
+    ``DEFAULT_TARGET_KEYS_PER_SHARD`` the inline build must produce >1 shard
+    (the old default funneled everything into n_shards=1)."""
     seen = {}
     orig = D.build_filter_df
 
@@ -298,10 +298,10 @@ def test_inline_semijoin_shards_by_default(spark, token_df, monkeypatch):
         return orig(keys_df, **kw)
 
     monkeypatch.setattr(D, "build_filter_df", spy)
+    monkeypatch.setattr(D, "DEFAULT_TARGET_KEYS_PER_SHARD", 64)
     probe = token_df.limit(500).select("doc_id", "tokens")
     build = token_df.where(F.col("source") == "books").select("tokens")
-    got = D.filter_semi_join(probe, build, "tokens", "tokens",
-                             target_keys_per_shard=64).count()
+    got = D.filter_semi_join(probe, build, "tokens", "tokens").count()
     want = probe.join(build.distinct(), on=probe["tokens"] == build["tokens"],
                       how="left_semi").count()
     assert got == want
@@ -310,31 +310,32 @@ def test_inline_semijoin_shards_by_default(spark, token_df, monkeypatch):
 
 def test_inline_semijoin_cogrouped_above_collect_cap(spark, token_df,
                                                      monkeypatch):
-    """Above ``max_collect_fp_bytes`` the inline path must NEVER collect the
-    shard table to the driver — probes route through ``probe_cogrouped``."""
+    """Above the collect cap (``spark.driver.maxResultSize``) the inline
+    path must NEVER collect the shard table to the driver — probes route
+    through ``probe_cogrouped``."""
     def boom(*a, **kw):
         raise AssertionError("driver collect of fingerprints on the big path")
 
     monkeypatch.setattr(D.FilterTable, "from_df", classmethod(
         lambda cls, *a, **kw: boom()))
+    monkeypatch.setattr(D, "_collect_cap", lambda spark: 0)
     probe = token_df.limit(1000).select("doc_id", "tokens")
     build = token_df.where(F.col("source") == "books").select("tokens")
-    got = D.filter_semi_join(probe, build, "tokens", "tokens",
-                             max_collect_fp_bytes=0).count()
+    got = D.filter_semi_join(probe, build, "tokens", "tokens").count()
     want = probe.join(build.distinct(), on=probe["tokens"] == build["tokens"],
                       how="left_semi").count()
     assert got == want
-    got_anti = D.filter_anti_join(probe, build, "tokens", "tokens",
-                                  max_collect_fp_bytes=0).count()
+    got_anti = D.filter_anti_join(probe, build, "tokens", "tokens").count()
     assert got_anti == probe.count() - want
 
 
 def test_from_df_load_refuse_oversize_driver_collect(spark, token_df,
-                                                     tmp_path):
+                                                     tmp_path, monkeypatch):
     """r4 verdict finding #2: the PUBLIC FilterTable.load/from_df on a
-    multi-GB shard table must refuse (pre-summed from num_slots metadata,
-    never by reading the fingerprints) instead of OOMing the driver; the
-    message points at the distributed probe paths."""
+    shard table above the collect cap (``spark.driver.maxResultSize``)
+    must refuse (pre-summed from num_slots metadata, never by reading the
+    fingerprints) instead of failing in the collect; the message points
+    at the distributed probe paths."""
     import os
     import pytest
 
@@ -342,19 +343,55 @@ def test_from_df_load_refuse_oversize_driver_collect(spark, token_df,
     path = os.path.join(str(tmp_path), "ftable")
     D.build_filter_table(keys, path, kind="bfuse8", n_shards=4)
     # tiny cap: the real table exceeds it -> loud refusal, both entry points
+    monkeypatch.setattr(D, "_collect_cap", lambda spark: 16)
     with pytest.raises(ValueError, match="probe_cogrouped"):
-        D.FilterTable.load(spark, path, max_collect_fp_bytes=16)
-    with pytest.raises(ValueError, match="max_collect_fp_bytes"):
-        D.FilterTable.from_df(spark.read.parquet(path),
-                              max_collect_fp_bytes=16)
-    # default cap (4 GiB) admits the small table; probes still work
-    t = D.FilterTable.load(spark, path, n_shards=4)
+        D.FilterTable.load(spark, path)
+    with pytest.raises(ValueError, match="maxResultSize"):
+        D.FilterTable.from_df(spark.read.parquet(path))
+    # the session's cap (1 GiB) admits the small table; probes still work
+    monkeypatch.undo()
+    t = D.FilterTable.load(spark, path)
     assert t.where_member(keys, "key").count() == keys.distinct().count()
     # the estimate is the true byte total (num_slots x width == len(bytes))
     est_true = t.total_fingerprint_bytes
+    monkeypatch.setattr(D, "_collect_cap", lambda spark: est_true - 1)
     with pytest.raises(ValueError):
-        D.FilterTable.load(spark, path, max_collect_fp_bytes=est_true - 1)
-    D.FilterTable.load(spark, path, max_collect_fp_bytes=est_true)
+        D.FilterTable.load(spark, path)
+    monkeypatch.setattr(D, "_collect_cap", lambda spark: est_true)
+    D.FilterTable.load(spark, path)
+
+
+def test_from_df_reads_the_shard_count_off_the_rows(spark, tmp_path):
+    """``from_df`` takes the shard count from the rows, which every build
+    path writes one per shard id. Keys whose top bit is clear fill only
+    the low half of 16 shards; guessing the count from the highest
+    non-empty id probed them with fewer prefix bits and missed some. A
+    table with a shard id missing, or one whose ids disagree with a
+    passed ``n_shards``, raises instead of answering False."""
+    import pytest
+
+    keys = spark.range(5000).select(
+        F.shiftrightunsigned(F.xxhash64("id"), 1).alias("key"))
+    want = keys.toArrow().column("key").to_numpy()
+    table = D.FilterTable.from_df(D.build_filter_df(keys, n_shards=16))
+    assert table.n_shards == 16 and sorted(table.rows) == list(range(16))
+    assert table.contains_np(want).all()
+    path = str(tmp_path / "t")
+    D.build_filter_df(keys, n_shards=16).write.parquet(path)
+    with pytest.raises(ValueError, match="range"):
+        D.FilterTable.from_df(spark.read.parquet(path).where("shard_id != 3"))
+    with pytest.raises(ValueError, match="n_shards=8"):
+        D.FilterTable.from_df(spark.read.parquet(path), n_shards=8)
+    assert D.FilterTable.from_df(spark.read.parquet(path),
+                                 n_shards=16).n_shards == 16
+
+
+def test_collect_cap_is_max_result_size(spark):
+    """The driver-collect cap is Spark's own ``spark.driver.maxResultSize``
+    (1 GiB by default), not a second, looser copy of it."""
+    conf = spark.sparkContext.getConf().get("spark.driver.maxResultSize",
+                                             "1g")
+    assert D._collect_cap(spark) == D._byte_count(conf) == 1 << 30
 
 
 def test_semijoin_backstop_broadcasts_small_build_side(spark, token_df):
@@ -416,8 +453,13 @@ def test_cogrouped_probe_matches_broadcast(spark, token_df, built):
                      .otherwise(F.col("key")).alias("key")))
     got = D.probe_cogrouped(keyed, shard_df, n_shards=8)
     # NULL keys are verdicted inside the cogroup: probe_df is scanned once,
-    # with no NULL-row branch unioned back in
-    assert "Union" not in got._jdf.queryExecution().optimizedPlan().toString()
+    # with no NULL-row branch unioned back in (the only Union is the build
+    # plan's, which gives every shard id a row)
+    def unions(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(
+            "Union")
+
+    assert unions(got) == unions(shard_df)
     # collected and checked in python: a key-null predicate would be
     # pushed below the probe and hide the NULL rows from it
     rows = got.collect()
@@ -545,7 +587,7 @@ def test_probe_staged_counts_and_members(spark, tmp_path):
 
     keys = spark.range(60_000).select(F.xxhash64("id").alias("key"))
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=4)
-    table = D.FilterTable.from_df(shard_df, n_shards=4)
+    table = D.FilterTable.from_df(shard_df)
 
     # all inserted keys must pass (zero FN), counts must cover every probe
     res = D.probe_staged(keys, table, str(tmp_path / "st1")).collect()
@@ -590,7 +632,7 @@ def test_probe_staged_member_commit_portable(spark, tmp_path):
 
     keys = spark.range(30_000).select(F.xxhash64("id").alias("key"))
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=4)
-    table = D.FilterTable.from_df(shard_df, n_shards=4, check_size=False)
+    table = D.FilterTable.from_df(shard_df, check_size=False)
     mdir = str(tmp_path / "members")
     D.probe_staged(keys, table, str(tmp_path / "sa"),
                    members_dir=mdir).collect()
@@ -657,9 +699,9 @@ def test_shipped_files_live_in_the_context_temp_dir(spark, tmp_path,
     keys = spark.range(5000).select(F.xxhash64("id").alias("key"))
     shard_df = D.build_filter_df(keys, n_shards=2).cache()
     # a fresh table per probe: each ships its own files
-    table = D.FilterTable.from_df(shard_df, n_shards=2)
+    table = D.FilterTable.from_df(shard_df)
     assert table.where_member(keys).count() == 5000
-    table = D.FilterTable.from_df(shard_df, n_shards=2)
+    table = D.FilterTable.from_df(shard_df)
     res = D.probe_staged(keys, table, str(tmp_path / "st")).collect()
     assert sum(r["n_members"] for r in res) == 5000
     shard_df.unpersist()
@@ -680,7 +722,7 @@ def test_where_member_null_semantics_and_members(spark):
 
     keys = spark.range(80_000).select(F.xxhash64("id").alias("key"))
     table = D.FilterTable.from_df(
-        D.build_filter_df(keys, kind="bfuse8", n_shards=4), n_shards=4)
+        D.build_filter_df(keys, kind="bfuse8", n_shards=4))
     probes = (spark.range(100_000)
               .select(F.when(F.col("id") % 777 == 0, None)
                       .otherwise(F.xxhash64("id")).alias("key")))

@@ -78,7 +78,7 @@ spark.sparkContext.addPyFile(zip_path)   # executor side
 from xorf_spark import dataflow as D
 keys = spark.range(20000).select(F.xxhash64("id").alias("key"))
 shards = D.build_filter_df(keys, kind="bfuse8", n_shards=4)
-t = D.FilterTable.from_df(shards, n_shards=4)
+t = D.FilterTable.from_df(shards)
 n = t.where_member(keys, "key").count()
 assert n == 20000, n
 

@@ -34,7 +34,7 @@ def test_stream_filter_refresh_zero_fn_and_versions(spark, tmp_path):
     q.processAllAvailable()
     v1 = latest_version(table)
     assert v1 is not None
-    t1 = load_latest_filter_table(spark, table, n_shards=4)
+    t1 = load_latest_filter_table(spark, table)
     all_b1 = spark.range(30_000).select(F.xxhash64("id").alias("key"))
     assert t1.where_member(all_b1, "key").count() == 30_000  # zero FN
 
@@ -44,7 +44,7 @@ def test_stream_filter_refresh_zero_fn_and_versions(spark, tmp_path):
     q.stop()
     v2 = latest_version(table)
     assert v2 is not None and v2 != v1
-    t2 = load_latest_filter_table(spark, table, n_shards=4)
+    t2 = load_latest_filter_table(spark, table)
     union = spark.range(60_000).select(F.xxhash64("id").alias("key"))
     assert t2.where_member(union, "key").count() == 60_000  # zero FN
     # disjoint probes mostly rejected (filter, not a sieve)
@@ -125,7 +125,7 @@ def test_checkpoint_reset_never_reuses_version_names(spark, tmp_path):
     # three more refreshes (batches 0,1,2 of the new incarnation) — names
     # continue the generation chain, never colliding with g0b0/g1b1
     assert cur == "g4b2"
-    t = load_latest_filter_table(spark, table, n_shards=4)
+    t = load_latest_filter_table(spark, table)
     union = spark.range(60_000).select(F.xxhash64("id").alias("key"))
     assert t.where_member(union, "key").count() == 60_000  # zero FN
 
@@ -177,7 +177,7 @@ def test_compact_key_log_shrinks_and_preserves_zero_fn(spark, tmp_path):
           .start())
     q2.processAllAvailable()
     q2.stop()
-    t = load_latest_filter_table(spark, table, n_shards=4)
+    t = load_latest_filter_table(spark, table)
     union = spark.range(40_000).select(F.xxhash64("id").alias("key"))
     assert t.where_member(union, "key").count() == 40_000
 

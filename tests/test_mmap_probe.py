@@ -9,7 +9,7 @@ from xorf_spark import dataflow as D
 def test_via_files_probe_matches_broadcast(spark, monkeypatch):
     keys = spark.range(50_000).select(F.xxhash64("id").alias("key"))
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=4)
-    table = D.FilterTable.from_df(shard_df, n_shards=4)
+    table = D.FilterTable.from_df(shard_df)
 
     probes = spark.range(20_000).select(
         F.xxhash64(F.col("id") + 5_000_000).alias("key")).unionByName(

@@ -416,7 +416,7 @@ def test_streaming_membership(spark, token_df, tmp_path, monkeypatch, limit):
     monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", limit)
     hist = D.doc_keys(token_df).select("key")
     table = D.FilterTable.from_df(
-        D.build_filter_df(hist, kind="bfuse8", n_shards=4), n_shards=4)
+        D.build_filter_df(hist, kind="bfuse8", n_shards=4))
 
     # stream input: half historical keys, half fresh, in 4 files
     fresh = spark.range(500).select(
@@ -806,12 +806,14 @@ def test_sessionize_native_agrees(spark, sf_dir):
 
 def test_edge_cases_empty_and_tiny_inputs(spark, tmp_path):
     """Empty/degenerate inputs across the round-2 operators: empty staged
-    build, empty/self-loop component edges, fraction-0/1 samples, and
+    build (a zero-slot row per shard id), empty/self-loop component edges, fraction-0/1 samples, and
     sub-n-word docs through the gopher n-gram rules (Spark's sequence(1,0)
     is DESCENDING — the CASE guard must keep gram lists empty)."""
     empty = spark.range(0).select(F.xxhash64("id").alias("key"))
-    assert D.build_filter_df_staged(
-        empty, str(tmp_path / "st"), n_shards=4).count() == 0
+    shards = D.build_filter_df_staged(
+        empty, str(tmp_path / "st"), n_shards=4).collect()
+    assert sorted(r["shard_id"] for r in shards) == [0, 1, 2, 3]
+    assert all(r["num_slots"] == 0 for r in shards)
     e = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(e).count() == 0
     assert dedup.connected_components(

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from xorf_spark import dataflow as D
 from xorf_spark.functions import md5long, register_sql_udfs
-from xorf_spark.plans import assert_single_shuffle, explain_str, shard_plan
+from xorf_spark.plans import assert_single_shuffle, explain_str
 from xorf_spark.plans.inspect import pushed_filters
 from xorf_spark.sources import docs_tokens
 
@@ -49,20 +49,10 @@ def test_scan_pushdown_reaches_parquet(spark, sf_dir):
     assert "l_extendedprice" not in pf   # column pruning effective
 
 
-def test_shard_plan_model():
-    p = shard_plan(10**9, "bfuse8", target_keys_per_shard=4_000_000)
-    assert p.n_shards == 256
-    assert p.peak_bytes_per_task < 512 * 2**20
-    assert not p.broadcastable or p.filter_bytes_total < 1 << 30
-    tiny = shard_plan(1000, "bfuse8")
-    assert tiny.n_shards == 1 and tiny.broadcastable
-    assert "shards" in p.describe()
-
-
 def test_sql_registered_udf(spark):
     keys = spark.range(5_000).select(F.xxhash64("id").alias("key"))
     table = D.FilterTable.from_df(
-        D.build_filter_df(keys, kind="bfuse8", n_shards=2), n_shards=2)
+        D.build_filter_df(keys, kind="bfuse8", n_shards=2))
     register_sql_udfs(spark, table, name="xorf_contains_test")
     keys.createOrReplaceTempView("xorf_keys_test")
     n = spark.sql("SELECT count(*) AS n FROM xorf_keys_test "
@@ -273,7 +263,7 @@ def test_sql_registered_udf_null_safe(spark):
     SQL flavor)."""
     keys = spark.range(20_000).select(F.xxhash64("id").alias("key"))
     table = D.FilterTable.from_df(
-        D.build_filter_df(keys, kind="bfuse8", n_shards=2), n_shards=2)
+        D.build_filter_df(keys, kind="bfuse8", n_shards=2))
     register_sql_udfs(spark, table, name="xorf_contains_nulltest")
     (keys.select(F.when(F.col("key") % 7 == 0, None)
                  .otherwise(F.col("key")).alias("key"))
@@ -386,7 +376,7 @@ def _join_inputs(spark):
     build = spark.range(0, 20_000, 3).select(F.col("id").alias("bk"))
     probe = spark.range(30_000).select(F.col("id").alias("pk"))
     table = D.FilterTable.from_df(D.build_filter_df(
-        D.doc_keys(build, "bk"), kind="bfuse8", n_shards=2), n_shards=2)
+        D.doc_keys(build, "bk"), kind="bfuse8", n_shards=2))
     return probe, build, table
 
 

@@ -743,7 +743,7 @@ def test_filter_probe_null_semantics(spark, keyed_df):
 
     shard_df = D.build_filter_df(keyed_df.select("key"), kind="bfuse8",
                                  n_shards=4)
-    table = D.FilterTable.from_df(shard_df, n_shards=4)
+    table = D.FilterTable.from_df(shard_df)
     with_nulls = keyed_df.select(
         F.when(F.col("key") % 10 == 0, None).otherwise(F.col("key"))
         .alias("key"))

@@ -79,9 +79,12 @@ def zero_density_series(shard_df: DataFrame, window: int = 2000,
                         stride: int = 333) -> DataFrame:
     """The reference's zeroes.txt series, distributed: sliding-window count
     of zero fingerprints (window ``window``, sampled every ``stride`` slots —
-    analysis/src/zeroes.rs:24-36), one downsampled series per shard."""
+    analysis/src/zeroes.rs:24-36), one downsampled series per shard.
+    Zero-slot shards (no keys) have no series and are skipped."""
 
     def stats(sid, kind, fps):
+        if not fps.size:
+            return None
         cs = np.concatenate(([0], np.cumsum(fps == 0, dtype=np.int64)))
         idx = np.arange(window, fps.size, stride)
         series = (cs[idx + 1] - cs[idx + 1 - window]).astype(np.int32)

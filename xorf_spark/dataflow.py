@@ -18,9 +18,13 @@ here Spark-first (SURVEY.md §4.2):
 - build: ``groupBy(shard_id).applyInArrow`` running the vectorized numpy
   kernel (reference construction, src/prelude/bfuse.rs:99-316) on one Arrow
   batch of deduped keys per shard;
-- probe: broadcast of shard (descriptor, fingerprints) + vectorized Arrow UDF
-  (reference contains, src/prelude/bfuse.rs:321-340); for filters too large to
-  broadcast, a cogrouped shard-routed probe that never materializes the whole
+- shard table: one row per id in ``range(n_shards)`` on every build path,
+  so it describes itself like the reference's DMA descriptor
+  (src/lib.rs:139-154): ``FilterTable.from_df`` reads the shard count off it;
+- probe: vectorized Arrow UDF (reference contains,
+  src/prelude/bfuse.rs:321-340) over shard rows broadcast up to 64 MiB,
+  mmapped files up to Spark's ``spark.driver.maxResultSize``, and above
+  that a cogrouped shard-routed probe that never materializes the whole
   filter on one node.
 """
 
@@ -245,23 +249,22 @@ def shard_id_col(key: str | Column = "key", n_shards: int = 16) -> Column:
     return F.shiftrightunsigned(key, 64 - p).cast("int")
 
 
-def pick_n_shards(n_keys: int,
-                  target: int = DEFAULT_TARGET_KEYS_PER_SHARD,
-                  min_shards: int = 1) -> int:
-    """Smallest power of two giving ≤ ``target`` keys per shard."""
-    want = max(min_shards, -(-n_keys // target) if n_keys else 1)
-    return 1 << max(0, (want - 1).bit_length())
+def pick_n_shards(n_keys: int) -> int:
+    """Smallest power of two giving ≤ ``DEFAULT_TARGET_KEYS_PER_SHARD``
+    keys per shard."""
+    want = max(1, -(-n_keys // DEFAULT_TARGET_KEYS_PER_SHARD))
+    return 1 << (want - 1).bit_length()
 
 
-def _shard_count(keys_df: DataFrame, key_col: str, n_shards: int | None,
-                 target: int = DEFAULT_TARGET_KEYS_PER_SHARD) -> int:
+def _shard_count(keys_df: DataFrame, key_col: str,
+                 n_shards: int | None) -> int:
     """``n_shards``, or when None the ``pick_n_shards`` count for the
     non-null keys: the raw count, an upper bound on the distinct count,
     at the price of one count job and no shuffle."""
     if n_shards is not None:
         return n_shards
     return pick_n_shards(keys_df.where(_key_col(
-        keys_df, key_col).isNotNull()).count(), target)
+        keys_df, key_col).isNotNull()).count())
 
 
 # ---------------------------------------------------------------------------
@@ -329,8 +332,7 @@ def _build_shard_arrow_fn(kind: str):
 
 
 def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
-                    n_shards: int | None = None, key_col: str = "key",
-                    target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD
+                    n_shards: int | None = None, key_col: str = "key"
                     ) -> DataFrame:
     """Lazy shard-table DataFrame for a distributed filter build.
 
@@ -348,44 +350,66 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
 
     The shuffle key is the *hashed* key prefix — uniform by construction —
     so source/doc-length skew in the input cannot unbalance the build.
-    Only shards that receive a key get a row; pass ``n_shards`` to
-    ``FilterTable.from_df``.
+    Every shard id in ``range(n_shards)`` gets a row, an empty shard a
+    zero-slot one, so the table carries its own shard count: one NULL-key
+    row per shard id rides the shuffle into each group.
 
     A fuse-family ``kind`` (fuse8/16/32) rarely peels a shard of fewer
     than ~200K keys: the build task fails after ``build_fuse``'s
     attempts. Build bfuse for smaller shards, or use fewer shards.
     """
-    n_shards = _shard_count(keys_df, key_col, n_shards, target_keys_per_shard)
+    n_shards = _shard_count(keys_df, key_col, n_shards)
     return _build_df(keys_df, key_col, n_shards, kind)
 
 
-def _build_df(keys_df: DataFrame, key_col: str, n_shards: int, kind: str,
-              every_shard: bool = False) -> DataFrame:
-    """The plan of :func:`build_filter_df`. With ``every_shard``, one
-    NULL-key row per shard id rides the shuffle, so every id in
-    ``range(n_shards)`` gets a row (an empty shard a zero-slot one): a
-    stored table whose top shards hold no key still carries its shard
-    count."""
+def _build_df(keys_df: DataFrame, key_col: str, n_shards: int,
+              kind: str) -> DataFrame:
+    """The plan of :func:`build_filter_df`, with one NULL-key row per id
+    in ``range(n_shards)`` so that every shard gets a row."""
     sharded = (keys_df.select(_key_col(keys_df, key_col).alias("key"))
                .where(F.col("key").isNotNull())
-               .withColumn("shard_id", shard_id_col("key", n_shards)))
-    if every_shard:
-        sharded = sharded.unionByName(
-            keys_df.sparkSession.range(n_shards, numPartitions=1).select(
-                F.lit(None).cast("long").alias("key"),
-                F.col("id").cast("int").alias("shard_id")))
+               .withColumn("shard_id", shard_id_col("key", n_shards))
+               .unionByName(keys_df.sparkSession.range(
+                   n_shards, numPartitions=1).select(
+                       F.lit(None).cast("long").alias("key"),
+                       F.col("id").cast("int").alias("shard_id"))))
     return (sharded.repartition(n_shards, "shard_id").groupBy("shard_id")
             .applyInArrow(_build_shard_arrow_fn(kind), SHARD_SCHEMA))
+
+
+def _shard_dirs(key_dir: str) -> dict[int, str]:
+    """``{shard_id: directory}`` of the ``shard_id=N`` dirs under
+    ``key_dir`` (the layout ``_stage_keys`` writes and the streaming key
+    log keeps), listed through ``pyarrow.fs``; none when ``key_dir`` does
+    not exist. Raises on parquet files in ``key_dir`` itself: keys written
+    before the shard layout, which every shard-local reader would skip."""
+    from pyarrow import fs as pafs
+
+    fsys, base = pafs.FileSystem.from_uri(key_dir)
+    dirs = {}
+    for info in fsys.get_file_info(
+            pafs.FileSelector(base.rstrip("/"), allow_not_found=True)):
+        if info.is_file and info.base_name.endswith(".parquet"):
+            raise ValueError(
+                f"key directory {key_dir!r} holds unpartitioned parquet "
+                f"files (written before the shard_id=N layout); a "
+                f"shard-local read would skip their keys. Start at a "
+                f"fresh path.")
+        m = re.fullmatch(r"shard_id=(\d+)", info.base_name)
+        if m and info.type == pafs.FileType.Directory:
+            dirs[int(m[1])] = info.path
+    return dirs
 
 
 def _stage_keys(keys_df: DataFrame, stage_dir: str, n_shards: int,
                 key_col: str = "key") -> list[int]:
     """Shared staging stage: project non-null keys → hash-prefix shard id →
     ``write.partitionBy(shard_id)`` parquet (pure JVM), then return the
-    shard ids that actually materialized. Used by both the staged build
-    and the staged probe so the layout and the empty-input handling can
-    never drift apart. Duplicates stay: probe counts keep multiplicity,
-    and the build drops them per shard (``_build_shard_row``)."""
+    sorted shard ids that materialized (:func:`_shard_dirs`; empty input
+    writes no shard directory). Used by both the staged build and the
+    staged probe so the layout can never drift apart. Duplicates stay:
+    probe counts keep multiplicity, and the build drops them per shard
+    (``_build_shard_row``)."""
     spark = keys_df.sparkSession
     # write parallelism: repartitioning to exactly n_shards caps the
     # parquet-encode stage at n_shards tasks (16 writers on a 32-core
@@ -419,17 +443,7 @@ def _stage_keys(keys_df: DataFrame, stage_dir: str, n_shards: int,
      # keep their writers' checksum defaults
      .option("parquet.page.write-checksum.enabled", "false")
      .partitionBy("shard_id").parquet(stage_dir))
-    try:
-        return [int(r.shard_id) for r in
-                spark.read.parquet(stage_dir)
-                .select("shard_id").distinct().collect()]
-    except AnalysisException:
-        # empty input writes no partition dirs at all, so schema inference
-        # fails — the ONLY case this may swallow; anything else (transient
-        # FS error, permissions) must propagate, because returning [] here
-        # would yield an empty shard table whose probes answer False for
-        # every key: silent false negatives
-        return []
+    return sorted(_shard_dirs(stage_dir))
 
 
 def _read_shard_keys(key_dir: str, sid: int, n_shards: int) -> np.ndarray:
@@ -545,14 +559,14 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
     barrier buys retry between the two stages. Since the Arrow feed's
     per-row byte accounting is skipped (``_tune_arrow_feed``), the
     one-shot build is the faster one: 2.77 s against 4.48 s for this
-    path in ``bench.py`` (BENCH_r06). Shards are byte-identical to
-    :func:`build_filter_df`'s.
+    path in ``bench.py`` (BENCH_r06). Shards, one per id in
+    ``range(n_shards)``, are byte-identical to :func:`build_filter_df`'s.
     """
     n_shards = _shard_count(keys_df, key_col, n_shards)
     listed = _stage_keys(keys_df, stage_dir, n_shards, key_col)
     return _build_from_shard_dirs(keys_df.sparkSession, stage_dir,
-                                  sorted(listed), set(listed), n_shards,
-                                  kind)
+                                  list(range(n_shards)), set(listed),
+                                  n_shards, kind)
 
 
 def _build_from_shard_dirs(spark: SparkSession, key_dir: str,
@@ -627,20 +641,17 @@ def _write_keydef(path: str, tag: str) -> None:
 
 def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
                        n_shards: int | None = None, key_col: str = "key",
-                       key_def: str | None = None,
-                       target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD
-                       ) -> None:
+                       key_def: str | None = None) -> None:
     """Checkpoint-resumable build: writes the shard table as parquet at
     ``path``; read it with ``FilterTable.load`` or ``spark.read.parquet``.
 
     Shards are append-only and deterministic (fixed seed schedule from
     splitmix64 state 1 + per-shard fp-init seed), so a restarted job
     anti-joins the already-committed shard ids and only builds the missing
-    ones — the final table is identical to an uninterrupted run. Every
-    shard id in ``range(n_shards)`` gets a row, an empty shard a
-    zero-slot one, so ``FilterTable.load`` infers the shard count. As in
-    :func:`build_filter_df`, a fuse-family shard of fewer than ~200K keys
-    rarely builds: use bfuse for smaller shards, or fewer shards.
+    ones — the final table is identical to an uninterrupted run. As in
+    :func:`build_filter_df`, every shard id gets a row (``FilterTable.load``
+    reads the shard count off them), and a fuse-family shard of fewer than
+    ~200K keys rarely builds: use bfuse for smaller shards, or fewer shards.
 
     ``key_def`` names the DEFINITION of the key column (e.g.
     ``shingle_key_def(8)`` for :func:`shingle_keys` output). It is
@@ -656,12 +667,12 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
     changed).
     """
     def build(done_ids: set[int]) -> DataFrame:
-        n = _shard_count(keys_df, key_col, n_shards, target_keys_per_shard)
+        n = _shard_count(keys_df, key_col, n_shards)
         pending = keys_df
         if done_ids:
             pending = keys_df.where(~shard_id_col(
                 _key_col(keys_df, key_col), n).isin(list(done_ids)))
-        return _build_df(pending, key_col, n, kind, every_shard=True)
+        return _build_df(pending, key_col, n, kind)
 
     _append_shards(keys_df.sparkSession, path, build, key_def)
 
@@ -784,17 +795,23 @@ class FilterTable:
 
     @classmethod
     def from_df(cls, shard_df: DataFrame, n_shards: int | None = None,
-                max_collect_fp_bytes: int | None = None,
                 check_size: bool = True) -> "FilterTable":
         """Collect the shard table into a driver-side FilterTable.
+
+        The shard count is read off the rows: their ids must be exactly
+        ``range(n)``, ``n`` a power of two, which every build path writes.
+        A table with an id missing (or repeated) raises, since probes of
+        the missing shard would answer False for keys it holds. A passed
+        ``n_shards`` is only checked against the rows.
 
         Guarded (r4 verdict finding #2): the fingerprint byte total is
         pre-summed from the METADATA columns (``num_slots`` × fp width —
         the binary column itself is never read by the check, so on a
         parquet-backed frame it is a pruned KB-scale scan) and the
-        collect refuses above ``max_collect_fp_bytes`` (default
-        ``MAX_COLLECT_FP_BYTES``, 4 GiB) instead of silently OOMing the
-        driver. Oversize filters should stay distributed: probe through
+        collect refuses above :func:`_collect_cap`, Spark's own
+        ``spark.driver.maxResultSize``, with an error that names the
+        distributed probe paths, instead of failing inside the collect.
+        Oversize filters should stay distributed: probe through
         ``probe_cogrouped`` / ``probe_staged`` or the auto-routing
         ``filter_semi_join`` / ``filter_anti_join``.
 
@@ -802,52 +819,45 @@ class FilterTable:
         already bounded the size (``_member_flag`` estimates from the key
         count before building) or hold an unmaterialized build plan the
         extra job would re-execute.
-
-        ``n_shards`` defaults to the power of two above the highest shard
-        id. Tables written by ``build_filter_table`` and the streaming
-        refresh hold a row per shard, a zero-slot one for an empty shard,
-        so the default is exact for them; for ``build_filter_df`` output
-        pass it.
         """
         if check_size:
-            limit = (MAX_COLLECT_FP_BYTES if max_collect_fp_bytes is None
-                     else max_collect_fp_bytes)
+            cap = _collect_cap(shard_df.sparkSession)
             width = (F.when(F.col("kind").endswith("32"), F.lit(4))
                      .when(F.col("kind").endswith("16"), F.lit(2))
                      .otherwise(F.lit(1)))
             est = (shard_df.agg(
                 F.sum(F.col("num_slots") * width).alias("b"))
                 .collect()[0]["b"]) or 0
-            if est > limit:
+            if est > cap:
                 raise ValueError(
                     f"shard table holds ~{est / (1 << 30):.2f} GiB of "
-                    f"fingerprints (> {limit / (1 << 30):.2f} GiB "
-                    f"max_collect_fp_bytes) — collecting it would risk "
-                    f"OOMing the driver. Keep the filter distributed: "
-                    f"probe with probe_cogrouped/probe_staged, or use "
-                    f"filter_semi_join/filter_anti_join which auto-route "
-                    f"above this threshold; raise max_collect_fp_bytes "
+                    f"fingerprints, more than spark.driver.maxResultSize "
+                    f"({cap / (1 << 30):.2f} GiB) lets the driver collect. "
+                    f"Keep the filter distributed: probe with "
+                    f"probe_cogrouped/probe_staged, or use "
+                    f"filter_semi_join/filter_anti_join, which route "
+                    f"above this size; raise spark.driver.maxResultSize "
                     f"deliberately if the driver really has the headroom.")
-        rows = {int(r["shard_id"]): r.asDict() for r in shard_df.collect()}
-        if n_shards is None:
-            m = max(rows, default=0)
-            n_shards = 1 << (m.bit_length() if m else 0)
-        return cls(rows, n_shards)
+        rows = [r.asDict() for r in shard_df.collect()]
+        ids = sorted(r["shard_id"] for r in rows)
+        n = len(ids)
+        if (not n or n & (n - 1) or ids != list(range(n))
+                or n_shards not in (None, n)):
+            raise ValueError(
+                f"incomplete shard table: {n} rows, ids up to "
+                f"{max(ids, default=None)}, n_shards={n_shards}. A complete "
+                f"table has one row per id in range(n), n a power of two; "
+                f"a missing shard would probe False for every key it holds.")
+        return cls({r["shard_id"]: r for r in rows}, n)
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str,
-             n_shards: int | None = None,
-             max_collect_fp_bytes: int | None = None) -> "FilterTable":
-        return cls.from_df(spark.read.parquet(path), n_shards,
-                           max_collect_fp_bytes=max_collect_fp_bytes)
+    def load(cls, spark: SparkSession, path: str) -> "FilterTable":
+        return cls.from_df(spark.read.parquet(path))
 
     def _fn(self, sid: int):
         fn = self._fns.get(sid)
         if fn is None:
-            row = self.rows.get(sid)
-            if row is None:  # a shard with no keys and no row
-                return _no_members
-            fn = self._fns[sid] = _filter_from_row(row)
+            fn = self._fns[sid] = _filter_from_row(self.rows[sid])
         return fn
 
     @property
@@ -1005,17 +1015,26 @@ def _ship_fp_files(spark: SparkSession, rows: dict[int, dict]
     return meta
 
 
-#: Above this many estimated fingerprint bytes the inline semi/anti-join stops
-#: collecting the shard table to the driver entirely and routes probes through
-#: the cogrouped shard-local path instead (driver memory never sees the
-#: filter). Below it, ``contains_udf`` still switches broadcast → addFile
-#: mmap at ``MAX_BROADCAST_FP_BYTES``, so the ladder is: broadcast ≤64MB <
-#: mmap files ≤4GB < cogrouped.
-MAX_COLLECT_FP_BYTES = 4 << 30
-
 #: Above this many fingerprint bytes ``contains_udf`` ships a table's
 #: fingerprints as addFile'd, mmapped files instead of broadcasting them.
+#: Above :func:`_collect_cap` the inline semi/anti-join does not collect
+#: the shard table at all and probes through the cogrouped shard-local
+#: path, so the ladder is: broadcast ≤ 64 MiB < mmap files ≤
+#: ``spark.driver.maxResultSize`` < cogrouped.
 MAX_BROADCAST_FP_BYTES = 64 << 20
+
+
+def _collect_cap(spark: SparkSession) -> float:
+    """Fingerprint bytes the driver may collect: Spark's own
+    ``spark.driver.maxResultSize``. Unset means Spark's default, 1g, and
+    0 means no cap, as in Spark."""
+    size = spark.conf.get("spark.driver.maxResultSize", "1g")
+    cap = _byte_count(size)
+    if cap is None:
+        raise ValueError(f"spark.driver.maxResultSize={size!r} does not "
+                         f"parse as a size")
+    return cap or math.inf
+
 
 #: Hint ``F.broadcast`` on the exact-backstop join when the build side has at
 #: most this many distinct keys (8M longs ≈ 64MB hashed relation) instead of
@@ -1032,15 +1051,13 @@ def _est_fp_bytes(n_keys: int, kind: str) -> int:
 def _member_flag(probe_df: DataFrame, build_df: DataFrame,
                  probe_key: str, build_key: str, kind: str,
                  table: FilterTable | None,
-                 target_keys_per_shard: int,
-                 max_collect_fp_bytes: int,
                  out_col: str = "__xorf_member") -> tuple[DataFrame, int]:
     """Probe rows + boolean membership column, routed by filter size.
 
     Returns ``(flagged_df, n_build_keys)``. ``flagged_df`` keeps the derived
     ``__xorf_key`` column (caller drops it). Inline builds shard with
     ``pick_n_shards`` — never the old single-shard funnel — and above
-    ``max_collect_fp_bytes`` the shard table stays distributed
+    :func:`_collect_cap` the shard table stays distributed
     (``probe_cogrouped``), so no driver collect at any size.
 
     The probe UDF is nondeterministic so Catalyst cannot infer the filter
@@ -1059,14 +1076,13 @@ def _member_flag(probe_df: DataFrame, build_df: DataFrame,
         return flag(table), table.n_keys
     keys = doc_keys(build_df.select(build_key), cols=build_key)
     n_build = keys.count()
-    n_shards = pick_n_shards(n_build, target_keys_per_shard)
+    n_shards = pick_n_shards(n_build)
     shard_df = build_filter_df(keys, kind=kind, n_shards=n_shards)
-    if _est_fp_bytes(n_build, kind) <= max_collect_fp_bytes:
+    if _est_fp_bytes(n_build, kind) <= _collect_cap(spark):
         # size already bounded by the conservative pre-build estimate;
         # check_size=False avoids a second job over the unmaterialized
         # build plan (which would rebuild every shard just to re-measure)
-        table = FilterTable.from_df(shard_df, n_shards=n_shards,
-                                    check_size=False)
+        table = FilterTable.from_df(shard_df, check_size=False)
         return flag(table), n_build  # auto broadcast→mmap above 64MB
     flagged = probe_cogrouped(probed, shard_df, n_shards,
                               key_col="__xorf_key", out_col=out_col)
@@ -1084,10 +1100,7 @@ def _build_keys_side(build_df: DataFrame, build_key: str,
 def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,
                      probe_key: str, build_key: str,
                      table: FilterTable | None = None,
-                     kind: str = "bfuse8", exact: bool = True,
-                     target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
-                     max_collect_fp_bytes: int = MAX_COLLECT_FP_BYTES
-                     ) -> DataFrame:
+                     kind: str = "bfuse8", exact: bool = True) -> DataFrame:
     """Membership semi-join: filter pre-pass + (optional) exact backstop.
 
     The filter pass eliminates ~(1-FPP) of non-matching probe rows *before*
@@ -1106,8 +1119,7 @@ def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,
     ``F.broadcast`` when the build side is small enough.
     """
     flagged, n_build = _member_flag(
-        probe_df, build_df, probe_key, build_key, kind, table,
-        target_keys_per_shard, max_collect_fp_bytes)
+        probe_df, build_df, probe_key, build_key, kind, table)
     passed = (flagged.where(F.col("__xorf_member"))
               .drop("__xorf_key", "__xorf_member"))
     if not exact:
@@ -1120,10 +1132,7 @@ def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,
 def filter_anti_join(probe_df: DataFrame, build_df: DataFrame,
                      probe_key: str, build_key: str,
                      table: FilterTable | None = None,
-                     kind: str = "bfuse8",
-                     target_keys_per_shard: int = DEFAULT_TARGET_KEYS_PER_SHARD,
-                     max_collect_fp_bytes: int = MAX_COLLECT_FP_BYTES
-                     ) -> DataFrame:
+                     kind: str = "bfuse8") -> DataFrame:
     """Exact anti-join accelerated by the filter: rows the filter rejects are
     *definitely* non-members (zero false negatives), so only filter-accepted
     rows (matches + FPP residue) can be removed by the exact backstop. NULL
@@ -1133,8 +1142,7 @@ def filter_anti_join(probe_df: DataFrame, build_df: DataFrame,
     probe side only. The probe is nondeterministic, so a predicate on the
     result is not pushed below it: filter ``probe_df`` before calling."""
     flagged, n_build = _member_flag(
-        probe_df, build_df, probe_key, build_key, kind, table,
-        target_keys_per_shard, max_collect_fp_bytes)
+        probe_df, build_df, probe_key, build_key, kind, table)
     on = F.col("__xorf_member") & (F.col(probe_key) == F.col("__xorf_bk"))
     return (flagged.join(_build_keys_side(build_df, build_key, n_build),
                          on=on, how="left_anti")

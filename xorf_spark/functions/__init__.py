@@ -4,6 +4,5 @@ from .registry import (  # noqa: F401
     register_sketch_udfs,
     register_sql_udfs,
     shingle_hashes_sql,
-    shingle_starts_sql,
     word_shingles_sql,
 )

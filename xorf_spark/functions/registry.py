@@ -46,18 +46,6 @@ def register_sketch_udfs(spark: SparkSession, bloom=None, cms=None,
                            tdigest_cdf_udf(spark, tdigest))
 
 
-def shingle_starts_sql(arr: str, n: int) -> str:
-    """SQL fragment: ascending start indices ``[1 .. size(arr)-n+1]`` of
-    every n-element shingle of array expression ``arr``, EMPTY when the
-    array is shorter than n. Guards the Spark pitfall that
-    ``sequence(1, 0)`` is the DESCENDING ``[1, 0]`` — the naive
-    ``greatest(size-n+1, 0)`` clamp emits a bogus start index 0 for short
-    inputs, which ``slice`` rejects at runtime."""
-    return (f"CASE WHEN size({arr}) >= {n} "
-            f"THEN sequence(1, size({arr}) - {n - 1}) "
-            f"ELSE array() END")
-
-
 def shingle_hashes_sql(arr: str, n: int, seed: str | None = None) -> str:
     """SQL fragment: the ARRAY of one xxhash64 per n-element shingle of
     array expression ``arr`` (stride 1), built from n SCALAR element
@@ -65,8 +53,9 @@ def shingle_hashes_sql(arr: str, n: int, seed: str | None = None) -> str:
     ``slice()``: the per-position n-element array allocation made shingle
     derivation the token pipeline's dominant cost (7.6× slower at 54M
     shingles; BENCH/ROUND4_NOTES.md). EMPTY when the array is shorter
-    than n (same descending-``sequence`` guard as
-    :func:`shingle_starts_sql`). ``seed`` appends an extra hashed column
+    than n: the ``size >= n`` guard keeps Spark's ``sequence(0, -1)``,
+    which is the DESCENDING ``[0, -1]``, from emitting a bogus position
+    for short inputs. ``seed`` appends an extra hashed column
     expression (e.g. a permutation index). Hash values are internal
     fingerprints — deterministic and uniform, not portable to other
     engines.
@@ -94,8 +83,9 @@ def word_shingles_sql(arr: str, n: int, sep: str = " ") -> str:
     be a PROJECTED column: Catalyst does not hoist loop-invariant
     subexpressions out of higher-order lambdas, so inlining a ``split()``
     here re-splits the document once per shingle position (the
-    gopher_rules O(words²) bug). EMPTY when the array is shorter than n
-    (same descending-``sequence`` guard as :func:`shingle_starts_sql`).
+    gopher_rules O(words²) bug). EMPTY when the array is shorter than n:
+    the ``size >= n`` guard keeps Spark's ``sequence(1, 0)``, which is
+    the DESCENDING ``[1, 0]``, from emitting a bogus start index.
     Use when the shingle must stay an oracle-portable string; use
     :func:`shingle_hashes_sql` for internal 64-bit keys.
 

@@ -1,2 +1,1 @@
-from .sharding import shard_plan  # noqa: F401
 from .inspect import explain_str, assert_single_shuffle  # noqa: F401

@@ -77,6 +77,7 @@ from ..dataflow import (
     _append_shards,
     _build_from_shard_dirs,
     _key_col,
+    _shard_dirs,
     shard_id_col,
 )
 # shared (filesystem, base) resolver + replace-aware rename: all
@@ -120,42 +121,19 @@ def _generation(version: str | None) -> int:
     return int(m.group(1)) if m else -1
 
 
-def load_latest_filter_table(spark: SparkSession, table_path: str,
-                             **kw) -> FilterTable:
+def load_latest_filter_table(spark: SparkSession,
+                             table_path: str) -> FilterTable:
     """Load the newest complete filter table under ``table_path``."""
     v = latest_version(table_path)
     if v is None:
         raise FileNotFoundError(
             f"no completed filter version under {table_path} "
             f"(stream not refreshed yet)")
-    shard_df = spark.read.parquet(os.path.join(table_path, v))
-    return FilterTable.from_df(shard_df, **kw)
+    return FilterTable.load(spark, os.path.join(table_path, v))
 
 
 #: options of every key-log write: uniform 64-bit keys are incompressible
 _LOG_WRITE = {"compression": "none", "parquet.enable.dictionary": "false"}
-
-
-def _log_shard_dirs(keys_path: str) -> dict[int, str]:
-    """``{shard_id: directory}`` of the key log's ``shard_id=N`` dirs.
-    Raises on parquet files in the log's root: a log written before the
-    shard layout, which a shard-local refresh would silently skip."""
-    from pyarrow import fs as pafs
-
-    fsys, base = _fs(keys_path)
-    dirs = {}
-    for info in fsys.get_file_info(
-            pafs.FileSelector(base, allow_not_found=True)):
-        if info.is_file and info.base_name.endswith(".parquet"):
-            raise ValueError(
-                f"key log {keys_path!r} holds unpartitioned parquet files "
-                f"(a log written before the shard_id=N layout); a refresh "
-                f"would skip their keys. Start the stream at a fresh "
-                f"table path.")
-        m = re.fullmatch(r"shard_id=(\d+)", info.base_name)
-        if m and info.type == pafs.FileType.Directory:
-            dirs[int(m[1])] = info.path
-    return dirs
 
 
 def compact_key_log(spark: SparkSession, table_path: str) -> int:
@@ -191,7 +169,7 @@ def compact_key_log(spark: SparkSession, table_path: str) -> int:
 
     keys_path = os.path.join(table_path, "keys")
     fsys, base = _fs(keys_path)
-    dirs = _log_shard_dirs(keys_path).values()
+    dirs = _shard_dirs(keys_path).values()
     old = [f.path for d in dirs for f in fsys.get_file_info(
         pafs.FileSelector(d)) if f.is_file and f.path.endswith(".parquet")]
     if not old:
@@ -286,7 +264,7 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
         # (generation, batch) pair — a crashed replay of this very batch,
         # which is the checkpoint-resume case the builder exists for.
         version = f"g{_generation(prev) + 1}b{batch_id}"
-        listed = _log_shard_dirs(keys_path)
+        listed = _shard_dirs(keys_path)
         if max(listed, default=0) >= n_shards:
             raise ValueError(
                 f"key log {keys_path!r} has shard directories up to "
