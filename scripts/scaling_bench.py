@@ -154,7 +154,7 @@ if want("build_xor8_staged"):
 if want("probe_bfuse8_staged"):
     _pb_shards = D.build_filter_df_staged(
         keys, _stage_dir + "_pb", kind="bfuse8", n_shards=128)
-    _pb_table = D.FilterTable.from_df(_pb_shards, check_size=False)
+    _pb_table = D.FilterTable.from_df(_pb_shards)
     _pb_probes = spark.range(n_keys).select(
         F.xxhash64(F.col("id") + 999_000_000).alias("key"))
 
@@ -193,7 +193,7 @@ if want("probe_bfuse8", "probe_cogrouped"):
     probes = spark.range(n_keys).select(
         F.xxhash64(F.col("id") + 999_000_000).alias("key"))
 if want("probe_bfuse8"):
-    table = D.FilterTable.from_df(shard, check_size=False)
+    table = D.FilterTable.from_df(shard)
     out["probe_bfuse8_secs"] = best_of(
         lambda: table.where_member(probes, "key").count())
 

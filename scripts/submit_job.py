@@ -44,8 +44,7 @@ def main() -> None:
     keyed = (D.shingle_keys(tokens_from_documents(docs), k=8)
              .select("key").cache())  # five actions below reuse it
     table = D.FilterTable.from_df(
-        D.build_filter_df(keyed, kind="bfuse8", n_shards=4),
-        check_size=False)  # inline build plan: pre-scan would rebuild
+        D.build_filter_df(keyed, kind="bfuse8", n_shards=4))
 
     n_keys = keyed.distinct().count()
     n_rows = keyed.count()

@@ -330,35 +330,53 @@ def test_inline_semijoin_cogrouped_above_collect_cap(spark, token_df,
 
 
 def test_from_df_load_refuse_oversize_driver_collect(spark, token_df,
-                                                     tmp_path, monkeypatch):
+                                                     tmp_path):
     """r4 verdict finding #2: the PUBLIC FilterTable.load/from_df on a
-    shard table above the collect cap (``spark.driver.maxResultSize``)
-    must refuse (pre-summed from num_slots metadata, never by reading the
-    fingerprints) instead of failing in the collect; the message points
-    at the distributed probe paths."""
-    import os
-    import pytest
-
+    shard table above Spark's ``spark.driver.maxResultSize`` must refuse
+    loudly: Spark aborts the one collect, and ``from_df`` raises that as
+    a ValueError that points at the distributed probe paths."""
     keys = D.doc_keys(token_df).select("key")
-    path = os.path.join(str(tmp_path), "ftable")
+    path = str(tmp_path / "ftable")
     D.build_filter_table(keys, path, kind="bfuse8", n_shards=4)
-    # tiny cap: the real table exceeds it -> loud refusal, both entry points
-    monkeypatch.setattr(D, "_collect_cap", lambda spark: 16)
-    with pytest.raises(ValueError, match="probe_cogrouped"):
-        D.FilterTable.load(spark, path)
-    with pytest.raises(ValueError, match="maxResultSize"):
-        D.FilterTable.from_df(spark.read.parquet(path))
+    # a cap far below the table's ~6 KiB of fingerprints; the live conf
+    # is read by the next job's task set, so it must be restored
+    conf = spark.sparkContext._jsc.sc().conf()
+    prev = conf.getOption("spark.driver.maxResultSize")
+    conf.set("spark.driver.maxResultSize", "2k")
+    try:
+        with pytest.raises(ValueError, match="probe_cogrouped"):
+            D.FilterTable.load(spark, path)
+        with pytest.raises(ValueError, match="maxResultSize"):
+            D.FilterTable.from_df(spark.read.parquet(path))
+    finally:
+        if prev.isDefined():
+            conf.set("spark.driver.maxResultSize", prev.get())
+        else:
+            conf.remove("spark.driver.maxResultSize")
     # the session's cap (1 GiB) admits the small table; probes still work
-    monkeypatch.undo()
     t = D.FilterTable.load(spark, path)
-    assert t.where_member(keys, "key").count() == keys.distinct().count()
-    # the estimate is the true byte total (num_slots x width == len(bytes))
-    est_true = t.total_fingerprint_bytes
-    monkeypatch.setattr(D, "_collect_cap", lambda spark: est_true - 1)
-    with pytest.raises(ValueError):
-        D.FilterTable.load(spark, path)
-    monkeypatch.setattr(D, "_collect_cap", lambda spark: est_true)
-    D.FilterTable.load(spark, path)
+    assert t.where_member(keys, "key").count() == keys.count()
+
+
+def test_load_collects_the_table_in_one_job(spark, tmp_path):
+    """``FilterTable.load`` of a stored table runs the parquet schema
+    inference and the one collect: two jobs. A pre-scan that summed
+    ``num_slots`` before collecting added a job per load (an aggregate
+    with its shuffle stage), and re-ran the whole build over a build
+    plan."""
+    sc = spark.sparkContext
+    keys = spark.range(5000).select(F.xxhash64("id").alias("key"))
+    path = str(tmp_path / "t")
+    D.build_filter_table(keys, path, n_shards=4)
+    group = "filter-table-load"
+    sc.setJobGroup(group, group)
+    try:
+        table = D.FilterTable.load(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert table.n_shards == 4
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 2, sorted(jobs)
 
 
 def test_from_df_reads_the_shard_count_off_the_rows(spark, tmp_path):
@@ -384,6 +402,25 @@ def test_from_df_reads_the_shard_count_off_the_rows(spark, tmp_path):
         D.FilterTable.from_df(spark.read.parquet(path), n_shards=8)
     assert D.FilterTable.from_df(spark.read.parquet(path),
                                  n_shards=16).n_shards == 16
+
+
+def test_probe_cogrouped_refuses_a_wrong_shard_count(spark):
+    """Every build writes one row per shard id, so the cogrouped probe
+    can tell a wrong ``n_shards`` inside its tasks: a 16-shard table
+    probed as 8 has rows for shards 8-15 (it marked 353 of 5000 inserted
+    keys as members, with no error), an 8-shard one probed as 16 has no
+    row for the probes routed to shards 8-15."""
+    from pyspark.errors import PythonException
+
+    keys = spark.range(5000).select(F.xxhash64("id").alias("key"))
+    for built, passed in ((16, 8), (8, 16)):
+        shard_df = D.build_filter_df(keys, n_shards=built)
+        with pytest.raises(PythonException,
+                           match=f"ValueError: .*n_shards={passed}"):
+            D.probe_cogrouped(keys, shard_df, n_shards=passed).collect()
+    shard_df = D.build_filter_df(keys, n_shards=16)
+    got = D.probe_cogrouped(keys, shard_df, n_shards=16)
+    assert got.where("member").count() == 5000
 
 
 def test_collect_cap_is_max_result_size(spark):
@@ -632,7 +669,7 @@ def test_probe_staged_member_commit_portable(spark, tmp_path):
 
     keys = spark.range(30_000).select(F.xxhash64("id").alias("key"))
     shard_df = D.build_filter_df(keys, kind="bfuse8", n_shards=4)
-    table = D.FilterTable.from_df(shard_df, check_size=False)
+    table = D.FilterTable.from_df(shard_df)
     mdir = str(tmp_path / "members")
     D.probe_staged(keys, table, str(tmp_path / "sa"),
                    members_dir=mdir).collect()

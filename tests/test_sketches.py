@@ -313,12 +313,24 @@ def test_distributed_keyed_state_equals_local(spark, keyed_df):
     assert dist.to_bytes() == _local_hll(keyed_df, 12).to_bytes()
 
 
-def test_distributed_tree_merge_fanout_invariance(spark, keyed_df):
-    a = sketch_agg(keyed_df, "key", "cms", {"width": 2048, "depth": 4},
-                   fanout=2)
-    b = sketch_agg(keyed_df.repartition(5), "key", "cms",
-                   {"width": 2048, "depth": 4}, fanout=64)
-    assert a.to_bytes() == b.to_bytes()
+def test_distributed_tree_merge_fanout_invariance(spark, keyed_df,
+                                                  monkeypatch):
+    """A fanout-2 merge tree over 17 partials (levels of 9, 5, 3, 2 and 1
+    groups) and ``sketch_agg`` past its driver-merge limit both give the
+    driver merge's state, byte for byte."""
+    from xorf_spark.sketches import dataflow as SD
+    from xorf_spark.sketches import partial_sketches, tree_merge
+
+    params = {"width": 2048, "depth": 4}
+    want = sketch_agg(keyed_df.repartition(5), "key", "cms", params)
+    parts = keyed_df.repartition(17)
+    tree = tree_merge(partial_sketches(parts, "key", "cms", params), 17,
+                      fanout=2).collect()
+    assert len(tree) == 1
+    assert sketch_from_bytes(tree[0].payload).to_bytes() == want.to_bytes()
+    monkeypatch.setattr(SD, "DRIVER_MERGE_MAX_PARTIALS", 4)
+    got = sketch_agg(parts, "key", "cms", params)
+    assert got.to_bytes() == want.to_bytes()
 
 
 def test_distributed_valued_sketches_within_bound(spark, keyed_df):

@@ -23,7 +23,8 @@ here Spark-first (SURVEY.md §4.2):
   (src/lib.rs:139-154): ``FilterTable.from_df`` reads the shard count off it;
 - probe: vectorized Arrow UDF (reference contains,
   src/prelude/bfuse.rs:321-340) over shard rows broadcast up to 64 MiB,
-  mmapped files up to Spark's ``spark.driver.maxResultSize``, and above
+  mmapped files up to Spark's ``spark.driver.maxResultSize`` (which Spark
+  enforces on ``FilterTable.from_df``'s one collect), and above
   that a cogrouped shard-routed probe that never materializes the whole
   filter on one node.
 """
@@ -38,6 +39,7 @@ from typing import Callable
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -794,8 +796,8 @@ class FilterTable:
         return meta
 
     @classmethod
-    def from_df(cls, shard_df: DataFrame, n_shards: int | None = None,
-                check_size: bool = True) -> "FilterTable":
+    def from_df(cls, shard_df: DataFrame,
+                n_shards: int | None = None) -> "FilterTable":
         """Collect the shard table into a driver-side FilterTable.
 
         The shard count is read off the rows: their ids must be exactly
@@ -804,41 +806,25 @@ class FilterTable:
         the missing shard would answer False for keys it holds. A passed
         ``n_shards`` is only checked against the rows.
 
-        Guarded (r4 verdict finding #2): the fingerprint byte total is
-        pre-summed from the METADATA columns (``num_slots`` × fp width —
-        the binary column itself is never read by the check, so on a
-        parquet-backed frame it is a pruned KB-scale scan) and the
-        collect refuses above :func:`_collect_cap`, Spark's own
-        ``spark.driver.maxResultSize``, with an error that names the
-        distributed probe paths, instead of failing inside the collect.
-        Oversize filters should stay distributed: probe through
+        The table is collected in one job, and Spark's own
+        ``spark.driver.maxResultSize`` guards it: Spark aborts a collect
+        whose results exceed the cap, and that refusal is raised here as a
+        ``ValueError`` that names the distributed probe paths. Oversize
+        filters should stay distributed: probe through
         ``probe_cogrouped`` / ``probe_staged`` or the auto-routing
         ``filter_semi_join`` / ``filter_anti_join``.
-
-        ``check_size=False`` skips the pre-scan — for callers that have
-        already bounded the size (``_member_flag`` estimates from the key
-        count before building) or hold an unmaterialized build plan the
-        extra job would re-execute.
         """
-        if check_size:
-            cap = _collect_cap(shard_df.sparkSession)
-            width = (F.when(F.col("kind").endswith("32"), F.lit(4))
-                     .when(F.col("kind").endswith("16"), F.lit(2))
-                     .otherwise(F.lit(1)))
-            est = (shard_df.agg(
-                F.sum(F.col("num_slots") * width).alias("b"))
-                .collect()[0]["b"]) or 0
-            if est > cap:
-                raise ValueError(
-                    f"shard table holds ~{est / (1 << 30):.2f} GiB of "
-                    f"fingerprints, more than spark.driver.maxResultSize "
-                    f"({cap / (1 << 30):.2f} GiB) lets the driver collect. "
-                    f"Keep the filter distributed: probe with "
-                    f"probe_cogrouped/probe_staged, or use "
-                    f"filter_semi_join/filter_anti_join, which route "
-                    f"above this size; raise spark.driver.maxResultSize "
-                    f"deliberately if the driver really has the headroom.")
-        rows = [r.asDict() for r in shard_df.collect()]
+        try:
+            rows = [r.asDict() for r in shard_df.collect()]
+        except Py4JJavaError as e:
+            if "spark.driver.maxResultSize" not in str(e):
+                raise
+            raise ValueError(
+                "shard table exceeds spark.driver.maxResultSize. Keep the "
+                "filter distributed: probe_cogrouped/probe_staged, or "
+                "filter_semi_join/filter_anti_join, which route above "
+                "it; or raise the conf if the driver has the headroom.") \
+                from e
         ids = sorted(r["shard_id"] for r in rows)
         n = len(ids)
         if (not n or n & (n - 1) or ids != list(range(n))
@@ -1020,7 +1006,8 @@ def _ship_fp_files(spark: SparkSession, rows: dict[int, dict]
 #: Above :func:`_collect_cap` the inline semi/anti-join does not collect
 #: the shard table at all and probes through the cogrouped shard-local
 #: path, so the ladder is: broadcast ≤ 64 MiB < mmap files ≤
-#: ``spark.driver.maxResultSize`` < cogrouped.
+#: ``spark.driver.maxResultSize``, which Spark enforces on the collect
+#: (``FilterTable.from_df``) < cogrouped.
 MAX_BROADCAST_FP_BYTES = 64 << 20
 
 
@@ -1079,10 +1066,7 @@ def _member_flag(probe_df: DataFrame, build_df: DataFrame,
     n_shards = pick_n_shards(n_build)
     shard_df = build_filter_df(keys, kind=kind, n_shards=n_shards)
     if _est_fp_bytes(n_build, kind) <= _collect_cap(spark):
-        # size already bounded by the conservative pre-build estimate;
-        # check_size=False avoids a second job over the unmaterialized
-        # build plan (which would rebuild every shard just to re-measure)
-        table = FilterTable.from_df(shard_df, check_size=False)
+        table = FilterTable.from_df(shard_df)
         return flag(table), n_build  # auto broadcast→mmap above 64MB
     flagged = probe_cogrouped(probed, shard_df, n_shards,
                               key_col="__xorf_key", out_col=out_col)
@@ -1100,14 +1084,15 @@ def _build_keys_side(build_df: DataFrame, build_key: str,
 def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,
                      probe_key: str, build_key: str,
                      table: FilterTable | None = None,
-                     kind: str = "bfuse8", exact: bool = True) -> DataFrame:
-    """Membership semi-join: filter pre-pass + (optional) exact backstop.
+                     kind: str = "bfuse8") -> DataFrame:
+    """Membership semi-join: filter pre-pass + exact backstop.
 
     The filter pass eliminates ~(1-FPP) of non-matching probe rows *before*
-    the shuffle; with ``exact=True`` a real ``left_semi`` join removes the
-    residual false positives, so the result equals the exact semi-join — at a
-    fraction of the shuffled bytes. This is the distributed analog of the
-    reference's "filter in front of slower lookup" pattern (src/lib.rs:2-4).
+    the shuffle; a real ``left_semi`` join then removes the residual false
+    positives, so the result equals the exact semi-join — at a fraction of
+    the shuffled bytes (``where_member`` is the filter pass alone). This
+    is the distributed analog of the reference's "filter in front of
+    slower lookup" pattern (src/lib.rs:2-4).
     NULL probe keys are dropped. The filter runs once per probe row, on the
     probe side only. The probe is nondeterministic (see ``_member_flag``),
     so a predicate on the result is not pushed below it: filter
@@ -1122,8 +1107,6 @@ def filter_semi_join(probe_df: DataFrame, build_df: DataFrame,
         probe_df, build_df, probe_key, build_key, kind, table)
     passed = (flagged.where(F.col("__xorf_member"))
               .drop("__xorf_key", "__xorf_member"))
-    if not exact:
-        return passed
     return passed.join(_build_keys_side(build_df, build_key, n_build),
                        on=F.col(probe_key) == F.col("__xorf_bk"),
                        how="left_semi")
@@ -1156,17 +1139,25 @@ def probe_cogrouped(probe_df: DataFrame, shard_df: DataFrame,
     the same hash prefix used at build time and cogroup (``applyInArrow``)
     with the shard table, so each task sees exactly one shard's
     fingerprints (mmap-scale). NULL keys fall into the NULL ``shard_id``
-    group, which no shard row joins, and get a NULL verdict there."""
+    group, which no shard row joins, and get a NULL verdict there. A task
+    raises ``ValueError`` on a probe group with no shard row or a shard
+    row with id ≥ ``n_shards`` (a wrong ``n_shards``); it cannot see a
+    table with fewer shards when every probe key falls in its id range."""
     probes = probe_df.withColumn(
         "shard_id", shard_id_col(_key_col(probe_df, key_col), n_shards))
     out_schema = StructType(
         probe_df.schema.fields + [StructField(out_col, BooleanType(), True)])
 
     def probe(pkeys: pa.Table, shard: pa.Table) -> pa.Table:
+        # every build writes one row per shard id: only the NULL-key
+        # group may lack one
+        row = shard.slice(0, 1).to_pylist()[0] if shard.num_rows else None
+        sid = (row or pkeys.slice(0, 1).to_pylist()[0])["shard_id"]
+        if sid is not None and (row is None or sid >= n_shards):
+            raise ValueError(f"shard {sid} {'has' if row else 'lacks'} a "
+                             f"row: n_shards={n_shards} is not the table's")
+        fn = _no_members if row is None else _filter_from_row(row)
         pkeys = pkeys.drop_columns(["shard_id"])
-        # no shard row: a shard with no keys, or the NULL-key group
-        fn = (_filter_from_row(shard.slice(0, 1).to_pylist()[0])
-              if shard.num_rows else _no_members)
         verdict = _apply_null_aware(lambda k: fn(k.view(np.uint64)),
                                     pkeys.column(key_col).combine_chunks(),
                                     pa.int64())

@@ -119,9 +119,7 @@ def _family_zero_fn_query(kinds: list[str], min_keys: int):
                 n_shards = 1 if kind.startswith("fuse") else 4
                 shard_df = D.build_filter_df(keyed.select("key"), kind=kind,
                                              n_shards=n_shards)
-                # check_size=False: inline build plan, size bounded
-                # by construction (pre-scan would re-run the build)
-                table = D.FilterTable.from_df(shard_df, check_size=False)
+                table = D.FilterTable.from_df(shard_df)
                 n_true = table.where_member(keyed, "key").count()
                 out.append((kind, n_rows, n_true))
         finally:
@@ -148,7 +146,7 @@ def q_doc_keys_zero_fn(spark, sf_dir):
     tok = tokens_from_documents(docs)
     keyed = D.doc_keys(tok)
     shard_df = D.build_filter_df(keyed.select("key"), kind="bfuse8", n_shards=2)
-    table = D.FilterTable.from_df(shard_df, check_size=False)
+    table = D.FilterTable.from_df(shard_df)
     n_docs = keyed.count()
     n_true = table.where_member(keyed, "key").count()
     return spark.createDataFrame([(n_docs, n_true)],
@@ -166,7 +164,7 @@ def q_shingle_zero_fn(spark, sf_dir):
     tok = tokens_from_documents(docs)
     keyed = D.shingle_keys(tok, k=8)
     shard_df = D.build_filter_df(keyed.select("key"), kind="xor16", n_shards=2)
-    table = D.FilterTable.from_df(shard_df, check_size=False)
+    table = D.FilterTable.from_df(shard_df)
     n_shingles = keyed.count()
     n_true = table.where_member(keyed, "key").count()
     return spark.createDataFrame([(n_shingles, n_true)],
@@ -189,7 +187,7 @@ def q_hash_proxy_strings(spark, sf_dir):
     keyed = cust.withColumn("key", F.xxhash64("c_name"))
     shard_df = D.build_filter_df(keyed.select("key"), kind="bfuse16",
                                  n_shards=1)
-    table = D.FilterTable.from_df(shard_df, check_size=False)
+    table = D.FilterTable.from_df(shard_df)
     n_rows = keyed.count()
     n_true = table.where_member(keyed, "key").count()
     return spark.createDataFrame([(n_rows, n_true)],
@@ -1964,7 +1962,7 @@ def q_fpp_measure(spark, sf_dir):
     out = []
     for kind in ("xor8", "bfuse8", "bfuse16"):
         shard_df = D.build_filter_df(keys, kind=kind, n_shards=4)
-        table = D.FilterTable.from_df(shard_df, check_size=False)
+        table = D.FilterTable.from_df(shard_df)
         n_acc = table.where_member(probes, "key").count()
         # ≤ 2× the published FPP bound on 1M held-out probes (+3σ-ish
         # absolute slack for the tiny-FPP 16-bit variant)

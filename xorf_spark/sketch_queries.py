@@ -15,7 +15,7 @@ while legitimate approximation noise does not. The laws checked:
 - MG:       est ≤ true ≤ est + dsub, dsub ≤ n/(k+1)  (Misra-Gries 1982;
             mergeable form per Agarwal et al. 2013)
 - merge:    HLL/CMS/Bloom state is byte-identical across partitionings and
-            merge-tree fanouts (exact associativity/commutativity)
+            merge orders (exact associativity/commutativity)
 """
 
 from __future__ import annotations
@@ -421,9 +421,9 @@ FROM r WHERE rk = 1 ORDER BY source
 
 def q_sketch_merge_assoc(spark, sf_dir):
     """Merge associativity/commutativity, byte-exact: for each keyed sketch,
-    aggregate the same keys under different partitionings AND different
-    merge-tree fanouts — final serialized state must be identical (the law
-    that makes shard-parallel sketch builds correct at any cluster size)."""
+    aggregate the same keys under different partitionings AND merge orders
+    (driver merge of 4 partials, fanout-2 merge tree of 17) — final state
+    must be identical (the law behind shard-parallel sketch builds)."""
     li = _load(spark, sf_dir, "lineitem")
     keyed = (li.select(F.xxhash64("l_orderkey", "l_linenumber").alias("key"))
              .cache())
@@ -432,11 +432,11 @@ def q_sketch_merge_assoc(spark, sf_dir):
               "bloom": {"n_bits": 1 << 21, "k": 7}}
     rows = []
     for kind in sorted(params):
-        a = S.sketch_agg(keyed.repartition(4), "key", kind, params[kind],
-                         fanout=2)
-        b = S.sketch_agg(keyed.repartition(17), "key", kind, params[kind],
-                         fanout=64)
-        rows.append((kind, a.to_bytes() == b.to_bytes()))
+        a = S.sketch_agg(keyed.repartition(4), "key", kind, params[kind])
+        partials = S.partial_sketches(keyed.repartition(17), "key", kind,
+                                      params[kind])
+        (b,) = S.tree_merge(partials, 17, fanout=2).collect()
+        rows.append((kind, a.to_bytes() == b["payload"]))
     keyed.unpersist()
     return spark.createDataFrame(rows, "kind string, state_identical boolean")
 

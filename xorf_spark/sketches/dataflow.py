@@ -179,6 +179,11 @@ def _merge_group(table: pa.Table) -> pa.Table:
     return pa.Table.from_pylist([row], schema=_PA_PARTIAL)
 
 
+#: Up to this many KB-sized partial rows are collected and merged
+#: driver-side; above it a fan-in tree of merge stages runs first.
+DRIVER_MERGE_MAX_PARTIALS = 1024
+
+
 def tree_merge(partials: DataFrame, n_parts: int,
                fanout: int = 64) -> DataFrame:
     """Fan-in merge tree over partial rows → a single-row DataFrame.
@@ -201,21 +206,20 @@ def tree_merge(partials: DataFrame, n_parts: int,
 
 
 def sketch_agg(df: DataFrame, col: str, kind: str,
-               params: dict | None = None, weight_col: str | None = None,
-               fanout: int = 64, driver_merge_threshold: int = 1024):
+               params: dict | None = None, weight_col: str | None = None):
     """Full aggregation: partial per partition → merge → sketch object.
 
-    Partial rows are KB-sized, so up to ``driver_merge_threshold`` of them
-    are collected and merged driver-side — one Spark stage, no shuffle
-    (exactly how Spark's own TypedImperativeAggregate finishes on a single
-    reducer). Beyond that (100k-partition cluster scans) a fan-in tree of
-    ``applyInArrow`` merge stages keeps every fan-in ≤ ``fanout``.
+    Partial rows are KB-sized, so up to ``DRIVER_MERGE_MAX_PARTIALS`` of
+    them are collected and merged driver-side — one Spark stage, no
+    shuffle (exactly how Spark's own TypedImperativeAggregate finishes on
+    a single reducer). Beyond that (100k-partition cluster scans) a
+    :func:`tree_merge` of ``applyInArrow`` merge stages runs first.
 
     Returns the deserialized sketch (empty sketch if ``df`` has no rows)."""
     partials = partial_sketches(df, col, kind, params, weight_col)
     n_parts = df.rdd.getNumPartitions()
-    if n_parts > driver_merge_threshold:
-        partials = tree_merge(partials, n_parts, fanout)
+    if n_parts > DRIVER_MERGE_MAX_PARTIALS:
+        partials = tree_merge(partials, n_parts)
     rows = sorted(partials.collect(), key=lambda r: r["part_id"])
     sk = _merge_payloads(r["payload"] for r in rows)
     return make_sketch(kind, **dict(params or {})) if sk is None else sk
@@ -223,8 +227,7 @@ def sketch_agg(df: DataFrame, col: str, kind: str,
 
 def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
                       params: dict | None = None,
-                      weight_col: str | None = None,
-                      fanout: int = 64, driver_merge_threshold: int = 1024):
+                      weight_col: str | None = None):
     """Staged twin of :func:`sketch_agg`, same trade as the staged filter
     build (``dataflow.build_filter_df_staged``): the JVM→python Arrow feed
     of the raw column is the measured bottleneck of the one-shot
@@ -292,8 +295,8 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
                 yield pa.RecordBatch.from_pylist([row], schema=_PA_PARTIAL)
 
     partials = tasks.mapInArrow(fold_files, PARTIAL_SCHEMA)
-    if len(files) > driver_merge_threshold:
-        partials = tree_merge(partials, len(files), fanout)
+    if len(files) > DRIVER_MERGE_MAX_PARTIALS:
+        partials = tree_merge(partials, len(files))
     rows = sorted(partials.collect(), key=lambda r: r["part_id"])
     return _merge_payloads(r["payload"] for r in rows)
 
