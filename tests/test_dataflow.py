@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from xorf_spark import dataflow as D
+from xorf_spark.filters import FILTER_CLASSES, filter_class
 from xorf_spark.sources import docs_tokens
 
 N_DOCS = 5_000
@@ -979,3 +980,97 @@ def test_every_build_path_dedups_once(spark, tmp_path, kind):
             for col in ("seed", "n_keys", "fingerprints"):
                 assert r[col] == want[sid][col], (path, sid, col)
             assert r["duplicates"] == dups[sid], (path, sid)
+
+
+@pytest.mark.parametrize("kind", sorted(FILTER_CLASSES))
+def test_every_kind_round_trips_the_shard_codec(spark, monkeypatch, kind):
+    """Every kind goes through the shard-row codec: a row's fingerprints
+    are the family's own ``to_dma`` bytes for that shard's keys, and the
+    decoded table has zero false negatives through the broadcast and the
+    mmap transports of ``where_member`` and through ``probe_cogrouped``.
+    The fuse family needs ~200K keys per shard to peel."""
+    cls = filter_class(kind)
+    fuse = kind.startswith("fuse")
+    n, n_shards = (500_000, 2) if fuse else (20_000, 4)
+    keys = spark.range(n).select(F.xxhash64("id").alias("key"))
+    shard_df = D.build_filter_df(keys, kind, n_shards).cache()
+    table = D.FilterTable.from_df(shard_df)
+    want = keys.toArrow().column("key").to_numpy().view(np.uint64)
+    sids = want >> np.uint64(64 - int(np.log2(n_shards)))
+    for sid, row in table.rows.items():
+        kw = {} if kind.startswith("xor") else {"fp_seed": 0xC0FFEE ^ sid}
+        mine = cls.from_keys(want[sids == sid], **kw)
+        assert row["fingerprints"] == mine.to_dma()[1], sid
+        assert row["num_slots"] == len(mine) and row["kind"] == kind
+    for limit in (D.MAX_BROADCAST_FP_BYTES, 0):
+        monkeypatch.setattr(D, "MAX_BROADCAST_FP_BYTES", limit)
+        assert D.FilterTable.from_df(shard_df).where_member(
+            keys, "key").count() == n, limit
+    flagged = D.probe_cogrouped(keys, shard_df, n_shards)
+    assert flagged.where(F.col("member")).count() == n
+    shard_df.unpersist()
+
+
+@pytest.mark.parametrize("kind,n", [("bfuse8", 20_000), ("xor8", 20_000),
+                                    ("fuse8", 250_000), ("bfuse16", 20_000)])
+def test_truncated_shard_row_is_refused(kind, n):
+    """A shard row whose fingerprints cannot hold its descriptor's layout
+    is refused with ``ValueError`` when decoded, as ``from_dma`` refuses
+    such DMA bytes; decoding it unchecked failed inside the probe with
+    ``IndexError`` for some keys and answered the rest. A row with keys
+    but no fingerprints is not an empty shard either."""
+    keys = (np.arange(1, n + 1, dtype=np.uint64)
+            * np.uint64(0x9E3779B97F4A7C15))
+    row = D._build_shard_row(kind, 0, keys)
+    assert D._filter_from_row(row)(keys).all()
+    for fps in (row["fingerprints"][:len(row["fingerprints"]) // 2], b""):
+        with pytest.raises(ValueError, match=f"corrupt {kind} layout"):
+            D._filter_from_row(dict(row, fingerprints=fps))
+    empty = D._build_shard_row(kind, 0, np.empty(0, dtype=np.uint64))
+    assert not D._filter_from_row(empty)(keys).any()
+
+
+def test_family_params_are_shard_columns():
+    """Each family's descriptor names are ``SHARD_SCHEMA`` columns (the
+    codec reads and writes them by name), and ``filter_class`` refuses a
+    kind it does not know."""
+    cols = set(D.SHARD_SCHEMA.fieldNames())
+    for kind, cls in FILTER_CLASSES.items():
+        assert filter_class(kind) is cls
+        assert cls.PARAMS and set(cls.PARAMS) <= cols, kind
+    with pytest.raises(ValueError, match="bfuse7"):
+        filter_class("bfuse7")
+
+
+def test_unknown_kind_is_refused_before_any_job(spark, tmp_path):
+    """An unknown ``kind`` raises ``ValueError`` on the driver before any
+    Spark job runs. It used to pass every driver-side step and fail in a
+    worker task, after the build-side count and more had already run."""
+    from xorf_spark.streaming import stream_filter_refresh
+
+    sc = spark.sparkContext
+    keys = spark.range(5000).select(F.xxhash64("id").alias("key"))
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").alias("key"))
+    calls = {
+        "build_filter_df": lambda: D.build_filter_df(keys, kind="bfuse7"),
+        "build_filter_df_staged": lambda: D.build_filter_df_staged(
+            keys, str(tmp_path / "stage"), kind="bfuse7"),
+        "build_filter_table": lambda: D.build_filter_table(
+            keys, str(tmp_path / "table"), kind="bfuse7"),
+        "filter_semi_join": lambda: D.filter_semi_join(
+            keys, keys, "key", "key", kind="bfuse7"),
+        "filter_anti_join": lambda: D.filter_anti_join(
+            keys, keys, "key", "key", kind="bfuse7"),
+        "stream_filter_refresh": lambda: stream_filter_refresh(
+            stream, str(tmp_path / "stream"), kind="bfuse7"),
+    }
+    for name, call in calls.items():
+        group = f"unknown-kind-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="bfuse7"):
+                call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not sc.statusTracker().getJobIdsForGroup(group), name

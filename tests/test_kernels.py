@@ -173,15 +173,6 @@ def test_fuse_layout():
     assert lay["capacity"] * 8 / 1_000_000 < 9.101  # Fuse8 bound (src/fuse8.rs:157)
 
 
-def test_scatter_xor_folds_duplicates():
-    out = np.zeros(8, dtype=np.uint64)
-    idx = np.array([1, 1, 1, 3], dtype=np.int64)
-    vals = np.array([5, 6, 7, 9], dtype=np.uint64)
-    K.scatter_xor(out, idx, vals)
-    assert out[1] == 5 ^ 6 ^ 7
-    assert out[3] == 9
-
-
 def test_fingerprint_truncation():
     h = np.array([0x1234567890ABCDEF], dtype=np.uint64)
     full = int(h[0]) ^ (int(h[0]) >> 32)

@@ -32,13 +32,23 @@ def test_shingle_keys_plan_is_codegen(spark, tmp_path):
     """Shingle keys come from a compiled ``explode(sequence)`` plus one
     projection: no interpreted ``transform`` lambda (``ArrayTransform`` is
     a ``CodegenFallback``) in the executed plan, and the ``Generate`` sits
-    inside a whole-stage-codegen stage."""
+    inside a whole-stage-codegen stage. Over a projected ``split``
+    (``decontam.shingle_keys``) each document is split once: a
+    ``where(size(arr) >= n)`` guard was pushed below the projection and
+    split every document a second time."""
+    from xorf_spark.operators.decontam import shingle_keys as text_shingles
+
     docs_tokens(spark, 200).write.parquet(str(tmp_path / "docs"))
-    keys = D.shingle_keys(spark.read.parquet(str(tmp_path / "docs"))) \
-        .select("key")
-    plan = keys._jdf.queryExecution().executedPlan().toString()
-    assert "lambdafunction" not in plan, plan
-    assert re.search(r"\*\(\d+\) Generate ", plan), plan
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    text = docs.select("doc_id", F.array_join("tokens", " ").alias("text"))
+    text.write.parquet(str(tmp_path / "text"))
+    for keys, n_split in (
+            (D.shingle_keys(docs).select("key"), 0),
+            (text_shingles(spark.read.parquet(str(tmp_path / "text"))), 1)):
+        plan = keys._jdf.queryExecution().executedPlan().toString()
+        assert "lambdafunction" not in plan, plan
+        assert re.search(r"\*\(\d+\) Generate ", plan), plan
+        assert plan.count("split(") == n_split, plan
 
 
 def test_scan_pushdown_reaches_parquet(spark, sf_dir):

@@ -13,7 +13,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from .dataflow import _fp_bits
+from .filters import filter_class
 from .kernels import _FP_DTYPES
 
 ZERO_DENSITY_SCHEMA = ("shard_id int, kind string, num_slots long, "
@@ -37,7 +37,7 @@ def _per_shard(shard_df: DataFrame, stats, schema: str,
             out = []
             for sid, kind, raw in zip(*(batch.column(c).to_pylist() for c in
                                         ("shard_id", "kind", "fingerprints"))):
-                fps = np.frombuffer(raw, dtype=_FP_DTYPES[_fp_bits(kind)])
+                fps = np.frombuffer(raw, dtype=_FP_DTYPES[filter_class(kind).FP_BITS])
                 row = stats(sid, kind, fps)
                 if row is not None:
                     out.append(row)

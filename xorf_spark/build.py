@@ -139,20 +139,10 @@ def _peel(counts: np.ndarray, hxor: np.ndarray, idx3_fn, n: int,
 
 @dataclass
 class BuildResult:
-    kind: str                 # "xor8" | ... | "bfuse32" | "fuse8" | ...
     seed: int
     fingerprints: np.ndarray  # flat fp array, dtype uint8/16/32
-    params: dict              # family-specific layout parameters
+    params: dict              # the family's descriptor (filters.*.PARAMS)
     metrics: dict = field(default_factory=dict)
-
-    @property
-    def num_slots(self) -> int:
-        return int(self.fingerprints.size)
-
-    def bits_per_entry(self, n_keys: int) -> float:
-        if n_keys == 0:
-            return float("inf")
-        return self.fingerprints.size * self.fingerprints.dtype.itemsize * 8.0 / n_keys
 
 
 def _check_distinct(keys: np.ndarray) -> None:
@@ -206,7 +196,6 @@ def build_xor(keys: np.ndarray, fp_bits: int = 8, max_iter: int | None = None,
         B[sel] = K.fingerprint(uh, fp_dtype) ^ B[j0] ^ B[j1] ^ B[j2]
 
     return BuildResult(
-        kind=f"xor{fp_bits}",
         seed=int(seed),
         fingerprints=B,
         params={"block_length": bl},
@@ -322,7 +311,6 @@ def build_binary_fuse(keys: np.ndarray, fp_bits: int = 8, max_iter: int = 1000,
         F[assigned] = K.fingerprint(uh, fp_dtype) ^ F[o1] ^ F[o2]
 
     return BuildResult(
-        kind=f"bfuse{fp_bits}",
         seed=int(seed),
         fingerprints=F,
         params={"segment_length": sl, "segment_length_mask": slm,
@@ -404,7 +392,6 @@ def build_fuse(keys: np.ndarray, fp_bits: int = 8, max_iter: int = 1000,
         B[sel] = fp ^ others
 
     return BuildResult(
-        kind=f"fuse{fp_bits}",
         seed=int(seed),
         fingerprints=B,
         params={"segment_length": sl},

@@ -56,8 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import build as B
-from .kernels import _FP_DTYPES
+from .filters import filter_class
 
 MASK64 = (1 << 64) - 1
 
@@ -86,16 +85,6 @@ SHARD_SCHEMA = StructType([
 #: at 1.125 overhead plus the key batch itself — 16M keys/shard ≈ ~500MB peak,
 #: bounded per python worker.
 DEFAULT_TARGET_KEYS_PER_SHARD = 16_000_000
-
-
-VALID_KINDS = ("xor8", "xor16", "xor32", "bfuse8", "bfuse16", "bfuse32",
-               "fuse8", "fuse16", "fuse32")
-
-
-def _fp_bits(kind: str) -> int:
-    if kind not in VALID_KINDS:
-        raise ValueError(f"unknown filter kind {kind!r}; one of {VALID_KINDS}")
-    return int(kind.replace("xor", "").replace("bfuse", "").replace("fuse", ""))
 
 
 _SHIPPED: set[str] = set()
@@ -153,15 +142,26 @@ def ship_package(spark: SparkSession) -> None:
         return
     import os
     import tempfile
-    import zipfile
 
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    parent = os.path.dirname(pkg)
     # under the SparkContext's temp dir, which Spark deletes at shutdown
     zpath = os.path.join(
         tempfile.mkdtemp(prefix="xorf_pyfiles_", dir=sc._temp_dir),
         "xorf_spark.zip")
-    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
+    zip_package(zpath)
+    sc.addPyFile(zpath)
+    _SHIPPED.add(sc.applicationId)
+
+
+def zip_package(out: str) -> None:
+    """Write the package's ``.py`` files to the zip ``out``, each under
+    ``xorf_spark/...``: the ``--py-files`` archive that ``ship_package``
+    adds and ``scripts/make_pyfiles.sh`` writes."""
+    import os
+    import zipfile
+
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    parent = os.path.dirname(pkg)
+    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for root, _dirs, files in os.walk(pkg):
             if "__pycache__" in root:
                 continue
@@ -169,8 +169,6 @@ def ship_package(spark: SparkSession) -> None:
                 if f.endswith(".py"):
                     p = os.path.join(root, f)
                     z.write(p, os.path.relpath(p, parent))
-    sc.addPyFile(zpath)
-    _SHIPPED.add(sc.applicationId)
 
 
 # ---------------------------------------------------------------------------
@@ -280,7 +278,7 @@ def _build_shard_row(kind: str, shard_id: int, keys: np.ndarray) -> dict:
     shard gets a zero-slot row (no fingerprints), which probes False for
     every key: the fuse family cannot build an empty filter at all."""
     t0 = time.time()
-    fp_bits = _fp_bits(kind)
+    cls = filter_class(kind)
     unique = np.unique(keys)
     row = {"shard_id": shard_id, "kind": kind, "seed": 0,
            "block_length": None, "segment_length": None,
@@ -288,22 +286,13 @@ def _build_shard_row(kind: str, shard_id: int, keys: np.ndarray) -> dict:
            "fingerprints": b"", "n_keys": 0, "num_slots": 0, "retries": 0,
            "duplicates": int(keys.size - unique.size), "peel_rounds": 0}
     if unique.size:
-        if kind.startswith("xor"):
-            r = B.build_xor(unique, fp_bits, check_distinct=False)
-        elif kind.startswith("bfuse"):
-            # per-shard deterministic fp-init seed for resumability
-            r = B.build_binary_fuse(unique, fp_bits,
-                                    fp_seed=0xC0FFEE ^ shard_id)
-        else:
-            r = B.build_fuse(unique, fp_bits, check_distinct=False,
-                             fp_seed=0xC0FFEE ^ shard_id)
-        row.update(r.params,
-                   seed=int(np.uint64(r.seed & MASK64).view(np.int64)),
-                   fingerprints=r.fingerprints.astype(
-                       _FP_DTYPES[fp_bits], copy=False).tobytes(),
-                   n_keys=r.metrics["n_keys"], num_slots=r.num_slots,
-                   retries=r.metrics["retries"],
-                   peel_rounds=r.metrics["rounds"])
+        # per-shard deterministic fp-init seed for resumability
+        f = cls.from_distinct_keys(unique, fp_seed=0xC0FFEE ^ shard_id)
+        row.update(zip(cls.PARAMS, f.params),
+                   seed=int(np.uint64(f.seed).view(np.int64)),
+                   fingerprints=f.to_dma()[1], n_keys=f.n_keys,
+                   num_slots=len(f), retries=f.metrics["retries"],
+                   peel_rounds=f.metrics["rounds"])
     row["build_secs"] = time.time() - t0
     return row
 
@@ -360,6 +349,7 @@ def build_filter_df(keys_df: DataFrame, kind: str = "bfuse8",
     than ~200K keys: the build task fails after ``build_fuse``'s
     attempts. Build bfuse for smaller shards, or use fewer shards.
     """
+    filter_class(kind)  # an unknown kind raises before any job
     n_shards = _shard_count(keys_df, key_col, n_shards)
     return _build_df(keys_df, key_col, n_shards, kind)
 
@@ -403,6 +393,18 @@ def _shard_dirs(key_dir: str) -> dict[int, str]:
     return dirs
 
 
+#: parquet options of every key write: uniform 64-bit keys are
+#: incompressible, so snappy + dictionary yield byte-identical file sizes
+#: (measured: 416MB either way at 54M keys) and only burn encode/decode CPU
+KEY_WRITE = {"compression": "none", "parquet.enable.dictionary": "false"}
+
+#: ``KEY_WRITE`` for a transient spill: page CRCs off too, ~10% of encode
+#: CPU (A/B at 54M keys, BENCH/ROUND6_NOTES.md) for integrity over a
+#: minutes-long same-job round trip; durable outputs (shard tables,
+#: members, the streaming key log) keep their writers' checksum defaults
+SPILL_WRITE = {**KEY_WRITE, "parquet.page.write-checksum.enabled": "false"}
+
+
 def _stage_keys(keys_df: DataFrame, stage_dir: str, n_shards: int,
                 key_col: str = "key") -> list[int]:
     """Shared staging stage: project non-null keys → hash-prefix shard id →
@@ -433,17 +435,7 @@ def _stage_keys(keys_df: DataFrame, stage_dir: str, n_shards: int,
      .repartition(n_shards * salt, shard_expr,
                   F.pmod(F.col("key"), F.lit(salt)))
      .withColumn("shard_id", shard_expr)
-     .write.mode("overwrite")
-     # uniform 64-bit keys are incompressible: snappy + dictionary yield
-     # byte-identical file sizes (measured: 416MB either way at 54M keys)
-     # and only burn encode/decode CPU on this transient spill
-     .option("compression", "none")
-     .option("parquet.enable.dictionary", "false")
-     # page CRCs off for the SPILL only: ~10% of encode CPU (A/B at 54M
-     # keys, BENCH/ROUND6_NOTES.md) for integrity over a minutes-long
-     # same-job round trip; durable outputs (shard tables, members)
-     # keep their writers' checksum defaults
-     .option("parquet.page.write-checksum.enabled", "false")
+     .write.mode("overwrite").options(**SPILL_WRITE)
      .partitionBy("shard_id").parquet(stage_dir))
     return sorted(_shard_dirs(stage_dir))
 
@@ -564,6 +556,7 @@ def build_filter_df_staged(keys_df: DataFrame, stage_dir: str,
     path in ``bench.py`` (BENCH_r06). Shards, one per id in
     ``range(n_shards)``, are byte-identical to :func:`build_filter_df`'s.
     """
+    filter_class(kind)  # an unknown kind raises before any job
     n_shards = _shard_count(keys_df, key_col, n_shards)
     listed = _stage_keys(keys_df, stage_dir, n_shards, key_col)
     return _build_from_shard_dirs(keys_df.sparkSession, stage_dir,
@@ -668,6 +661,8 @@ def build_filter_table(keys_df: DataFrame, path: str, kind: str = "bfuse8",
     fresh path, or keep ``key_def=None`` if the definition truly never
     changed).
     """
+    filter_class(kind)  # an unknown kind raises before any job
+
     def build(done_ids: set[int]) -> DataFrame:
         n = _shard_count(keys_df, key_col, n_shards)
         pending = keys_df
@@ -739,31 +734,23 @@ def _no_members(keys: np.ndarray) -> np.ndarray:
 
 
 def _filter_from_row(row) -> Callable[[np.ndarray], np.ndarray]:
-    """Probe callable from a shard row of either transport, without
+    """Probe callable from a shard row of either transport, decoded by the
+    kind's checked constructor (``from_layout``, as ``from_dma``) without
     copying fingerprints: the row's own bytes, or a shipped row's
-    ``__file`` (:func:`_ship_fp_files`), mmapped read-only. A zero-slot
-    row (an empty shard) answers :func:`_no_members`."""
-    kind = row["kind"]
-    dtype = _FP_DTYPES[_fp_bits(kind)]
+    ``__file`` (:func:`_ship_fp_files`), mmapped read-only. A layout the
+    fingerprints cannot hold raises ``ValueError``. A zero-slot row (an
+    empty shard: no fingerprints, no keys) answers :func:`_no_members`."""
+    cls = filter_class(row["kind"])
     if "__file" in row:
         from pyspark import SparkFiles
 
-        fps = np.memmap(SparkFiles.get(row["__file"]), dtype=dtype, mode="r")
-    elif not len(row["fingerprints"]):
+        fps = np.memmap(SparkFiles.get(row["__file"]), mode="r")
+    elif not len(row["fingerprints"]) and not row["n_keys"]:
         return _no_members
     else:
-        fps = np.frombuffer(row["fingerprints"], dtype=dtype)
-    seed = int(row["seed"]) & MASK64
-    if kind.startswith("xor"):
-        bl = int(row["block_length"])
-        return lambda keys: B.contains_xor(keys, seed, bl, fps)
-    if kind.startswith("bfuse"):
-        sl = int(row["segment_length"])
-        slm = int(row["segment_length_mask"])
-        scl = int(row["segment_count_length"])
-        return lambda keys: B.contains_binary_fuse(keys, seed, sl, slm, scl, fps)
-    sl = int(row["segment_length"])
-    return lambda keys: B.contains_fuse(keys, seed, sl, fps)
+        fps = row["fingerprints"]
+    return cls.from_layout(int(row["seed"]) & MASK64,
+                           [int(row[p]) for p in cls.PARAMS], fps).contains
 
 
 class FilterTable:
@@ -1032,7 +1019,7 @@ BROADCAST_JOIN_MAX_KEYS = 8_000_000
 def _est_fp_bytes(n_keys: int, kind: str) -> int:
     """Conservative fingerprint-size estimate before building: slot overhead
     is ≤1.23 (xor) / ≤1.125+32 segs (bfuse/fuse); 1.3 covers all kinds."""
-    return int(n_keys * 1.3) * (_fp_bits(kind) // 8)
+    return int(n_keys * 1.3) * (filter_class(kind).FP_BITS // 8)
 
 
 def _member_flag(probe_df: DataFrame, build_df: DataFrame,
@@ -1052,6 +1039,7 @@ def _member_flag(probe_df: DataFrame, build_df: DataFrame,
     construction). So a predicate on the join's output is not pushed below
     the probe either: filter the probe side before the join.
     """
+    filter_class(kind)  # an unknown kind raises before any job
     spark = probe_df.sparkSession
     probed = doc_keys(probe_df, cols=probe_key, key_col="__xorf_key")
 

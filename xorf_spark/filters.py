@@ -1,8 +1,14 @@
-"""Filter objects: the Python-side equivalent of the reference structs.
+"""Filter families: the one table of what each filter family is.
 
-Each class wraps ``(descriptor params, fingerprints ndarray)`` and exposes a
-**vectorized** ``contains`` over numpy arrays (there is no per-key Python probe
-in any hot path; scalar probes are convenience only).
+A family (xor, binary fuse, fuse) declares its descriptor ``PARAMS`` (the
+``SHARD_SCHEMA`` descriptor columns and the ``BuildResult.params`` keys),
+its DMA ``struct`` format, its build and probe kernels from :mod:`build`,
+the fingerprint slots its probe indices span and its shard-build keywords;
+:class:`_Filter` writes the rest once, mirroring the reference ``Filter``
+trait (contains/len, src/lib.rs:116-125). :func:`filter_class` looks a
+class up by kind, and the shard-row codec (``dataflow._build_shard_row`` /
+``_filter_from_row``) builds and decodes through it. ``contains`` is
+vectorized over numpy arrays; scalar probes are convenience only.
 
 Serialization:
 - ``to_dma() / from_dma()`` on the BinaryFuse family is byte-compatible with the
@@ -33,16 +39,32 @@ def _as_u64_array(keys) -> np.ndarray:
     return np.ascontiguousarray(a, dtype=np.uint64)
 
 
-class _Base:
-    """Shared surface mirroring the reference ``Filter`` trait
-    (contains/len, src/lib.rs:116-125)."""
+class _Filter:
+    """One filter: ``seed``, one attribute per name in ``PARAMS`` and the
+    ``fingerprints`` array, built as ``cls(seed, *params, fingerprints)``.
+    A family adds ``_build`` / ``_probe`` (its kernels), ``_span(*params)``
+    (the slots its probe indices span, < 1 for no valid layout) and
+    ``_distinct_kw(fp_seed)`` (build keywords for distinct keys)."""
 
     KIND: str = ""
     FP_BITS: int = 8
+    #: descriptor fields after the seed, in DMA order
+    PARAMS: tuple[str, ...] = ()
+    #: little-endian DMA descriptor: the u64 seed, then ``PARAMS``
+    DMA: str = ""
 
-    def __init__(self, fingerprints: np.ndarray, n_keys: int = 0):
-        self.fingerprints = fingerprints
+    def __init__(self, seed: int, *layout, n_keys: int = 0,
+                 metrics: dict | None = None):
+        *params, self.fingerprints = layout
+        self.seed = seed
+        for name, value in zip(self.PARAMS, params, strict=True):
+            setattr(self, name, value)
         self.n_keys = n_keys
+        self.metrics = metrics or {}
+
+    @property
+    def params(self) -> tuple[int, ...]:
+        return tuple(getattr(self, p) for p in self.PARAMS)
 
     def __len__(self) -> int:
         # number of fingerprint slots, as in the reference (src/lib.rs:123-124)
@@ -52,7 +74,8 @@ class _Base:
         return bool(self.contains(np.array([key], dtype=np.uint64))[0])
 
     def contains(self, keys) -> np.ndarray:
-        raise NotImplementedError
+        return self._probe(_as_u64_array(keys), self.seed, *self.params,
+                           self.fingerprints)
 
     @property
     def bits_per_entry(self) -> float:
@@ -60,176 +83,140 @@ class _Base:
             return float("inf")
         return len(self) * self.FP_BITS / self.n_keys
 
-
-class _XorBase(_Base):
-    def __init__(self, seed: int, block_length: int, fingerprints: np.ndarray,
-                 n_keys: int = 0, metrics: dict | None = None):
-        super().__init__(fingerprints, n_keys)
-        self.seed = seed
-        self.block_length = block_length
-        self.metrics = metrics or {}
-
     @classmethod
     def from_keys(cls, keys, **kw):
-        keys = _as_u64_array(keys)
-        r = B.build_xor(keys, fp_bits=cls.FP_BITS, **kw)
-        return cls(r.seed, r.params["block_length"], r.fingerprints,
+        r = cls._build(_as_u64_array(keys), fp_bits=cls.FP_BITS, **kw)
+        return cls(r.seed, *(r.params[p] for p in cls.PARAMS), r.fingerprints,
                    n_keys=r.metrics["n_keys"], metrics=r.metrics)
 
-    def contains(self, keys) -> np.ndarray:
-        return B.contains_xor(_as_u64_array(keys), self.seed,
-                              self.block_length, self.fingerprints)
+    @classmethod
+    def from_distinct_keys(cls, keys, fp_seed: int):
+        """Build over keys already known distinct (a shard build dedups
+        first), seeding the unused slots with ``fp_seed`` where the
+        family fills them at random."""
+        return cls.from_keys(keys, **cls._distinct_kw(fp_seed))
 
     def to_dma(self) -> tuple[bytes, bytes]:
-        desc = struct.pack("<QQ", self.seed, self.block_length)
-        return desc, self.fingerprints.astype(_FP_DTYPES[self.FP_BITS], copy=False).tobytes()
-
-    @classmethod
-    def from_dma(cls, descriptor: bytes, fingerprints: bytes, n_keys: int = 0):
-        if len(descriptor) < 16:
-            raise ValueError(
-                f"xor descriptor too short: {len(descriptor)} < 16 bytes")
-        seed, bl = struct.unpack("<QQ", descriptor[:16])
-        fps = np.frombuffer(fingerprints, dtype=_FP_DTYPES[cls.FP_BITS])
-        # probe indices span [0, 3*block_length); a corrupt descriptor
-        # would otherwise turn contains() into out-of-bounds IndexErrors
-        if bl < 1 or fps.size < 3 * bl:
-            raise ValueError(
-                f"corrupt xor DMA: block_length={bl} needs >= {3 * bl} "
-                f"fingerprint slots, got {fps.size}")
-        return cls(seed, bl, fps, n_keys=n_keys)
-
-
-class Xor8(_XorBase):
-    KIND, FP_BITS = "xor8", 8
-
-
-class Xor16(_XorBase):
-    KIND, FP_BITS = "xor16", 16
-
-
-class Xor32(_XorBase):
-    KIND, FP_BITS = "xor32", 32
-
-
-class _BinaryFuseBase(_Base):
-    DESCRIPTOR_LEN = 20  # reference src/prelude/bfuse.rs:75
-
-    def __init__(self, seed: int, segment_length: int, segment_length_mask: int,
-                 segment_count_length: int, fingerprints: np.ndarray,
-                 n_keys: int = 0, metrics: dict | None = None):
-        super().__init__(fingerprints, n_keys)
-        self.seed = seed
-        self.segment_length = segment_length
-        self.segment_length_mask = segment_length_mask
-        self.segment_count_length = segment_count_length
-        self.metrics = metrics or {}
-
-    @classmethod
-    def from_keys(cls, keys, **kw):
-        keys = _as_u64_array(keys)
-        r = B.build_binary_fuse(keys, fp_bits=cls.FP_BITS, **kw)
-        return cls(r.seed, r.params["segment_length"],
-                   r.params["segment_length_mask"],
-                   r.params["segment_count_length"], r.fingerprints,
-                   n_keys=r.metrics["n_keys"], metrics=r.metrics)
-
-    def contains(self, keys) -> np.ndarray:
-        return B.contains_binary_fuse(
-            _as_u64_array(keys), self.seed, self.segment_length,
-            self.segment_length_mask, self.segment_count_length,
-            self.fingerprints)
-
-    def to_dma(self) -> tuple[bytes, bytes]:
-        """Byte-compatible with reference serialize_bfuse_descriptor
-        (src/prelude/bfuse.rs:88-94) + dma_fingerprints (little-endian)."""
-        desc = struct.pack("<QIII", self.seed, self.segment_length,
-                           self.segment_length_mask, self.segment_count_length)
-        return desc, self.fingerprints.astype(_FP_DTYPES[self.FP_BITS], copy=False).tobytes()
+        return (struct.pack(self.DMA, self.seed, *self.params),
+                self.fingerprints.astype(_FP_DTYPES[self.FP_BITS],
+                                         copy=False).tobytes())
 
     @classmethod
     def from_dma(cls, descriptor: bytes, fingerprints: bytes, n_keys: int = 0):
         """Zero-copy probe view (reference BinaryFuseNRef::from_dma,
-        src/bfuse8.rs:159-168; parse_bfuse_descriptor src/prelude/bfuse.rs:79-86)."""
-        if len(descriptor) < 20:
-            raise ValueError(
-                f"bfuse descriptor too short: {len(descriptor)} < 20 bytes")
-        seed, sl, slm, scl = struct.unpack("<QIII", descriptor[:20])
+        src/bfuse8.rs:159-168; parse_bfuse_descriptor
+        src/prelude/bfuse.rs:79-86)."""
+        size = struct.calcsize(cls.DMA)
+        if len(descriptor) < size:
+            raise ValueError(f"{cls.KIND} descriptor too short: "
+                             f"{len(descriptor)} < {size} bytes")
+        seed, *params = struct.unpack(cls.DMA, descriptor[:size])
+        return cls.from_layout(seed, params, fingerprints, n_keys)
+
+    @classmethod
+    def from_layout(cls, seed: int, params, fingerprints, n_keys: int = 0):
+        """The checked constructor of both decoders, DMA bytes
+        (:meth:`from_dma`) and shard rows (``dataflow._filter_from_row``):
+        ``fingerprints`` is any buffer (bytes, a memmap), viewed without a
+        copy. A layout whose probe indices would run past the fingerprint
+        slots raises ``ValueError`` here instead of ``IndexError`` in
+        ``contains``."""
         fps = np.frombuffer(fingerprints, dtype=_FP_DTYPES[cls.FP_BITS])
-        # probe indices span [0, scl + 2*sl) (= array_len) and the mask
-        # must cover exactly the segment; reject corrupt layouts up front
-        # instead of letting contains() raise out-of-bounds IndexErrors
-        if sl < 1 or slm != sl - 1 or fps.size < scl + 2 * sl:
+        need = cls._span(*params)
+        if need < 1 or fps.size < need:
             raise ValueError(
-                f"corrupt bfuse DMA: segment_length={sl} mask={slm} "
-                f"segment_count_length={scl} needs >= {scl + 2 * sl} "
-                f"fingerprint slots, got {fps.size}")
-        return cls(seed, sl, slm, scl, fps, n_keys=n_keys)
+                f"corrupt {cls.KIND} layout {dict(zip(cls.PARAMS, params))} "
+                f"for {fps.size} fingerprint slots")
+        return cls(seed, *params, fps, n_keys=n_keys)
 
 
-class BinaryFuse8(_BinaryFuseBase):
+class _XorFamily(_Filter):
+    PARAMS = ("block_length",)
+    DMA = "<QQ"
+    _build = staticmethod(B.build_xor)
+    _probe = staticmethod(B.contains_xor)
+
+    @staticmethod
+    def _span(block_length: int) -> int:
+        return 3 * block_length  # probe indices span [0, 3*block_length)
+
+    @staticmethod
+    def _distinct_kw(fp_seed: int) -> dict:
+        return {"check_distinct": False}  # zero-filled: no fp-init seed
+
+
+class Xor8(_XorFamily):
+    KIND, FP_BITS = "xor8", 8
+
+
+class Xor16(_XorFamily):
+    KIND, FP_BITS = "xor16", 16
+
+
+class Xor32(_XorFamily):
+    KIND, FP_BITS = "xor32", 32
+
+
+class _BinaryFuseFamily(_Filter):
+    PARAMS = ("segment_length", "segment_length_mask", "segment_count_length")
+    DMA = "<QIII"  # Descriptor::DMA_LEN = 20 (reference src/prelude/bfuse.rs:75)
+    _build = staticmethod(B.build_binary_fuse)
+    _probe = staticmethod(B.contains_binary_fuse)
+
+    @staticmethod
+    def _span(segment_length: int, segment_length_mask: int,
+              segment_count_length: int) -> int:
+        # probe indices span [0, scl + 2*sl) (= array_len), and the mask
+        # must cover exactly the segment
+        if segment_length < 1 or segment_length_mask != segment_length - 1:
+            return 0
+        return segment_count_length + 2 * segment_length
+
+    @staticmethod
+    def _distinct_kw(fp_seed: int) -> dict:
+        return {"fp_seed": fp_seed}  # drops duplicates itself
+
+
+class BinaryFuse8(_BinaryFuseFamily):
     KIND, FP_BITS = "bfuse8", 8
 
 
-class BinaryFuse16(_BinaryFuseBase):
+class BinaryFuse16(_BinaryFuseFamily):
     KIND, FP_BITS = "bfuse16", 16
 
 
-class BinaryFuse32(_BinaryFuseBase):
+class BinaryFuse32(_BinaryFuseFamily):
     KIND, FP_BITS = "bfuse32", 32
 
 
-class _FuseBase(_Base):
+class _FuseFamily(_Filter):
     """Deprecated family, kept for parity (reference src/fuse8.rs, marked
     deprecated in favor of BinaryFuse, src/lib.rs:104-109)."""
 
-    def __init__(self, seed: int, segment_length: int, fingerprints: np.ndarray,
-                 n_keys: int = 0, metrics: dict | None = None):
-        super().__init__(fingerprints, n_keys)
-        self.seed = seed
-        self.segment_length = segment_length
-        self.metrics = metrics or {}
+    PARAMS = ("segment_length",)
+    DMA = "<QQ"
+    _build = staticmethod(B.build_fuse)
+    _probe = staticmethod(B.contains_fuse)
 
-    @classmethod
-    def from_keys(cls, keys, **kw):
-        keys = _as_u64_array(keys)
-        r = B.build_fuse(keys, fp_bits=cls.FP_BITS, **kw)
-        return cls(r.seed, r.params["segment_length"], r.fingerprints,
-                   n_keys=r.metrics["n_keys"], metrics=r.metrics)
-
-    def contains(self, keys) -> np.ndarray:
-        return B.contains_fuse(_as_u64_array(keys), self.seed,
-                               self.segment_length, self.fingerprints)
-
-    def to_dma(self) -> tuple[bytes, bytes]:
-        desc = struct.pack("<QQ", self.seed, self.segment_length)
-        return desc, self.fingerprints.astype(_FP_DTYPES[self.FP_BITS], copy=False).tobytes()
-
-    @classmethod
-    def from_dma(cls, descriptor: bytes, fingerprints: bytes, n_keys: int = 0):
-        if len(descriptor) < 16:
-            raise ValueError(
-                f"fuse descriptor too short: {len(descriptor)} < 16 bytes")
-        seed, sl = struct.unpack("<QQ", descriptor[:16])
-        fps = np.frombuffer(fingerprints, dtype=_FP_DTYPES[cls.FP_BITS])
+    @staticmethod
+    def _span(segment_length: int) -> int:
         # probe indices span [0, (FUSE_SEGMENT_COUNT + 2) * sl)
-        need = (K.FUSE_SEGMENT_COUNT + 2) * sl
-        if sl < 1 or fps.size < need:
-            raise ValueError(
-                f"corrupt fuse DMA: segment_length={sl} needs >= {need} "
-                f"fingerprint slots, got {fps.size}")
-        return cls(seed, sl, fps, n_keys=n_keys)
+        return (K.FUSE_SEGMENT_COUNT + 2) * segment_length
+
+    @staticmethod
+    def _distinct_kw(fp_seed: int) -> dict:
+        return {"check_distinct": False, "fp_seed": fp_seed}
 
 
-class Fuse8(_FuseBase):
+class Fuse8(_FuseFamily):
     KIND, FP_BITS = "fuse8", 8
 
 
-class Fuse16(_FuseBase):
+class Fuse16(_FuseFamily):
     KIND, FP_BITS = "fuse16", 16
 
 
-class Fuse32(_FuseBase):
+class Fuse32(_FuseFamily):
     KIND, FP_BITS = "fuse32", 32
 
 
@@ -237,6 +224,16 @@ FILTER_CLASSES = {c.KIND: c for c in
                   (Xor8, Xor16, Xor32,
                    BinaryFuse8, BinaryFuse16, BinaryFuse32,
                    Fuse8, Fuse16, Fuse32)}
+
+
+def filter_class(kind: str) -> type[_Filter]:
+    """The class of filter kind ``kind`` ("xor8", …, "fuse32"); an unknown
+    kind raises ``ValueError``."""
+    try:
+        return FILTER_CLASSES[kind]
+    except KeyError:
+        raise ValueError(f"unknown filter kind {kind!r}; one of "
+                         f"{tuple(FILTER_CLASSES)}") from None
 
 
 def filter_to_json(filt) -> str:
@@ -261,7 +258,7 @@ def filter_from_json(doc: str):
     import json
 
     d = json.loads(doc)
-    cls = FILTER_CLASSES[d["kind"]]
+    cls = filter_class(d["kind"])
     return cls.from_dma(bytes.fromhex(d["descriptor"]),
                         base64.b64decode(d["fingerprints"]),
                         n_keys=d.get("n_keys", 0))
@@ -288,7 +285,7 @@ class HashProxy:
     """Arbitrary-key adapter over any u64 filter
     (reference src/hash_proxy.rs:88-138)."""
 
-    def __init__(self, inner: _Base, hash_fn=_default_hash64):
+    def __init__(self, inner: _Filter, hash_fn=_default_hash64):
         self.inner = inner
         self.hash_fn = hash_fn
 

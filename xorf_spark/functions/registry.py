@@ -127,9 +127,11 @@ def explode_shingles(df: DataFrame, arr: str, n: int, out_col: str,
     a, p = F.col(arr), F.col(_SHINGLE_POS)
     elems = [a[p + j] for j in range(n)]
     value = F.xxhash64(*elems) if sep is None else F.concat_ws(sep, *elems)
-    return (df.where(F.size(a) >= n)
-            .select("*", F.explode(F.sequence(F.lit(0), F.size(a) - n))
-                    .alias(_SHINGLE_POS))
+    # the guard sits inside the generator: exploding NULL emits no rows,
+    # and a ``where(size(a) >= n)`` above would be pushed below a
+    # projected ``a``, which Catalyst then evaluates twice (split twice)
+    starts = F.when(F.size(a) >= n, F.sequence(F.lit(0), F.size(a) - n))
+    return (df.select("*", F.explode(starts).alias(_SHINGLE_POS))
             .select("*", value.alias(out_col))
             .drop(_SHINGLE_POS))
 

@@ -240,20 +240,3 @@ def fuse_layout(size: int) -> dict:
     capacity = capacity // FUSE_SLOTS * FUSE_SLOTS
     return {"capacity": capacity, "segment_length": capacity // FUSE_SLOTS}
 
-
-def scatter_xor(out: np.ndarray, idx: np.ndarray, vals: np.ndarray) -> None:
-    """``out[idx] ^= vals`` with duplicate indices xor-folded (ufunc.at)."""
-    if idx.size == 0:
-        return
-    np.bitwise_xor.at(out, idx, vals)
-
-
-def scatter_add(out: np.ndarray, idx: np.ndarray, delta: int = 1) -> None:
-    """``out[idx] += delta`` with duplicates accumulated (bincount-based)."""
-    if idx.size == 0:
-        return
-    counts = np.bincount(idx.astype(np.int64, copy=False), minlength=out.size)
-    if delta == 1:
-        out += counts.astype(out.dtype, copy=False)
-    else:
-        out += (counts * delta).astype(out.dtype, copy=False)

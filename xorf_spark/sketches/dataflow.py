@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 
 from .kernels import KEYED_KINDS, SKETCH_KINDS, make_sketch, sketch_from_bytes
 from ..dataflow import (
+    SPILL_WRITE,
     _arrow_probe_udf,
     _key_col,
     _np_keys,
@@ -256,13 +257,7 @@ def sketch_agg_staged(df: DataFrame, col: str, kind: str, stage_dir: str,
         # NULL weight is dropped entirely (otherwise the worker would
         # read w as float64-with-NaN and diverge from sketch_agg)
         proj = proj.where(F.col("w").isNotNull())
-    (proj.write.mode("overwrite")
-     # uniform 64-bit keys are incompressible (see dataflow._stage_keys);
-     # page CRCs off for the transient spill, same trade as there
-     .option("compression", "none")
-     .option("parquet.enable.dictionary", "false")
-     .option("parquet.page.write-checksum.enabled", "false")
-     .parquet(stage_dir))
+    proj.write.mode("overwrite").options(**SPILL_WRITE).parquet(stage_dir)
 
     from pyarrow import fs as _pafs
     fsys, base = _pafs.FileSystem.from_uri(stage_dir)

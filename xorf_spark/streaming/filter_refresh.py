@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dataflow import (
+    KEY_WRITE,
     FilterTable,
     _append_shards,
     _build_from_shard_dirs,
@@ -80,6 +81,7 @@ from ..dataflow import (
     _shard_dirs,
     shard_id_col,
 )
+from ..filters import filter_class
 # shared (filesystem, base) resolver + replace-aware rename: all
 # pointer/prune I/O here runs on the DRIVER (foreachBatch callbacks
 # execute driver-side), so no worker needs filesystem credentials
@@ -130,10 +132,6 @@ def load_latest_filter_table(spark: SparkSession,
             f"no completed filter version under {table_path} "
             f"(stream not refreshed yet)")
     return FilterTable.load(spark, os.path.join(table_path, v))
-
-
-#: options of every key-log write: uniform 64-bit keys are incompressible
-_LOG_WRITE = {"compression": "none", "parquet.enable.dictionary": "false"}
 
 
 def compact_key_log(spark: SparkSession, table_path: str) -> int:
@@ -190,7 +188,7 @@ def compact_key_log(spark: SparkSession, table_path: str) -> int:
     # hash-partitioned by shard, the distinct needs no second shuffle and
     # each task writes one file per shard it holds
     (logged.repartition(len(dirs), "shard_id").distinct()
-     .write.mode("append").options(**_LOG_WRITE)
+     .write.mode("append").options(**KEY_WRITE)
      .partitionBy("shard_id").parquet(keys_path))
     for p in old:
         fsys.delete_file(p)
@@ -222,6 +220,7 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
     a NEWER deployment with a changed key derivation fails loudly
     instead of mixing key definitions within one version dir.
     """
+    filter_class(kind)  # an unknown kind raises before the stream starts
     keys_path = os.path.join(table_path, "keys")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -229,7 +228,7 @@ def stream_filter_refresh(stream_df: DataFrame, table_path: str,
         (batch_df.select(_key_col(batch_df, key_col).alias("key"))
          .where(F.col("key").isNotNull())
          .withColumn("shard_id", shard_id_col("key", n_shards))
-         .write.mode("append").options(**_LOG_WRITE)
+         .write.mode("append").options(**KEY_WRITE)
          .partitionBy("shard_id").parquet(keys_path))
         if batch_id % refresh_every != refresh_every - 1:
             return
