@@ -37,7 +37,8 @@ def _per_shard(shard_df: DataFrame, stats, schema: str,
             out = []
             for sid, kind, raw in zip(*(batch.column(c).to_pylist() for c in
                                         ("shard_id", "kind", "fingerprints"))):
-                fps = np.frombuffer(raw, dtype=_FP_DTYPES[filter_class(kind).FP_BITS])
+                fps = np.frombuffer(
+                    raw, dtype=_FP_DTYPES[filter_class(kind).FP_BITS])
                 row = stats(sid, kind, fps)
                 if row is not None:
                     out.append(row)

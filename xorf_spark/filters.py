@@ -159,7 +159,7 @@ class Xor32(_XorFamily):
 
 class _BinaryFuseFamily(_Filter):
     PARAMS = ("segment_length", "segment_length_mask", "segment_count_length")
-    DMA = "<QIII"  # Descriptor::DMA_LEN = 20 (reference src/prelude/bfuse.rs:75)
+    DMA = "<QIII"  # DMA_LEN = 20 (reference src/prelude/bfuse.rs:75)
     _build = staticmethod(B.build_binary_fuse)
     _probe = staticmethod(B.contains_binary_fuse)
 
